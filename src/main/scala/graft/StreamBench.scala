@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 import graft.operators.PipelineQueries
 import graft.pipeline._
@@ -26,29 +28,28 @@ object StreamBench {
   /** One published streaming row. `medianCleanSec`/`rowsPerSecClean`
     * are medians over the trials NOT flagged by the spike detector (the
     * headline numbers); `trialsSec` carries every wall actually used
-    * (spiked trials already replaced by their re-runs); `spikedJson`
+    * (spiked trials already replaced by their re-runs); `spiked`
     * records each detected eruption — original wall, its commit_ms, and
     * the replacement wall — so the artifact adjudicates itself
-    * (VERDICT r10 #1). `wallRerunJson` records evidence-CLEAN wall
+    * (VERDICT r10 #1). `wallRerun` records evidence-CLEAN wall
     * eruptions (≥3× row min, commit + calibration both quiet) that were
     * mechanically re-run once under a distinct key — kept separate from
-    * `spikedJson` so the evidence discipline stays auditable — and
+    * `spiked` so the evidence discipline stays auditable — and
     * `wallOutliers` counts trials still >2× the row min in the final
     * vector with no exclusion marker (the class VERDICT r12 #1 found
     * invisible to both mechanisms). */
   final case class RowOut(name: String, medianCleanSec: Double,
       trialsSec: Seq[Double], rowsPerSecClean: Double,
       trialsRps: Seq[Double],
-      latency: (Long, Long), provider: String, stateJson: String,
-      spikedJson: String, wallRerunJson: String, wallOutliers: Int)
+      latency: (Long, Long), provider: String, state: JArray,
+      spiked: JArray, wallRerun: JArray, wallOutliers: Int)
 
-  /** `extra` = additional top-level artifact keys (name -> rendered JSON
-    * value) a row rig wants published alongside its RowOut — e.g. the
-    * recovery row's per-trial kill/restart/verify detail. Bench splices
-    * them into bench_out.json verbatim. */
+  /** `extra` = additional top-level artifact keys a row rig wants
+    * published alongside its RowOut — e.g. the recovery row's per-trial
+    * kill/restart/verify detail. Bench adds them to bench_out.json. */
   final case class Out(rows: Seq[RowOut], failed: Seq[String],
       roundCal: Seq[(Int, Double)],
-      extra: Seq[(String, String)] = Nil)
+      extra: Seq[(String, JValue)] = Nil)
 
   /** Standalone entry for iterating on streaming throughput without
     * paying for the batch bench. */
@@ -58,17 +59,19 @@ object StreamBench {
     val out = run(spark, sfDir)
     out.rows.foreach { r =>
       val spread = r.trialsSec.map(t => f"$t%.2f").mkString("/")
-      val spiked = if (r.spikedJson == "[]") "" else s"  spiked=${r.spikedJson}"
-      val wallRr = if (r.wallRerunJson == "[]") "" else s"  wall_rerun=${r.wallRerunJson}"
+      val spiked = if (r.spiked.arr.isEmpty) "" else s"  spiked=${js(r.spiked)}"
+      val wallRr = if (r.wallRerun.arr.isEmpty) "" else s"  wall_rerun=${js(r.wallRerun)}"
       val outl = if (r.wallOutliers == 0) "" else s"  wall_outliers=${r.wallOutliers}"
-      println(f"[stream] ${r.name}%-22s ${r.medianCleanSec}%7.2f s  (trials $spread)  ${r.rowsPerSecClean.round}%9d rows/s  batch p50/max ${r.latency._1}%5d/${r.latency._2}%5d ms  [${r.provider}] state=${r.stateJson}$spiked$wallRr$outl")
+      println(f"[stream] ${r.name}%-22s ${r.medianCleanSec}%7.2f s  (trials $spread)  ${r.rowsPerSecClean.round}%9d rows/s  batch p50/max ${r.latency._1}%5d/${r.latency._2}%5d ms  [${r.provider}] state=${js(r.state)}$spiked$wallRr$outl")
     }
     out.failed.foreach(n => println(s"[stream] $n FAILED (see stderr)"))
-    out.extra.foreach { case (k, v) => println(s"[stream] $k=$v") }
+    out.extra.foreach { case (k, v) => println(s"[stream] $k=${js(v)}") }
     println("[stream] round calibration: " +
       out.roundCal.map { case (r, s) => f"r$r=$s%.2f s" }.mkString(" "))
     spark.stop()
   }
+
+  private def js(v: JValue): String = compact(render(v))
 
   private implicit val long3Enc: Encoder[(Long, Long, Long)] =
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
@@ -228,29 +231,9 @@ object StreamBench {
     */
   def run(spark: SparkSession, sfDir: String,
       onlyOverride: Option[Set[String]] = None,
-      repeatsOverride: Option[Int] = None,
-      wireTriggerOverride: Option[Long] = None,
-      wireRepsOverride: Option[Int] = None,
-      stageRootOverride: Option[String] = None): Out = {
+      repeatsOverride: Option[Int] = None): Out = {
     implicit val ss: SparkSession = spark
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    // Replay-input staging device (VERDICT r17 next #2): the default
-    // keeps the staged source parquet / docs / ann index+probe dirs on
-    // java.io.tmpdir — the series-comparable shape every published row
-    // was measured at. `stageRootOverride` points them at a caller-chosen
-    // root (Bench's staged-replay side reading passes Staging.root —
-    // tmpfs here, executor-local NVMe on a cluster) so the micro-batch
-    // file reads inside the timed windows stop paying shared-virtio
-    // latency. Dirs are registered in stagedDirs either way and deleted
-    // on exit — nothing survives a run.
-    def newStagedDir(prefix: String): String = stageRootOverride match {
-      case Some(root) =>
-        val d = new java.io.File(root,
-          prefix + "-" + java.lang.Long.toHexString(System.nanoTime()))
-        require(d.mkdirs(), s"could not create staged dir $d")
-        d.getAbsolutePath
-      case None => Files.createTempDirectory(prefix).toString
-    }
     // GRAFT_STREAM_ONLY="stream_neardup,stream_ann" runs a subset (and
     // skips the staging the unselected rows would have needed) — the
     // iterate-on-one-pipeline loop, mirroring GRAFT_BENCH_ONLY.
@@ -295,7 +278,7 @@ object StreamBench {
     val evStaged: Option[(String, Double)] =
       if (!eventRowNames.exists(wanted)) None
       else try {
-        val staged = newStagedDir("graft_stream_src")
+        val staged = Files.createTempDirectory("graft_stream_src").toString
         stagedDirs += staged
         val ev = Tables.events(spark, sfDir)
           .select(col("user_id"), expr("cast(round(value * 100) as bigint)").as("cents"),
@@ -488,7 +471,7 @@ object StreamBench {
     val docsStagedOpt: Option[(String, Double)] =
       if (!wanted("stream_neardup")) None
       else try {
-        val dir = newStagedDir("graft_stream_docs")
+        val dir = Files.createTempDirectory("graft_stream_docs").toString
         stagedDirs += dir
         val docReps = 200L
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
@@ -542,9 +525,9 @@ object StreamBench {
     val annStagedOpt: Option[(String, String, Double)] =
       if (!wanted("stream_ann")) None
       else try {
-        val idxDir = newStagedDir("graft_stream_annidx")
+        val idxDir = Files.createTempDirectory("graft_stream_annidx").toString
         stagedDirs += idxDir
-        val probeDir = newStagedDir("graft_stream_annprobe")
+        val probeDir = Files.createTempDirectory("graft_stream_annprobe").toString
         stagedDirs += probeDir
         // wire contract: the bit-packed AnnWire format on BOTH legs
         // (VERDICT r8 #5) — one code word per index row, 66 packed longs
@@ -755,8 +738,8 @@ object StreamBench {
         }
       }
 
-    val recoveryLog = scala.collection.mutable.ArrayBuffer.empty[String]
-    val rescaleLog = scala.collection.mutable.ArrayBuffer.empty[String]
+    val recoveryLog = scala.collection.mutable.ArrayBuffer.empty[JValue]
+    val rescaleLog = scala.collection.mutable.ArrayBuffer.empty[JValue]
     def recoveryTrial(): (Double, Double, (Long, Long), (Long, Long, Long)) = {
       val root = Files.createTempDirectory("graft_recovery").toString
       try {
@@ -834,7 +817,7 @@ object StreamBench {
         val seed = sys.env.getOrElse("GRAFT_RECOVERY_SEED", "14").toLong +
           recoveryLog.size
         val rng = new scala.util.Random(seed)
-        val killLog = scala.collection.mutable.ArrayBuffer.empty[String]
+        val killLog = scala.collection.mutable.ArrayBuffer.empty[JValue]
         val nStagedFiles = new java.io.File(staged).listFiles()
           .count(_.getName.endsWith(".parquet"))
         val totalBatches = math.ceil(nStagedFiles / 8.0).toLong
@@ -864,9 +847,9 @@ object StreamBench {
               s"${recoveryLog.size + 1} kill $k: target=$targetBatches " +
               s"committed=${ps.size} cumulative=$preKillBatches/" +
               s"$totalBatches exhausted=$exhausted")
-            killLog += s"""{"kill":$k,"target_batches":$targetBatches,""" +
-              s""""sleep_ms":$sleepMs,"batches_this_attempt":${ps.size},""" +
-              s""""exhausted":$exhausted}"""
+            killLog += JObject("kill" -> JInt(k), "target_batches" -> JInt(targetBatches),
+              "sleep_ms" -> JInt(sleepMs), "batches_this_attempt" -> JInt(ps.size),
+              "exhausted" -> JBool(exhausted))
           } finally (try victim.stop() catch { case _: Throwable => })
           teardown() // cold restart: provider caches evicted, writeback flushed
         }
@@ -976,13 +959,13 @@ object StreamBench {
             diffs.take(3).map(k => s"$k rec=${stRec.get(k)} base=${stBase.get(k)}")
               .mkString(" | "))
         }
-        recoveryLog += s"""{"trial":${recoveryLog.size + 1},"seed":$seed,""" +
-          s""""n_kills":${killLog.size},"kills":${killLog.mkString("[", ",", "]")},""" +
-          s""""pre_kill_batches":$preKillBatches,"pre_kill_rows":$preKillRows,""" +
-          s""""time_to_first_output_sec":$firstSec,"catchup_sec":$catchupSec,""" +
-          s""""baseline_wall_sec":$baselineSec,"rows_out_recovered":$nRec,""" +
-          s""""rows_out_baseline":$nBase,"hash_equal":$hashEqual,""" +
-          s""""state_keys":${stRec.size},"state_hash_equal":$stateEqual}"""
+        recoveryLog += JObject("trial" -> JInt(recoveryLog.size + 1), "seed" -> JInt(seed),
+          "n_kills" -> JInt(killLog.size), "kills" -> JArray(killLog.toList),
+          "pre_kill_batches" -> JInt(preKillBatches), "pre_kill_rows" -> JInt(preKillRows),
+          "time_to_first_output_sec" -> JDouble(firstSec), "catchup_sec" -> JDouble(catchupSec),
+          "baseline_wall_sec" -> JDouble(baselineSec), "rows_out_recovered" -> JInt(nRec),
+          "rows_out_baseline" -> JInt(nBase), "hash_equal" -> JBool(hashEqual),
+          "state_keys" -> JInt(stRec.size), "state_hash_equal" -> JBool(stateEqual))
         require(hashEqual, s"stream_recovery: recovered output diverged from " +
           s"the uninterrupted run (rows $nRec vs $nBase, delivery hash $hRec " +
           s"vs $hBase) — exactly-once delivery violated across " +
@@ -1032,11 +1015,11 @@ object StreamBench {
           val (nRsF, hRsF) = fullHashOf(rsOut)
           val (nBaseF, hBaseF) = fullHashOf(baseOut)
           val fullEqual = nRsF == nBaseF && hRsF.compareTo(hBaseF) == 0
-          rescaleLog += s"""{"from_partitions":$from,"to_partitions":$to,""" +
-            s""""rebuild_wall_sec":$rebuildSec,"baseline_wall_sec":$baselineSec,""" +
-            s""""rows_out":$nRs,""" +
-            s""""hash_equal_baseline":${nRs == nBase && hRs.compareTo(hBase) == 0},""" +
-            s""""full_hash_equal_baseline":$fullEqual}"""
+          rescaleLog += JObject("from_partitions" -> JInt(from), "to_partitions" -> JInt(to),
+            "rebuild_wall_sec" -> JDouble(rebuildSec), "baseline_wall_sec" -> JDouble(baselineSec),
+            "rows_out" -> JInt(nRs),
+            "hash_equal_baseline" -> JBool(nRs == nBase && hRs.compareTo(hBase) == 0),
+            "full_hash_equal_baseline" -> JBool(fullEqual))
           require(fullEqual, s"stream_rescale: rebuilt output at $to partitions " +
             s"diverged from the $from-partition baseline on the FULL row " +
             s"(rows $nRsF vs $nBaseF) — a partitioning-sensitive state bug")
@@ -1138,8 +1121,7 @@ object StreamBench {
     val wireFramesOpt: Option[Array[(Array[Array[Byte]], Long)]] =
       if (!wanted("stream_market_spread_wire")) None
       else try {
-        val reps = wireRepsOverride.getOrElse(
-          sys.env.getOrElse("GRAFT_STREAM_WIRE_REPS", "20").toInt)
+        val reps = sys.env.getOrElse("GRAFT_STREAM_WIRE_REPS", "20").toInt
         val rows = Tables.events(spark, sfDir)
           .select(col("user_id"), expr("cast(round(value * 100) as bigint)").as("cents"),
             col("ts_ns"))
@@ -1237,12 +1219,7 @@ object StreamBench {
         // commit IO and tripped this box's stall windows nearly every
         // trial — rejected. 1 M batches also keep the row comparable
         // to the whole r13-r15 series the band/bar were pinned on.
-        // programmatic override: Bench's deployment-shape side reading
-        // (VERDICT r16 next #1) re-enters at the documented 2 M-row
-        // deployment trigger with the volume that keeps the sustained
-        // estimator out of its ~2-steady-batch bimodal regime
-        val perTrigger = wireTriggerOverride.getOrElse(
-          sys.env.getOrElse("GRAFT_STREAM_WIRE_TRIGGER", "131072").toLong)
+        val perTrigger = sys.env.getOrElse("GRAFT_STREAM_WIRE_TRIGGER", "131072").toLong
         val legs = sq.zipWithIndex.map { case (srv, i) =>
           Graft.source(s"bench-msw-quotes-$i",
             FramedSocketSource("127.0.0.1", srv.getLocalPort, SpreadWireDecoder(0L),
@@ -1643,13 +1620,13 @@ object StreamBench {
       // the calibration clause (replacements ran outside the calibrated
       // rounds); a trial whose re-run failed keeps its original flag.
       // Exclusion is CONFINED to trials that went through the spike
-      // pipeline (flagged, re-run, published in spikedJson): the
+      // pipeline (flagged, re-run, published in `spiked`): the
       // re-evaluation's row minimum may now be a fast replacement wall,
       // and letting that re-baseline flag ORIGINAL trials would drop
       // walls from median_clean that were never re-run and appear
       // nowhere in the artifact — silent cherry-picking, the exact
       // failure this pass exists to prevent. Every excluded index is
-      // therefore visible in spikedJson by construction.
+      // therefore visible in `spiked` by construction.
       val piped = spikedLog.getOrElse(name, Vector.empty).map(_._1).toSet
       val rerunFailed = spikedLog.getOrElse(name, Vector.empty)
         .collect { case (i, _, _, None) => i }.toSet
@@ -1658,20 +1635,21 @@ object StreamBench {
       val used = if (cleanIdx.nonEmpty) cleanIdx.map(ts(_)) else ts
       // State metrics stay per-trial (not medianed): the point is reading
       // a contended run's trials individually (VERDICT r4 #6).
-      val stateJson = ts.map { case (_, _, _, (rows, mem, commitMs)) =>
-        s"""{"state_rows":$rows,"state_memory_bytes":$mem,"commit_ms":$commitMs}"""
-      }.mkString("[", ",", "]")
-      val spikedJson = spikedLog.getOrElse(name, Vector.empty).map {
-        case (i, w, c, repl) =>
-          s"""{"trial":${i + 1},"wall_sec":$w,"commit_ms":$c,""" +
-            s""""replacement_wall_sec":${repl.map(_.toString).getOrElse("null")}}"""
-      }.mkString("[", ",", "]")
-      val wallRerunJson = wallRerunLog.getOrElse(name, Vector.empty).map {
+      val state = JArray(ts.map { case (_, _, _, (rows, mem, commitMs)) =>
+        JObject("state_rows" -> JInt(rows), "state_memory_bytes" -> JInt(mem),
+          "commit_ms" -> JInt(commitMs))
+      }.toList)
+      def rerun(i: Int, w: Double, c: Long, repl: Option[Double]): List[JField] =
+        List("trial" -> JInt(i + 1), "wall_sec" -> JDouble(w), "commit_ms" -> JInt(c),
+          "replacement_wall_sec" -> repl.map(JDouble(_)).getOrElse(JNull))
+      val spiked = JArray(spikedLog.getOrElse(name, Vector.empty).map {
+        case (i, w, c, repl) => JObject(rerun(i, w, c, repl))
+      }.toList)
+      val wallRerun = JArray(wallRerunLog.getOrElse(name, Vector.empty).map {
         case (i, w, c, repl, drill) =>
-          s"""{"trial":${i + 1},"wall_sec":$w,"commit_ms":$c,""" +
-            s""""replacement_wall_sec":${repl.map(_.toString).getOrElse("null")}""" +
-            (if (drill) ""","forced":true""" else "") + "}"
-      }.mkString("[", ",", "]")
+          JObject(rerun(i, w, c, repl) ++
+            (if (drill) List[JField]("forced" -> JBool(true)) else Nil))
+      }.toList)
       // Trials still >2× the row min in the FINAL vector with no
       // exclusion marker — the spike pass's designed blind spot above
       // its own threshold. Counted here (where the flag sets live) and
@@ -1680,13 +1658,13 @@ object StreamBench {
       RowOut(name, medianD(used.map(_._1)), ts.map(_._1),
         medianD(used.map(_._2)), ts.map(_._2),
         (medianL(used.map(_._3._1)), medianL(used.map(_._3._2))),
-        provider, stateJson, spikedJson, wallRerunJson, wallOutliers)
+        provider, state, spiked, wallRerun, wallOutliers)
     }
     val extra =
       (if (recoveryLog.isEmpty) Nil
-       else Seq("stream_recovery_detail" -> recoveryLog.mkString("[", ",", "]"))) ++
+       else Seq("stream_recovery_detail" -> JArray(recoveryLog.toList))) ++
       (if (rescaleLog.isEmpty) Nil
-       else Seq("stream_rescale_detail" -> rescaleLog.mkString("[", ",", "]")))
+       else Seq("stream_rescale_detail" -> JArray(rescaleLog.toList)))
     Out(results, failed.toList.distinct, roundCal.toSeq, extra)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)

@@ -1,5 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -28,21 +32,14 @@ object Verify {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleSqlJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** `oracle_sql.json`: query name -> DuckDB SQL. json4s escapes quotes,
+    * backslashes and every control char, so a tab or CR in the SQL can
+    * never break the driver's json.load. */
+  private[graft] def oracleSqlJson(sql: Map[String, String]): String =
+    compact(render(JObject(sql.toList.map { case (k, v) => JField(k, JString(v)) })))
 }

@@ -575,13 +575,6 @@ object Similarity {
     sAnnIvfTrainedWith(s, dir, ivfCellsFor(n), ivfProbesFor(n), nCorpus = n)
   }
 
-  /** Pinned-C probe hook (CellsProbe): the same search with an explicit
-    * cell count — prices the ladder against the frozen 128-cell grid. */
-  private[graft] def sAnnIvfProbeAt(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val n = corpusCount(s, dir)
-    sAnnIvfTrainedWith(s, dir, k, ivfProbesFor(n), nCorpus = n)
-  }
-
   /** `s_ann_ivf_dist` (VERDICT r10 #2): [[sAnnIvfProbe]]'s laddered
     * search over centroids from the DISTRIBUTED trainer — the registered
     * form of the escape hatch that lifts the C-ladder's 16·C driver-
@@ -1111,8 +1104,6 @@ object Similarity {
     * residual chain re-derives sample assignment, residuals, per-subspace
     * Lloyd ([[pqIterSql]]), corpus codes and the per-cell query tables —
     * both trainings in one SQL, candidates restricted to probed cells. */
-  /** Explicit-C training — the probe hook CellsProbe uses to price the
-    * C ladder against the pinned grid on replicated corpora. */
   private[graft] def coarseArrAt(s: SparkSession, dir: String,
       nCorpus: Long, k: Int): Array[Array[Double]] =
     trainIvf(s, dir, k = k, nCorpus = nCorpus,
@@ -1218,20 +1209,6 @@ object Similarity {
       .withColumn("adist", expr(s"(qrr + $pqAdistExpr)"))
   }
 
-  /** Probe hook (CellsProbe): the SERVING-phase search — ADC probe +
-    * bounded re-rank over a PREBUILT index with pre-trained artifacts and
-    * an explicit query set. This is the cost a deployment pays per query
-    * forever, after the one-time train/build the registered entries fold
-    * into their walls. `queries` must carry (query_id, qd, qn, vn). */
-  private[graft] def ivfPqServe(s: SparkSession, index: DataFrame,
-      books: Array[Array[Array[Double]]], coarse: Array[Array[Double]],
-      queries: DataFrame, probeCount: Int, cand: Int): DataFrame = {
-    val candDf = arankCandidates(
-      adcScoredOn(s, queries, index, books, coarse, probeCount), cand)
-    rankTail(candDf.join(broadcast(queries.select("query_id", "qd", "qn")), "query_id")
-      .withColumn("cosine", expr(s"${dot("qd", "vd")} / (qn * nrm)")))
-  }
-
   /** Test hook: raw per-cell ADC scores (query_id, cent_id, neighbor_id,
     * adist) — StreamAnnDifferentialSpec pins the streaming cell-probe's
     * lookup arithmetic bit-exactly against this batch form (probe ladder
@@ -1262,15 +1239,6 @@ object Similarity {
   def sAnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val n = corpusCount(s, dir)
     val coarse = coarseArr(s, dir, n)
-    val books = trainPqResidual(s, dir, coarse, n)
-    ivfPqSearchWith(s, dir, buildIvfPqIndexWith(s, dir, books, coarse), books,
-      coarse, ivfProbesFor(n), pqCandFor(n))
-  }
-
-  /** Pinned-C probe hook (CellsProbe) — [[sAnnIvfPq]] at an explicit C. */
-  private[graft] def sAnnIvfPqAt(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val n = corpusCount(s, dir)
-    val coarse = coarseArrAt(s, dir, n, k)
     val books = trainPqResidual(s, dir, coarse, n)
     ivfPqSearchWith(s, dir, buildIvfPqIndexWith(s, dir, books, coarse), books,
       coarse, ivfProbesFor(n), pqCandFor(n))
@@ -1331,13 +1299,6 @@ object Similarity {
     if (kids != null) kids.foreach(deleteDirTree)
     f.delete()
     ()
-  }
-
-  /** Pinned-C probe hook (CellsProbe) — the index lifecycle at an
-    * explicit C. */
-  private[graft] def pAnnSearchAt(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val n = corpusCount(s, dir)
-    pAnnSearchWith(s, dir, n, coarseArrAt(s, dir, n, k))
   }
 
   private def pAnnSearchWith(s: SparkSession, dir: String, n: Long,
