@@ -51,6 +51,13 @@ object StreamBench {
       roundCal: Seq[(Int, Double)],
       extra: Seq[(String, JValue)] = Nil)
 
+  /** Every published stream row, in registration (and artifact) order. */
+  val RowNames: Seq[String] = Seq("stream_stateless", "stream_statecomp",
+    "stream_market_spread", "stream_sliding", "stream_countwin",
+    "stream_ephemeral", "stream_two_stage", "stream_topk", "stream_session",
+    "stream_market_spread_wire", "stream_neardup", "stream_ann",
+    "stream_session_rocksdb", "stream_market_spread_rocksdb", "stream_recovery")
+
   /** Standalone entry for iterating on streaming throughput without
     * paying for the batch bench. */
   def main(args: Array[String]): Unit = {
@@ -243,15 +250,13 @@ object StreamBench {
     val streamOnly = onlyOverride.orElse(sys.env.get("GRAFT_STREAM_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet))
     def wanted(name: String): Boolean = streamOnly.forall(_.contains(name))
-    // Stream-side shuffle sizing: ~1.5k keys of a few KB each. The
-    // default is the MEASURED deployment rule as code —
-    // Graft.statePartitionsFor (track key volume, not cores; SCALING.md
-    // r13 ladder) — which reproduces the hand-ladder's 16 at this key
-    // volume on a 32-core box. GRAFT_STREAM_SHUFFLE overrides for A/B
-    // tuning runs (SCALING.md records the ladder).
+    // Stream-side shuffle sizing: ~1.5k keys of a few KB each, sized by
+    // the MEASURED deployment rule as code — Graft.statePartitionsFor
+    // (track key volume, not cores; SCALING.md r13 ladder) — which
+    // reproduces the hand-ladder's 16 at this key volume on a 32-core box.
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-      streamShufflePartitions(spark).toString)
+      Graft.statePartitionsFor(BenchKeyVolume, spark.sparkContext.defaultParallelism).toString)
     // Staged multi-GB /tmp dirs, registered AT CREATION so the finally
     // below reclaims them on ANY exit — an uncaught throw mid-setup
     // (e.g. a malformed env var) is swallowed by Bench.run's outer catch
@@ -268,13 +273,8 @@ object StreamBench {
     // JIT cost, and the per-batch fixed costs (offset/commit-log fsyncs,
     // state-store commit latency) amortize the way a throughput-tuned
     // deployment would size its triggers.
-    val eventRowNames =
-      Seq("stream_stateless", "stream_statecomp", "stream_market_spread",
-        "stream_sliding", "stream_countwin", "stream_ephemeral",
-        "stream_two_stage", "stream_topk", "stream_session",
-        "stream_statecomp_tws", "stream_sliding_tws",
-        "stream_session_rocksdb", "stream_market_spread_rocksdb",
-        "stream_recovery")
+    val eventRowNames = RowNames.filterNot(
+      Set("stream_market_spread_wire", "stream_neardup", "stream_ann"))
     val evStaged: Option[(String, Double)] =
       if (!eventRowNames.exists(wanted)) None
       else try {
@@ -329,22 +329,6 @@ object StreamBench {
       (r: Row) => (r.getLong(0), r.getLong(1), r.getLong(2)),
       (r: Row) => r.getLong(2),
       maxFilesPerTrigger = 32)
-
-    // STREAM_BENCH_PROVIDER=rocksdb benches the disk-spilling provider a
-    // large deployment runs (changelog checkpointing keeps the per-batch
-    // commit an append, not a full SST upload).
-    // STREAM_BENCH_HOST=tws benches the transformWithState host
-    // (WrapperProcessor, real per-key timers) — implies RocksDB (a Spark
-    // restriction on that API); the identical provider confs keep the
-    // PROVIDER=rocksdb and HOST=tws rows comparable.
-    val twsHost = sys.env.get("STREAM_BENCH_HOST").contains("tws")
-    if (twsHost) spark.conf.set("graft.streaming.stateHost", "transformWithState")
-    if (twsHost || sys.env.get("STREAM_BENCH_PROVIDER").contains("rocksdb")) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    }
 
     // Sustained rate = input rows / micro-batch execution time, summed
     // over the query's progress events — excludes the fixed query
@@ -1046,14 +1030,16 @@ object StreamBench {
     val repeats = repeatsOverride
       .getOrElse(sys.env.getOrElse("GRAFT_STREAM_REPEATS", "3").toInt).max(1)
     // Row registry: (name, provider label, per-trial session confs, trial
-    // thunk). Confs are set/restored around EACH trial (tws rows
-    // interleave with default-host rows).
+    // thunk). Confs are set/restored around EACH trial (_rocksdb rows
+    // interleave with default-provider rows).
     type Trial = (Double, Double, (Long, Long), (Long, Long, Long))
     val rowDefs = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, Seq[(String, String)], () => Trial)]
     def register(name: String, provider: String,
-        confs: Seq[(String, String)] = Nil)(runTrial: () => Trial): Unit =
+        confs: Seq[(String, String)] = Nil)(runTrial: () => Trial): Unit = {
+      require(RowNames.contains(name), s"$name is missing from StreamBench.RowNames")
       if (wanted(name)) rowDefs += ((name, provider, confs, runTrial))
+    }
 
     def statecomp(src: SourceConfig[(Long, Long, Long)]) =
       Graft.source("bench-statecomp", src)
@@ -1099,8 +1085,8 @@ object StreamBench {
     // minus the wire). The frame log is pre-encoded driver-side — the
     // external-producer role; giles/sender likewise holds its whole
     // file in memory — and each leg's server writes it to the one
-    // connection the DSv2 socket source opens. Frames are ×[wire reps]
-    // of the events table (default 20: ~2 M frames/leg at sf0.1, 4 M
+    // connection the DSv2 socket source opens. Frames are ×20 copies
+    // of the events table (~2 M frames/leg at sf0.1, 4 M
     // merged rows — enough for steady-state batches without holding
     // hundreds of MB of frames).
     // One socket is one ordered stream decoded by ONE task — the
@@ -1110,7 +1096,7 @@ object StreamBench {
     // interleave across sockets is the same disorder the 16-file
     // parquet replay has, absorbed by the per-key within-batch
     // event-time sort), merged into the one keyed flow.
-    val WireShards = sys.env.getOrElse("GRAFT_STREAM_WIRE_SHARDS", "4").toInt
+    val WireShards = 4
     // Each shard is staged as PRE-FRAMED ~4 MB slabs plus its frame
     // count. The reference's giles sender blasts a pre-encoded file from
     // its own machine; a per-frame writeInt/write sender (the first form
@@ -1121,7 +1107,7 @@ object StreamBench {
     val wireFramesOpt: Option[Array[(Array[Array[Byte]], Long)]] =
       if (!wanted("stream_market_spread_wire")) None
       else try {
-        val reps = sys.env.getOrElse("GRAFT_STREAM_WIRE_REPS", "20").toInt
+        val reps = 20
         val rows = Tables.events(spark, sfDir)
           .select(col("user_id"), expr("cast(round(value * 100) as bigint)").as("cents"),
             col("ts_ns"))
@@ -1219,7 +1205,7 @@ object StreamBench {
         // commit IO and tripped this box's stall windows nearly every
         // trial — rejected. 1 M batches also keep the row comparable
         // to the whole r13-r15 series the band/bar were pinned on.
-        val perTrigger = sys.env.getOrElse("GRAFT_STREAM_WIRE_TRIGGER", "131072").toLong
+        val perTrigger = 131072L
         val legs = sq.zipWithIndex.map { case (srv, i) =>
           Graft.source(s"bench-msw-quotes-$i",
             FramedSocketSource("127.0.0.1", srv.getLocalPort, SpreadWireDecoder(0L),
@@ -1229,16 +1215,10 @@ object StreamBench {
             FramedSocketSource("127.0.0.1", srv.getLocalPort, SpreadWireDecoder(1L),
               maxFramesPerTrigger = perTrigger))
         }
-        val merged = legs.reduce(_ merge _)
-        // diagnostic toggle (not a published row): STREAM_WIRE_STATELESS=1
-        // drops the keyed stage so the scan/decode half prices alone
-        val handle = (if (sys.env.contains("STREAM_WIRE_STATELESS"))
-            merged.filter(_._4 >= 0)
-          else merged
-            .keyBy(_._3.toString)
-            .to(graft.operators.PipelineQueries.MarketCheck)(spreadOutEnc)) match {
-            case p: Pipeline[t] => p.toSink(EmptySink[t]())
-          }
+        val handle = legs.reduce(_ merge _)
+          .keyBy(_._3.toString)
+          .to(graft.operators.PipelineQueries.MarketCheck)(spreadOutEnc)
+          .toSink(EmptySink())
         handleOpt = Some(handle)
         // this trial's query id — events from any other query (including
         // a stopped prior trial's stragglers) never count toward it
@@ -1326,16 +1306,9 @@ object StreamBench {
           Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
 
     // Provider label per row (ADVICE r3): host+provider, so the published
-    // JSON can't be misread as a host-only comparison when the base rows
-    // run HDFS-backed and the _tws rows run RocksDB.
-    val baseStore =
-      if (twsHost || sys.env.get("STREAM_BENCH_PROVIDER").contains("rocksdb")) "rocksdb"
-      else "hdfs"
-    val baseProvider = (if (twsHost) "tws" else "fmgws") + "+" + baseStore
-    // the session rows ride Spark's native session_window aggregation,
-    // not a graft keyed host — label the host half accordingly so the
-    // artifact can't be read as an fmgws comparison
-    val sessionProvider = "native+" + baseStore
+    // JSON shows which rows price the store. The session rows ride Spark's
+    // native session_window aggregation, not the graft keyed host.
+    val baseProvider = "fmgws+hdfs"
 
     // An events/documents staging failure skips that table's pipelines —
     // each is recorded individually in `failed` so the JSON shows exactly
@@ -1356,14 +1329,8 @@ object StreamBench {
       register("stream_ephemeral", baseProvider)(() => trial("stream_ephemeral")(ephemeral))
       register("stream_two_stage", baseProvider)(() => twoStageTrial())
       register("stream_topk", baseProvider)(() => topkTrial())
-      register("stream_session", sessionProvider)(() => sessionTrial())
-    } else failed ++= eventRowNames.filter(n =>
-      wanted(n) && !n.endsWith("_tws") &&
-        // a provider-pinned run never registers the _rocksdb duplicates
-        // (the base rows already run RocksDB) — marking them failed here
-        // would claim rows missing that a SUCCESSFUL pinned run would
-        // not have produced either
-        !(baseStore == "rocksdb" && n.endsWith("_rocksdb")))
+      register("stream_session", "native+hdfs")(() => sessionTrial())
+    } else failed ++= eventRowNames.filter(wanted)
     // the wire row stages its own frame log (no dependence on evStaged)
     wireFramesOpt match {
       case Some(frames) =>
@@ -1379,70 +1346,35 @@ object StreamBench {
       register("stream_ann", baseProvider)(() => annTrial())
     else if (wanted("stream_ann")) failed += "stream_ann"
 
-    // The same stateful pipelines on the transformWithState host —
-    // reported side by side so the per-round JSON carries both hosts'
-    // sustained rates. The _tws rows are tws+RocksDB (a Spark restriction
-    // on that API); the base rows use whatever provider the run is
-    // configured with (HDFS-backed by default), so in a default run the
-    // pair differs in host AND provider — the per-row provider label in
-    // the JSON makes that visible; set STREAM_BENCH_PROVIDER=rocksdb for
-    // a host-only comparison. Skipped when STREAM_BENCH_HOST already
-    // pinned the whole run to tws. Confs apply per-trial (interleaved
-    // with the default-host rows).
-    val twsConfs = Seq(
-      "graft.streaming.stateHost" -> "transformWithState",
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    if (!twsHost) {
-      if (evStaged.isDefined) {
-        register("stream_statecomp_tws", "tws+rocksdb", twsConfs)(() =>
-          trial("stream_statecomp_tws")(statecomp))
-        register("stream_sliding_tws", "tws+rocksdb", twsConfs)(() =>
-          trial("stream_sliding_tws")(sliding))
-      } else failed ++=
-        eventRowNames.filter(n => wanted(n) && n.endsWith("_tws"))
-    }
-
     // RocksDB variants of the two DEEPEST-state rows (VERDICT r10 #4):
-    // the 100 TB deployment story lives on RocksDB, but only the two
-    // _tws rows exercised it — and those change host AND provider at
-    // once. These rows differ from their base rows ONLY in the store
+    // the 100 TB deployment story lives on RocksDB (changelog
+    // checkpointing keeps the per-batch commit an append, not a full SST
+    // upload). These rows differ from their base rows ONLY in the store
     // provider (same host — native session_window aggregation for
     // session, the fmgws keyed host for market_spread — same topology,
     // same replay), so base vs _rocksdb prices the provider at equal
     // topology: stream_session carries the widest live-key state in the
     // pack (one session window per user) and stream_market_spread the
-    // full keyed reject topology. Skipped when the whole run is already
-    // pinned to RocksDB (they would duplicate the base rows).
+    // full keyed reject topology. The crash/recover row runs the same
+    // provider per trial (the deployment recovery path). A staging
+    // failure is already marked by the eventRowNames fallback.
     val rocksConfs = Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    if (!twsHost && !sys.env.get("STREAM_BENCH_PROVIDER").contains("rocksdb")) {
-      if (evStaged.isDefined) {
-        register("stream_session_rocksdb", "native+rocksdb", rocksConfs)(() =>
-          sessionTrial())
-        register("stream_market_spread_rocksdb", "fmgws+rocksdb", rocksConfs)(() =>
-          trial("stream_market_spread_rocksdb")(_ => marketSpread()))
-      } else failed ++=
-        eventRowNames.filter(n => wanted(n) && n.endsWith("_rocksdb"))
+    if (evStaged.isDefined) {
+      register("stream_session_rocksdb", "native+rocksdb", rocksConfs)(() =>
+        sessionTrial())
+      register("stream_market_spread_rocksdb", "fmgws+rocksdb", rocksConfs)(() =>
+        trial("stream_market_spread_rocksdb")(_ => marketSpread()))
+      register("stream_recovery", "fmgws+rocksdb", rocksConfs)(() => recoveryTrial())
     }
-
-    // The crash/recover row always pins its own provider (RocksDB +
-    // changelog — the deployment recovery path) and host (fmgws) per
-    // trial, so it registers regardless of how the run is pinned; a
-    // staging failure is already marked by the eventRowNames fallback.
-    if (evStaged.isDefined)
-      register("stream_recovery", "fmgws+rocksdb",
-        rocksConfs :+ ("graft.streaming.stateHost" -> "flatMapGroups"))(
-        () => recoveryTrial())
 
     // Untimed streaming warmup (the stream-pack analogue of Bench's
     // batch warmup): pay the one-time streaming-engine costs — offset/
     // commit-log and state-store class init, Janino codegen for the
     // keyed-state host, RocksDB JNI load + column-family setup for the
-    // tws rows — BEFORE any timed trial. Without it the first trial of
+    // _rocksdb rows — BEFORE any timed trial. Without it the first trial of
     // whichever row runs first absorbs seconds of fixed cost a
     // long-running deployment never sees (r9's first interleaved run
     // showed 15.2 s vs 3.4 s trials on identical code). The warmup
@@ -1771,25 +1703,8 @@ object StreamBench {
 
   /** ~distinct user_ids in the events table at bench SF — replication
     * perturbs timestamps, not the key space, so the staged replay keeps
-    * this key volume. The input to the partition rule below. */
+    * this key volume. The input to the stream pack's shuffle sizing. */
   private[graft] val BenchKeyVolume = 1500L
-
-  /** One shared home for the stream packs' shuffle sizing: the
-    * GRAFT_STREAM_SHUFFLE override, validated AT THE OVERRIDE SITE
-    * (ADVICE r13 — a non-numeric value previously failed later with an
-    * opaque Spark conf error), defaulting to the measured partition rule
-    * [[Graft.statePartitionsFor]] at the bench's key volume (16 on a
-    * 32-core box — the r13 hand-ladder's answer, now derived). */
-  private[graft] def streamShufflePartitions(spark: SparkSession): Int =
-    sys.env.get("GRAFT_STREAM_SHUFFLE") match {
-      case Some(s) =>
-        val n = scala.util.Try(s.trim.toInt).getOrElse(throw new IllegalArgumentException(
-          s"GRAFT_STREAM_SHUFFLE must be a positive integer, got '$s'"))
-        require(n > 0, s"GRAFT_STREAM_SHUFFLE must be positive, got $n")
-        n
-      case None =>
-        Graft.statePartitionsFor(BenchKeyVolume, spark.sparkContext.defaultParallelism)
-    }
 
   /** Blocking filesystem sync (best-effort): waits for outstanding dirty
     * pages to reach disk so writeback never lands inside a timed trial.

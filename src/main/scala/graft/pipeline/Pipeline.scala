@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, TimeMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** The pipeline DSL — `source → to → key_by → to(windows/state) → merge →
   * to_sink` (lib/wallaroo/application.pony:40-263), re-expressed over
@@ -440,27 +440,13 @@ final class Pipeline[T] private[pipeline] (
       .as[(String, T, Long, java.sql.Timestamp)](rowEnc)
       .groupByKey(_._1)(Encoders.STRING)
 
-    // Host selection: flatMapGroupsWithState (default — any state store
-    // provider) or transformWithState (Spark 4 StatefulProcessor with
-    // first-class per-key timers; requires RocksDB — see [[WrapperProcessor]]).
-    // Unknown values fail fast: a typo silently benchmarked as the wrong
-    // host is worse than an error.
-    spark.conf.getOption("graft.streaming.stateHost").getOrElse("flatMapGroups") match {
-      case "transformWithState" | "tws" =>
-        grouped.transformWithState(new WrapperProcessor[T, U](init, armTimer),
-          TimeMode.EventTime(), OutputMode.Append)(tup[U])
-      case "flatMapGroups" | "fmgws" =>
-        grouped.flatMapGroupsWithState[KeyState[T, U], (U, Long)](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-          statefulGroupFunc[(String, T, Long, java.sql.Timestamp), U](init, armTimer, _._2, _._3))(
-          stateEnc, tup[U])
-      case other => throw new IllegalArgumentException(
-        s"graft.streaming.stateHost='$other': use 'flatMapGroups'/'fmgws' (default) " +
-          "or 'transformWithState'/'tws'")
-    }
+    grouped.flatMapGroupsWithState[KeyState[T, U], (U, Long)](
+      OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+      statefulGroupFunc[(String, T, Long, java.sql.Timestamp), U](init, armTimer, _._2, _._3))(
+      stateEnc, tup[U])
   }
 
-  /** flatMapGroupsWithState adapter over the shared [[StatefulReplay]]
+  /** flatMapGroupsWithState adapter over the [[StatefulReplay]]
     * core: route timeout firings vs input replay, map the retain verdict
     * onto GroupState update/remove, re-arm the timeout (the reference's
     * per-step timer, runner.pony:465-501). Removal cadence vs batch

@@ -1,16 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-
-/** The per-key replay core shared by BOTH streaming hosts
-  * (`flatMapGroupsWithState` in [[Pipeline]] and [[WrapperProcessor]]):
-  * sort the micro-batch's rows for a key in event-time order, feed the
-  * state machine with the watermark riding max(query watermark, max event
-  * ts processed so far), handle mid-batch state removal/recreation.
+/** The per-key replay core of the streaming host
+  * (`flatMapGroupsWithState` in [[Pipeline]]): sort the micro-batch's rows
+  * for a key in event-time order, feed the state machine with the
+  * watermark riding max(query watermark, max event ts processed so far),
+  * handle mid-batch state removal/recreation.
   *
-  * Rows stay in their host's native row type `R` (accessor functions
-  * extract payload/ts) so neither host allocates per-row wrappers on the
+  * Rows stay in the host's native row type `R` (accessor functions
+  * extract payload/ts) so the host allocates no per-row wrappers on the
   * hot path.
   */
 private[pipeline] object StatefulReplay {
@@ -66,89 +63,5 @@ private[pipeline] object StatefulReplay {
     val (os, ow, retain) = ks.wrapper.onTimeout(wmNs, ks.outputWm)
     ks.outputWm = math.max(ks.outputWm, ow)
     (os, if (retain) Some(ks) else None)
-  }
-}
-
-/** Streaming host #2: Spark 4's `transformWithState` (SPARK-46815) — the
-  * same unit-tested [[StateWrapper]] machines on a [[StatefulProcessor]]
-  * with FIRST-CLASS per-key event-time timers, selected per session via
-  * `spark.conf.set("graft.streaming.stateHost", "transformWithState")`
-  * (alias `"tws"`; the default host accepts `"flatMapGroups"`/`"fmgws"`).
-  *
-  * Why two hosts: `flatMapGroupsWithState` models the reference's
-  * per-step timer (runner.pony:465-501) as a GroupStateTimeout — it fires
-  * only for keys that saw no traffic in the batch, and each key carries at
-  * most one implicit timeout timestamp. TWS timers are real state-store
-  * entries (register/delete/list), the exact shape of the reference's
-  * timer facility, and the API the Spark project is evolving (multiple
-  * typed state variables, TTL, initial state). This host keeps exactly one
-  * pending timer per key at watermark+1 — delete-then-register on every
-  * re-arm — so the trigger cadence matches host #1 batch-for-batch
-  * (TransformWithStateSpec pins output equality between the hosts).
-  *
-  * Scale notes: requires the RocksDB state store provider (a Spark
-  * restriction on this API — and the provider a 100 TB deployment runs
-  * anyway); state round-trips through the same Kryo codec as host #1, so
-  * per-batch state costs are identical; timer entries add one (key, ts)
-  * row per live key per batch to the timer column family, which RocksDB
-  * absorbs in the same commit.
-  */
-private[pipeline] final class WrapperProcessor[T, U](
-    init: StateInitializer[T, U], armTimer: Boolean)
-    extends StatefulProcessor[String, (String, T, Long, java.sql.Timestamp), (U, Long)] {
-
-  @transient private var st: ValueState[KeyState[T, U]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState("wrapper",
-      Encoders.kryo(classOf[KeyState[T, U]]), TTLConfig.NONE)
-
-  private def wmNs(tv: TimerValues): Long = {
-    val ms = tv.getCurrentWatermarkInMs
-    if (ms <= 0) 0L else ms * 1000000L
-  }
-
-  /** Exactly one pending timer per key: delete whatever is registered,
-    * re-register at watermark+1 (host #1's setTimeoutTimestamp contract). */
-  private def rearm(tv: TimerValues): Unit = {
-    clearTimers()
-    getHandle.registerTimer(math.max(tv.getCurrentWatermarkInMs, 0L) + 1L)
-  }
-
-  /** Materialize the timer list BEFORE deleting: mutating the timer
-    * column family while iterating it relies on unspecified iterator
-    * snapshot semantics — safe today only because the invariant is a
-    * single timer, and this shouldn't break if that's ever relaxed or
-    * the provider's iterator changes (ADVICE r3). */
-  private def clearTimers(): Unit = {
-    val h = getHandle
-    val pending = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val it = h.listTimers()
-    while (it.hasNext) pending += it.next().asInstanceOf[Long]
-    pending.foreach(h.deleteTimer)
-  }
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, T, Long, java.sql.Timestamp)],
-      tv: TimerValues): Iterator[(U, Long)] = {
-    val (outs, next) = StatefulReplay.replayInput[(String, T, Long, java.sql.Timestamp), T, U](
-      init, key, rows, wmNs(tv),
-      if (st.exists()) Some(st.get()) else None, _._2, _._3)
-    next match {
-      case Some(ks) => st.update(ks); if (armTimer) rearm(tv)
-      case None     => st.clear(); clearTimers()
-    }
-    outs.iterator
-  }
-
-  override def handleExpiredTimer(key: String, tv: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[(U, Long)] = {
-    if (!st.exists()) return Iterator.empty
-    val (outs, next) = StatefulReplay.fireTimeout(st.get(), wmNs(tv))
-    next match {
-      case Some(ks) => st.update(ks); if (armTimer) rearm(tv)
-      case None     => st.clear()
-    }
-    outs.iterator
   }
 }

@@ -19,9 +19,8 @@ import org.apache.spark.sql.classic
   * namespace bridge (the [[ColumnBridge]] pattern; Delta Lake does the
   * same for its conf-scoped commands).
   *
-  * The clone copies the FULL session state at call time (runtime confs —
-  * including `graft.streaming.stateHost` — temp views, registered
-  * functions) and shares the SparkContext and external catalog, so the
+  * The clone copies the FULL session state at call time (runtime confs,
+  * temp views, registered functions) and shares the SparkContext and external catalog, so the
   * re-analyzed plan resolves identically; only the overridden keys
   * differ, and only on the clone.
   */

@@ -129,39 +129,65 @@ class PipelineStreamingSpec extends AnyFunSuite {
   private def slidingWindows = Graft.rangeWindows(seconds(10))
     .withSlide(seconds(2)).over(SumEv)
 
-  test("sliding windows: streaming output equals batch replay") {
+  /** k falls silent in the third chunk while j's traffic advances the
+    * watermark: k's open windows must be re-triggered by its per-key
+    * timer, not wait for k's next event. */
+  private val silentKeyChunks: Seq[Seq[Ev]] = Seq(
+    Seq(Ev("k", 2, seconds(92)), Ev("k", 3, seconds(94)), Ev("j", 7, seconds(95))),
+    Seq(Ev("k", 1, seconds(102)), Ev("j", 2, seconds(104))),
+    Seq(Ev("j", 5, seconds(115)), Ev("j", 6, seconds(118))),
+    Seq(Ev("k", 0, seconds(500)), Ev("j", 0, seconds(500))))
+
+  private def collectWindows(view: String): Set[(Long, Long)] = {
+    import spark.implicits._
+    spark.sql(s"SELECT _1, _2 FROM $view WHERE _2 < ${seconds(490)}")
+      .as[(Long, Long)].collect().toSet
+  }
+
+  /** Streams `chunks` through the sliding windows, one micro-batch per
+    * chunk so the watermark advances across micro-batches, and returns the
+    * sink rows after each chunk (flush-sentinel windows excluded). */
+  private def slidingStream(name: String, chunks: Seq[Seq[Ev]]): Seq[Set[(Long, Long)]] = {
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val evs = MemoryStream[Ev]
+    val handle = Graft.source(name, DatasetSource(evs.toDS(), (e: Ev) => e.ts))
+      .keyBy(_.k)
+      .to(slidingWindows)
+      .toSink(MemorySink(s"${name}_out"))
+    try chunks.map { chunk =>
+      evs.addData(chunk); handle.processAllAvailable(); collectWindows(s"${name}_out")
+    }
+    finally handle.stop()
+  }
 
-    // Batch replay
+  test("sliding windows: streaming output equals batch replay") {
+    import spark.implicits._
     Graft.source("slide-batch", DatasetSource(
         spark.createDataset(evChunks.flatten), (e: Ev) => e.ts))
       .keyBy(_.k)
       .to(slidingWindows)
       .toSink(MemorySink("slide_batch_out"))
-
-    // Streaming, chunked so the watermark advances across micro-batches
-    val evs = MemoryStream[Ev]
-    val handle = Graft.source("slide-stream", DatasetSource(evs.toDS(), (e: Ev) => e.ts))
-      .keyBy(_.k)
-      .to(slidingWindows)
-      .toSink(MemorySink("slide_stream_out"))
-    evChunks.foreach { chunk => evs.addData(chunk); handle.processAllAvailable() }
-    handle.stop()
-
-    def collect(view: String): Set[(Long, Long)] = spark
-      .sql(s"SELECT _1, _2 FROM $view WHERE _2 < ${seconds(490)}")
-      .as[(Long, Long)].collect().toSet
-
-    val batch = collect("slide_batch_out")
-    val stream = collect("slide_stream_out")
+    val batch = collectWindows("slide_batch_out")
     assert(batch.nonEmpty)
-    assert(batch == stream)
+    assert(batch == slidingStream("slide_stream", evChunks).last)
     // Spot-check: the pane grid anchors at the first event's watermark
     // (92 s) like the reference, so [92,102) holds 2+3+4+5 and [102,112)
     // holds everything from 102 to 111.
     assert(batch.contains((14L, seconds(102) - 1)))
     assert(batch.contains((110L, seconds(112) - 1)))
+
+    // A silent key: k's grid ends on even seconds, j's on odd ones.
+    def w(sum: Long, endSec: Long) = (sum, seconds(endSec) - 1)
+    val silent = slidingStream("slide_silent", silentKeyChunks)
+    val kTimerFired = Set(w(1, 106), w(1, 108), w(1, 110), w(1, 112), w(0, 114))
+    assert((kTimerFired & silent(1)).isEmpty)
+    assert(kTimerFired.subsetOf(silent(2)),
+      s"k's windows were not re-triggered while k was silent: ${silent(2)}")
+    assert(silent.last == kTimerFired ++ Set(
+      w(5, 102), w(4, 104), w(0, 120), w(0, 122), w(0, 124), w(0, 126), w(0, 128),
+      w(9, 105), w(2, 107), w(2, 109), w(2, 111), w(2, 113), w(5, 117),
+      w(11, 119), w(11, 121), w(11, 123), w(11, 125), w(6, 127)))
   }
 
   test("count windows: trigger every N per key across micro-batches") {
@@ -182,5 +208,26 @@ class PipelineStreamingSpec extends AnyFunSuite {
       .collect().toSeq.sorted
     // a: (1+2), (10+20); b: (5+7) — count-2 windows, accumulator resets.
     assert(out == Seq(("a", 3L), ("a", 30L), ("b", 12L)))
+
+    // A partial window is flushed by its key's timer at the first
+    // watermark advance (the no-data micro-batch after its chunk), not held
+    // until the key's next events: every window here but k's first is partial.
+    val timed = MemoryStream[Ev]
+    val timedHandle = Graft
+      .source("cw-timer", DatasetSource(timed.toDS(), (e: Ev) => e.ts))
+      .keyBy(_.k)
+      .to(Graft.countWindows(3).over(SumEv))
+      .toSink(MemorySink("cw_timer_out"))
+    val sums =
+      try Seq(
+        Seq(Ev("k", 1, seconds(10)), Ev("k", 2, seconds(11)), Ev("k", 3, seconds(12)),
+          Ev("k", 4, seconds(13))),
+        Seq(Ev("j", 10, seconds(30))),
+        Seq(Ev("j", 20, seconds(40)))).map { chunk =>
+        timed.addData(chunk); timedHandle.processAllAvailable()
+        spark.sql("SELECT _1 FROM cw_timer_out").as[Long].collect().toSeq.sorted
+      }
+      finally timedHandle.stop()
+    assert(sums == Seq(Seq(4L, 6L), Seq(4L, 6L, 10L), Seq(4L, 6L, 10L, 20L)))
   }
 }
