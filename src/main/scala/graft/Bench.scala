@@ -40,37 +40,11 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     }
     // Each query runs GRAFT_BENCH_REPEATS times (default 3); the headline
-    // `queries` map carries the per-query MEDIAN so a single contended run
-    // can't masquerade as a regression (or a speedup), and `queries_detail`
-    // carries median/min/max/all runs so round-over-round deltas are
-    // adjudicatable (VERDICT r3 #1: a one-shot bench can't distinguish a
-    // real 3x regression from a neighbor process).
+    // `queries` map carries the per-query MEDIAN over every trial run, so a
+    // single contended run can't masquerade as a regression (or a
+    // speedup), and `queries_detail` carries median/min/max/all runs so
+    // round-over-round deltas read against the row's own spread.
     val repeats = sys.env.getOrElse("GRAFT_BENCH_REPEATS", "3").toInt.max(1)
-    // Calibration: a fixed CPU+shuffle workload, timed like a query. The
-    // host is shared — identical full runs 40 min apart differed 3x in
-    // round 4 — so the artifact publishes how fast the host was while
-    // the queries ran, and the spike handling below brackets on it.
-    def calProbeOnce(): Double = {
-      import org.apache.spark.sql.functions.{avg, expr, max, sum}
-      val t0 = System.nanoTime()
-      spark.range(1L << 26).selectExpr("id % 1024 as k", "id as v")
-        .groupBy("k").agg(sum("v"), avg("v"), max(expr("xxhash64(v)")))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // One probe shot is too noisy to read: same-host shots 70 min apart
-    // read 0.42 vs 0.92 s (JIT/GC state). Each calibration point is
-    // therefore the MEDIAN of three shots, after one untimed warmup shot
-    // at startup (the probe's own codegen cost).
-    def calProbe(): Double = StreamBench.medianD((1 to 3).map(_ => calProbeOnce()))
-    calProbeOnce()
-    val calibration = calProbe()
-    // The probe re-runs every CalEvery queries (VERDICT r6 #4: a host that
-    // degrades MID-run is invisible to a startup-only sample).
-    // calibration_series records (query-index, sec) for each probe; a
-    // query's bracketing probes feed its spike evidence below.
-    val CalEvery = 10
-    val calSeries = scala.collection.mutable.ArrayBuffer[(Int, Double)]((0, calibration))
 
     // GRAFT_BENCH_ONLY="d_cluster,d_ngram_jaccard" benches a subset (and
     // skips the streaming pack) — the iterate-on-one-operator loop.
@@ -79,49 +53,6 @@ object Bench {
     var failed = List.empty[String]
     val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Per-trial eruption evidence for the wall-bound rows (VERDICT r11
-    // #1): all five drive REAL internal streaming queries (MemoryStream
-    // hosts, socket rigs), so the same stall signature the stream pack
-    // flags on — state-store commit_ms / trigger duration blowing up
-    // while siblings stay flat — is observable here through the session's
-    // streaming listener bus. The listener accumulates commit_ms summed
-    // over state operators plus triggerExecution ms across every progress
-    // event; counters reset before each wall-bound trial and are
-    // snapshotted after a short settle (delivery is async — poll until
-    // the event counter stops moving, bounded at 2 s, all outside the
-    // timed window).
-    val evCommit = new java.util.concurrent.atomic.AtomicLong(0L)
-    val evDur = new java.util.concurrent.atomic.AtomicLong(0L)
-    val evSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val p = e.progress
-        evCommit.addAndGet(p.stateOperators.map(_.commitTimeMs).sum)
-        evDur.addAndGet(
-          Option(p.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L))
-        evSeq.incrementAndGet()
-        ()
-      }
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    })
-    def settleEvidence(): Long = {
-      var last = -1L
-      var stable = 0
-      val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val cur = evSeq.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(50)
-      }
-      // commit_ms is the sharper stall signature when the row has stateful
-      // operators (the late-data hosts); the stateless rigs (gen source,
-      // wire round-trips) fall back to total trigger duration — per row
-      // the choice is structural, so sibling medians never mix units.
-      val c = evCommit.get()
-      if (c > 0) c else evDur.get()
-    }
     def teardown(): Unit = {
       // drop any caches the query persisted so the next timing is clean
       // (outside the timed window — teardown isn't the query's cost).
@@ -138,13 +69,10 @@ object Bench {
       // Drain dirty-page writeback the same way the stream pack does:
       // staging-heavy entries (p_ann_search writes a partitioned index;
       // the roundtrip rigs write checkpoints) leave flush debt the
-      // kernel otherwise repays inside a LATER query's timed window —
-      // the same channel behind the stream rows' commit_ms eruptions.
+      // kernel otherwise repays inside a LATER query's timed window.
       StreamBench.syncFs()
     }
-    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long, Boolean) = {
-      val wantEv = WallBound(name)
-      if (wantEv) { evCommit.set(0L); evDur.set(0L); evSeq.set(0L) }
+    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -154,101 +82,16 @@ object Bench {
           false
         }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      val ev = if (wantEv && ok) settleEvidence() else 0L
       teardown()
-      (elapsed, ev, ok)
+      (elapsed, ok)
     }
-    // Drill hook: GRAFT_BENCH_FORCE_SPIKE="<name>:<trialIdx>" inflates
-    // that one wall-bound trial's recorded (wall, evidence) 10× so the
-    // whole flag → teardown → re-run → batch_spiked_trials pipeline can
-    // be exercised end-to-end on demand (the stream pack's pipeline was
-    // validated by real storms; this gives the batch pass the same
-    // proof without waiting for one). A drilled artifact can never
-    // masquerade as a real run: the JSON carries "drill":true.
-    val forceSpike = sys.env.get("GRAFT_BENCH_FORCE_SPIKE").flatMap { s =>
-      s.split(":") match {
-        case Array(n, i) => scala.util.Try((n, i.toInt)).toOption
-        case _           => None
-      }
-    }
-    val results = queryList.zipWithIndex.map { case ((name, fn), qi) =>
-      if (qi > 0 && qi % CalEvery == 0) calSeries += ((qi, calProbe()))
-      val runs = (1 to repeats).iterator.map(_ => runOnce(name, fn))
-        .takeWhile(_._3).map(t => (t._1, t._2)).toVector match {
+    val batchRows = queryList.map { case (name, fn) =>
+      val walls = (1 to repeats).iterator.map(_ => runOnce(name, fn))
+        .takeWhile(_._2).map(_._1).toVector match {
         case v if v.nonEmpty => v
-        case _               => Vector((0.0, 0L)) // failed on first run
+        case _               => Vector(0.0) // failed on first run
       }
-      val injected = forceSpike match {
-        case Some((n, i)) if n == name && i >= 0 && i < runs.length =>
-          System.err.println(s"[bench] DRILL: inflating $name trial ${i + 1}")
-          runs.updated(i, (runs(i)._1 * 10, runs(i)._2 * 10))
-        case _ => runs
-      }
-      name -> injected
-    }
-    // closing probe: the tail queries get a neighbor on their right too
-    calSeries += ((queryList.size, calProbe()))
-    // Mechanical spike adjudication for the wall-bound rows (VERDICT r11
-    // #1): same discipline as the stream pack, same predicate
-    // (StreamBench.spikeFlagsWith — wall > 2× row min AND commit/duration
-    // evidence > 2× not-already-flagged sibling median, OR a calibration
-    // eruption), with the calibration clause adapted to the batch shape:
-    // the probes bracket a query's whole trial block, so "either
-    // bracketing probe rose >1.5× the series median" applies uniformly to
-    // the block's trials. Flagged trials re-run ONCE after a teardown;
-    // originals are published under batch_spiked_trials; headline medians
-    // exclude flagged trials (clean medians).
-    val collected = scala.collection.mutable.Map(results: _*)
-    val batchSpikedLog =
-      scala.collection.mutable.Map.empty[String, Vector[(Int, Double, Long, Option[Double])]]
-    val qIndex = queryList.map(_._1).zipWithIndex.toMap
-    def bracketSpiked(name: String): Boolean = {
-      val qi = qIndex(name)
-      val calMed = StreamBench.medianD(calSeries.map(_._2).toSeq)
-      val before = calSeries.filter(_._1 <= qi).maxBy(_._1)._2
-      val after = calSeries.filter(_._1 > qi)
-        .minByOption(_._1).map(_._2).getOrElse(before)
-      before > 1.5 * calMed || after > 1.5 * calMed
-    }
-    WallBound.toSeq.sorted.foreach { name =>
-      collected.get(name).filterNot(_ => failed.contains(name)).foreach { ts =>
-        val calHot = bracketSpiked(name)
-        val flags = StreamBench.spikeFlagsWith(ts, _ => calHot)
-        flags.toSeq.sorted.foreach { i =>
-          val orig = ts(i)
-          System.err.println(s"[bench] $name trial ${i + 1} spiked " +
-            s"(wall ${orig._1}s, evidence_ms ${orig._2}); re-running once")
-          val fn = queryList.find(_._1 == name).get._2
-          // a failed RE-RUN keeps the original trial (it stays excluded
-          // from the clean median via rerunFailed) — it must not mark the
-          // row itself failed, its measured trials all passed
-          val failedBefore = failed
-          val repl = runOnce(name, fn) match {
-            case (w, e, true) => Some((w, e))
-            case _            => failed = failedBefore; None
-          }
-          repl.foreach(t => collected(name) = collected(name).updated(i, t))
-          batchSpikedLog(name) = batchSpikedLog.getOrElse(name, Vector.empty) :+
-            ((i, orig._1, orig._2, repl.map(_._1)))
-        }
-      }
-    }
-    // Final flags per wall-bound row: re-evaluate on the post-replacement
-    // vector WITHOUT the calibration clause; exclusion is CONFINED to
-    // trials that went through the spike pipeline (flagged, re-run,
-    // published) plus failed re-runs — the same no-silent-cherry-picking
-    // contract as the stream pack (StreamBench.run).
-    val batchRows = queryList.map { case (name, _) =>
-      val ts = collected(name)
-      val excluded =
-        if (!WallBound(name)) Set.empty[Int]
-        else {
-          val log = batchSpikedLog.getOrElse(name, Vector.empty)
-          val piped = log.map(_._1).toSet
-          val rerunFailed = log.collect { case (i, _, _, None) => i }.toSet
-          (StreamBench.spikeFlagsWith(ts, _ => false) & piped) ++ rerunFailed
-        }
-      BatchRow(name, ts, excluded)
+      BatchRow(name, walls)
     }
     val medians = batchRows.map(r => r.name -> r.median)
     // The streaming pack runs AFTER every batch timing is in hand, so it
@@ -257,21 +100,21 @@ object Bench {
     // still escapes (round-5 verdict: one table's analysis error here
     // zeroed the entire artifact). Either way the JSON below gets written.
     val streamOut =
-      if (only.isDefined) StreamBench.Out(Nil, Nil, Nil)
+      if (only.isDefined) StreamBench.Out(Nil, Nil)
       else try StreamBench.run(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] StreamBench.run failed: $e")
-        StreamBench.Out(Nil, Seq("stream_bench"), Nil)
+        StreamBench.Out(Nil, Seq("stream_bench"))
       }
     failed = streamOut.failed.toList.reverse ::: failed
     // ---- Standalone wire reading (VERDICT r13 #2): the in-pack wire row
     // is socket-pacing-sensitive (r13: driver 893 K vs builder 1.157 M
     // rows/s on identical code), and an isolated wire-only run is the
     // code-level reading. One re-entry into the stream rig AFTER the
-    // pack — same staging, per-trial teardown and spike machinery —
-    // published under its own key with the ≥900 K bar verdict. 5 trials,
-    // not the pack's 3 (VERDICT r14 #6): a 3-trial median flips on a
-    // single host eruption; a 5-trial median survives two.
+    // pack — same staging and per-trial teardown — published under its
+    // own key with the ≥900 K bar verdict. 5 trials, not the pack's 3
+    // (VERDICT r14 #6): a 3-trial median flips on a single slow trial; a
+    // 5-trial median survives two.
     val wireStandalone: Option[StreamBench.Out] =
       if (only.isDefined ||
           !streamOut.rows.exists(_.name == WireRow)) None
@@ -285,10 +128,9 @@ object Bench {
         System.err.println(s"[bench] standalone wire run failed: $e")
         None
       }
-    val drill = forceSpike.isDefined || sys.env.contains("GRAFT_STREAM_FORCE_WALL")
     val streamRepeats = sys.env.getOrElse("GRAFT_STREAM_REPEATS", "3").toInt.max(1)
-    val artifact = benchOutJson(batchRows, batchSpikedLog.toSeq, calSeries.toSeq,
-      repeats, streamOut, streamRepeats, wireStandalone, failed, sfDir, only, drill)
+    val artifact = benchOutJson(batchRows, repeats, streamOut, streamRepeats,
+      wireStandalone, failed, sfDir, only)
     // The round-4 driver capture truncated the stdout tail and destroyed
     // the artifact (VERDICT r4 #1) — the full JSON goes to a file so log
     // interleaving / tail-truncation can never lose it. A
@@ -308,27 +150,18 @@ object Bench {
     // FULL artifact (queries_detail, per-trial arrays, state blobs:
     // ~32 KB) stays in bench_out.json. sbt's logger prefix is kept off
     // the line by build.sbt's outputStrategy := StdoutOutput.
-    val streamSecs = streamOut.rows.map(r => r.name -> r.medianCleanSec)
+    val streamSecs = streamOut.rows.map(r => r.name -> r.medianSec)
     val (total, totalCpuBound, totalWallBound) = splitTotals(medians)
     println(compactBenchJson(total, totalCpuBound, totalWallBound,
-      medians ++ streamSecs, streamOut.rows.map(r => r.name -> r.rowsPerSecClean),
+      medians ++ streamSecs, streamOut.rows.map(r => r.name -> r.rowsPerSec),
       failed, sfDir, spark.sparkContext.defaultParallelism, only))
     spark.stop()
   }
 
-  /** One batch row as measured: trials are (wall sec, evidence ms) after
-    * any spike re-run replaced its original; `excluded` indexes the
-    * trials left out of the headline (clean) median. */
-  private[graft] final case class BatchRow(name: String,
-      trials: Vector[(Double, Long)], excluded: Set[Int]) {
-    def walls: Vector[Double] = trials.map(_._1)
-    /** Walls the headline uses: the clean trials, or all of them when
-      * every trial is flagged. */
-    def used: Seq[Double] = {
-      val clean = trials.indices.filterNot(excluded).map(walls)
-      if (clean.nonEmpty) clean else walls
-    }
-    def median: Double = StreamBench.medianD(used)
+  /** One batch row as measured: the wall seconds of every trial it ran;
+    * the headline is their plain median. */
+  private[graft] final case class BatchRow(name: String, walls: Vector[Double]) {
+    def median: Double = StreamBench.medianD(walls)
   }
 
   /** CPU-bound vs wall-bound split (VERDICT r7 #6 / r8 #1): a handful of
@@ -367,111 +200,33 @@ object Bench {
   /** The full `bench_out.json` artifact, pure so BenchJsonSpec can parse
     * it back. Every string goes through json4s, so names, paths and
     * failure messages are escaped by construction. */
-  private[graft] def benchOutJson(batch: Seq[BatchRow],
-      batchSpiked: Seq[(String, Vector[(Int, Double, Long, Option[Double])])],
-      calSeries: Seq[(Int, Double)], repeats: Int,
+  private[graft] def benchOutJson(batch: Seq[BatchRow], repeats: Int,
       stream: StreamBench.Out, streamRepeats: Int,
       wireStandalone: Option[StreamBench.Out], failed: Seq[String],
-      sf: String, subset: Option[Set[String]], drill: Boolean): JObject = {
+      sf: String, subset: Option[Set[String]]): JObject = {
     val medians = batch.map(r => r.name -> r.median)
     val (total, totalCpuBound, totalWallBound) = splitTotals(medians)
     val streamRows = stream.rows
-    // Per-round host-health flag (VERDICT r11 #2): the spike detector's
-    // designed blind spot is unflagged-but-elevated trials below the 2×
-    // wall threshold — a storm window can inflate a row's clean median
-    // ~50% with no machine-readable marker ON the row. This summary makes
-    // that state legible to round-over-round comparison scripts:
-    // cal_max_ratio = worst stream-round calibration sample over the
-    // series median (a whole-host contention window reads >1.5);
-    // elevated_unflagged_trials counts surviving trials in (1.5×, 2×] of
-    // their row's min (the exact class the predicate cannot flag);
-    // wall_outliers_unflagged (VERDICT r12 #1) counts surviving trials
-    // ABOVE 2× that carry no exclusion marker.
-    // `storm` requires EVIDENCE (VERDICT r13 #1): an eruption that was
-    // mechanically flagged+replaced (batch or stream pass), a surviving
-    // >2× wall outlier with no exclusion marker, or a whole-host
-    // calibration window. `turbulent` = no such evidence, only (1.5×, 2×]
-    // elevated trials — the jitter band the spike predicate cannot (and
-    // should not) flag.
-    val streamCalVals = stream.roundCal.map(_._2)
-    val streamCalMed = if (streamCalVals.isEmpty) 0.0 else StreamBench.medianD(streamCalVals)
-    val calMaxRatio = if (streamCalMed > 0) streamCalVals.max / streamCalMed else 0.0
-    val elevatedRows = streamRows.flatMap { r =>
-      val ts = r.trialsSec
-      if (ts.isEmpty) None
-      else {
-        val mn = ts.min
-        val n = ts.count(w => w > 1.5 * mn && w <= 2 * mn)
-        if (n > 0) Some(r.name -> n) else None
-      }
-    }
-    val elevatedCount = elevatedRows.map(_._2).sum
-    val wallOutlierRows = streamRows
-      .filter(_.wallOutliers > 0).map(r => r.name -> r.wallOutliers)
-    val wallOutlierCount = wallOutlierRows.map(_._2).sum
-    val streamSpikedRows = streamRows.count(_.spiked.arr.nonEmpty)
-    val batchSpikedRows = batchSpiked.size
-    val stormFlag = streamSpikedRows + batchSpikedRows >= 1 ||
-      wallOutlierCount >= 1 || calMaxRatio > 1.5
-    val turbulentFlag = !stormFlag && elevatedCount >= 1
-    val health = JObject(
-      "cal_median_sec" -> JDouble(streamCalMed),
-      "cal_max_ratio" -> JDouble(calMaxRatio),
-      "elevated_unflagged_trials" -> JInt(elevatedCount),
-      "elevated_rows" -> obj(elevatedRows.sortBy(_._1))(JInt(_)),
-      "wall_outliers_unflagged" -> JInt(wallOutlierCount),
-      "wall_outlier_rows" -> obj(wallOutlierRows.sortBy(_._1))(JInt(_)),
-      "spiked_rows_stream" -> JInt(streamSpikedRows),
-      "spiked_rows_batch" -> JInt(batchSpikedRows),
-      "storm" -> JBool(stormFlag),
-      "turbulent" -> JBool(turbulentFlag))
-    // Detail rows quote the POST-replacement trial vector (like the
-    // stream pack's trials_sec); originals for any replaced trial live in
-    // batch_spiked_trials. Wall-bound rows additionally publish their
-    // per-trial evidence_ms so the spike decision is reproducible from
-    // the artifact alone.
     val detail = obj(batch.map(r => r.name -> r)) { r =>
-      val used = r.used
       JObject(List[JField](
-        "median" -> JDouble(r.median), "min" -> JDouble(used.min),
-        "max" -> JDouble(used.max), "runs" -> dbl(r.walls)) ++
-        (if (WallBound(r.name))
-          List[JField]("evidence_ms" -> JArray(r.trials.map(t => JInt(t._2)).toList))
-         else Nil) ++
+        "median" -> JDouble(r.median), "min" -> JDouble(r.walls.min),
+        "max" -> JDouble(r.walls.max), "runs" -> dbl(r.walls)) ++
         (if (PinnedTwins(r.name)) List[JField]("pinned_twin" -> JBool(true)) else Nil))
-    }
-    // batch_spiked_trials (VERDICT r11 #1): per wall-bound row, each
-    // mechanically-flagged trial with its original wall, the commit/
-    // duration evidence, and the replacement wall that superseded it.
-    val batchSpikedJson = obj(batchSpiked.sortBy(_._1)) { v =>
-      JArray(v.map { case (i, w, e, repl) =>
-        JObject("trial" -> JInt(i + 1), "wall_sec" -> JDouble(w),
-          "evidence_ms" -> JInt(e),
-          "replacement_wall_sec" -> repl.map(JDouble(_)).getOrElse(JNull))
-      }.toList)
     }
     val wireJson = wireStandalone.flatMap(_.rows.find(_.name == WireRow)) match {
       case Some(r) =>
-        val adjCal = wireStandalone.map(o => StreamBench.medianD(o.roundCal.map(_._2)))
-          .filter(_ > 0).getOrElse(0.0)
         JObject(
-          "median_clean_sec" -> JDouble(r.medianCleanSec),
-          "rows_per_sec" -> JInt(r.rowsPerSecClean.round),
+          "median_sec" -> JDouble(r.medianSec),
+          "rows_per_sec" -> JInt(r.rowsPerSec.round),
           // the fastest trial: the stall-robust floor reading
           "rows_per_sec_best" -> JInt(r.trialsRps.max.round),
-          "cal_median_sec" -> JDouble(streamCalMed),
-          "cal_adjacent_sec" -> JDouble(adjCal),
           "trials_sec" -> dbl(r.trialsSec),
           "trials_rps" -> JArray(r.trialsRps.map(x => JInt(x.round)).toList),
-          "spiked" -> r.spiked, "wall_rerun" -> r.wallRerun,
-          "wall_outliers" -> JInt(r.wallOutliers),
-          "meets_900k_bar" -> JBool(r.rowsPerSecClean >= WireBarRps))
+          "meets_900k_bar" -> JBool(r.rowsPerSec >= WireBarRps))
       case None => JNull
     }
-    val head = List[JField]("metric" -> JString("total"), "value" -> JDouble(total),
-      "unit" -> JString("sec")) ++
-      (if (drill) List[JField]("drill" -> JBool(true)) else Nil)
-    JObject(head ++ List[JField](
+    JObject(List[JField](
+      "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
       "subset" -> subset.fold[JValue](JBool(false))(names),
       "total_cpu_bound" -> JDouble(totalCpuBound),
       "total_wall_bound" -> JDouble(totalWallBound),
@@ -480,43 +235,24 @@ object Bench {
       "pinned_twins" -> names(PinnedTwins),
       "repeats" -> JInt(repeats),
       "stream_repeats" -> JInt(streamRepeats),
-      "calibration_sec" -> JDouble(calSeries.headOption.map(_._2).getOrElse(0.0)),
-      "calibration_series" -> JArray(calSeries.map { case (at, sec) =>
-        JObject("at" -> JInt(at), "sec" -> JDouble(sec)) }.toList),
-      "queries" -> obj(medians ++ streamRows.map(r => r.name -> r.medianCleanSec))(JDouble(_)),
+      "queries" -> obj(medians ++ streamRows.map(r => r.name -> r.medianSec))(JDouble(_)),
       "queries_detail" -> detail,
-      "batch_spiked_trials" -> batchSpikedJson,
-      "stream_round_health" -> health,
       // A query that failed on its FIRST run records Vector(0.0) and so
       // contributes 0 to queries/total (later-run failures contribute the
       // successful runs' median); the failed list makes either case
       // visible instead of reading as a speedup (ADVICE r2, r4).
       "failed" -> names(failed),
       "stream_rows_per_sec" ->
-        obj(streamRows.map(r => r.name -> r.rowsPerSecClean))(v => JInt(v.round)),
+        obj(streamRows.map(r => r.name -> r.rowsPerSec))(v => JInt(v.round)),
       // Per-trial wall seconds per streaming row (VERDICT r8 #1): the
       // trials are INTERLEAVED across the pack, so a 3× spread here reads
       // as host contention, not a code regression.
-      "stream_trials_sec" -> obj(streamRows.map(r => r.name -> r.trialsSec))(dbl),
-      "stream_median_clean" ->
-        obj(streamRows.map(r => r.name -> r.medianCleanSec))(JDouble(_)),
-      // The spike detector's own record (VERDICT r10 #1b); empty lists =
-      // no eruption detected.
-      "stream_spiked_trials" -> obj(streamRows.map(r => r.name -> r.spiked))(identity),
-      // Evidence-clean wall eruptions re-run once (VERDICT r12 #1) — a
-      // key DISTINCT from stream_spiked_trials so evidence-backed
-      // exclusions and wall-only replacements stay separately auditable.
-      "stream_wall_rerun_trials" -> obj(streamRows.filter(_.wallRerun.arr.nonEmpty)
-        .map(r => r.name -> r.wallRerun))(identity)) ++
+      "stream_trials_sec" -> obj(streamRows.map(r => r.name -> r.trialsSec))(dbl)) ++
       // Row-rig extras — e.g. stream_recovery_detail's per-trial
       // kill/restart/verify record — as top-level keys.
       stream.extra.map { case (k, v) => JField(k, v) } ++
       List[JField](
         "stream_wire_standalone" -> wireJson,
-        // Round-boundary calibration for the stream phase — the batch
-        // calibration_series stops before the stream rows run.
-        "stream_calibration_series" -> JArray(stream.roundCal.map { case (r, sec) =>
-          JObject("round" -> JInt(r), "sec" -> JDouble(sec)) }.toList),
         "stream_batch_latency" -> obj(streamRows.map(r => r.name -> r.latency)) {
           case (p50, mx) => JObject("p50_ms" -> JInt(p50), "max_ms" -> JInt(mx)) },
         "stream_state_provider" -> obj(streamRows.map(r => r.name -> r.provider))(JString(_)),

@@ -25,30 +25,18 @@ import graft.pipeline._
   */
 object StreamBench {
 
-  /** One published streaming row. `medianCleanSec`/`rowsPerSecClean`
-    * are medians over the trials NOT flagged by the spike detector (the
-    * headline numbers); `trialsSec` carries every wall actually used
-    * (spiked trials already replaced by their re-runs); `spiked`
-    * records each detected eruption — original wall, its commit_ms, and
-    * the replacement wall — so the artifact adjudicates itself
-    * (VERDICT r10 #1). `wallRerun` records evidence-CLEAN wall
-    * eruptions (≥3× row min, commit + calibration both quiet) that were
-    * mechanically re-run once under a distinct key — kept separate from
-    * `spiked` so the evidence discipline stays auditable — and
-    * `wallOutliers` counts trials still >2× the row min in the final
-    * vector with no exclusion marker (the class VERDICT r12 #1 found
-    * invisible to both mechanisms). */
-  final case class RowOut(name: String, medianCleanSec: Double,
-      trialsSec: Seq[Double], rowsPerSecClean: Double,
-      trialsRps: Seq[Double],
-      latency: (Long, Long), provider: String, state: JArray,
-      spiked: JArray, wallRerun: JArray, wallOutliers: Int)
+  /** One published streaming row. `medianSec`/`rowsPerSec` and the
+    * batch latency are medians over every trial the row ran (the
+    * headline numbers); `trialsSec`/`trialsRps` carry each trial, and
+    * `state` the per-trial state-store telemetry. */
+  final case class RowOut(name: String, medianSec: Double,
+      trialsSec: Seq[Double], rowsPerSec: Double, trialsRps: Seq[Double],
+      latency: (Long, Long), provider: String, state: JArray)
 
   /** `extra` = additional top-level artifact keys a row rig wants
     * published alongside its RowOut — e.g. the recovery row's per-trial
     * kill/restart/verify detail. Bench adds them to bench_out.json. */
   final case class Out(rows: Seq[RowOut], failed: Seq[String],
-      roundCal: Seq[(Int, Double)],
       extra: Seq[(String, JValue)] = Nil)
 
   /** Every published stream row, in registration (and artifact) order. */
@@ -66,15 +54,10 @@ object StreamBench {
     val out = run(spark, sfDir)
     out.rows.foreach { r =>
       val spread = r.trialsSec.map(t => f"$t%.2f").mkString("/")
-      val spiked = if (r.spiked.arr.isEmpty) "" else s"  spiked=${js(r.spiked)}"
-      val wallRr = if (r.wallRerun.arr.isEmpty) "" else s"  wall_rerun=${js(r.wallRerun)}"
-      val outl = if (r.wallOutliers == 0) "" else s"  wall_outliers=${r.wallOutliers}"
-      println(f"[stream] ${r.name}%-22s ${r.medianCleanSec}%7.2f s  (trials $spread)  ${r.rowsPerSecClean.round}%9d rows/s  batch p50/max ${r.latency._1}%5d/${r.latency._2}%5d ms  [${r.provider}] state=${js(r.state)}$spiked$wallRr$outl")
+      println(f"[stream] ${r.name}%-22s ${r.medianSec}%7.2f s  (trials $spread)  ${r.rowsPerSec.round}%9d rows/s  batch p50/max ${r.latency._1}%5d/${r.latency._2}%5d ms  [${r.provider}] state=${js(r.state)}")
     }
     out.failed.foreach(n => println(s"[stream] $n FAILED (see stderr)"))
     out.extra.foreach { case (k, v) => println(s"[stream] $k=${js(v)}") }
-    println("[stream] round calibration: " +
-      out.roundCal.map { case (r, s) => f"r$r=$s%.2f s" }.mkString(" "))
     spark.stop()
   }
 
@@ -246,7 +229,7 @@ object StreamBench {
     // iterate-on-one-pipeline loop, mirroring GRAFT_BENCH_ONLY.
     // `onlyOverride` is the programmatic form: Bench's standalone wire
     // reading (VERDICT r13 #2) re-enters here for one isolated row after
-    // the full pack, same staging/teardown/spike discipline.
+    // the full pack, same staging/teardown discipline.
     val streamOnly = onlyOverride.orElse(sys.env.get("GRAFT_STREAM_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet))
     def wanted(name: String): Boolean = streamOnly.forall(_.contains(name))
@@ -1416,27 +1399,6 @@ object StreamBench {
     val collected = scala.collection.mutable.LinkedHashMap[String, Vector[Trial]](
       rowDefs.map(r => r._1 -> Vector.empty[Trial]).toSeq: _*)
     val dead = scala.collection.mutable.Set.empty[String]
-    // Round-boundary calibration (the stream phase's answer to the batch
-    // pack's calibration_series, which stops sampling before the stream
-    // rows run): the SAME fixed CPU+shuffle kernel, median of 3 shots,
-    // taken before round 1 and after every round. A host-contention
-    // window that inflates a contiguous stretch of trials — the shape
-    // every flagged "regression" since r7 has resolved to — now shows up
-    // as a riser in the bracketing samples, so a slow round is
-    // adjudicatable from the artifact alone, as batch rows have been
-    // since r6.
-    def calOnce(): Double = {
-      import org.apache.spark.sql.functions.{avg, expr, max, sum}
-      val t0 = System.nanoTime()
-      spark.range(1L << 26).selectExpr("id % 1024 as k", "id as v")
-        .groupBy("k").agg(sum("v"), avg("v"), max(expr("xxhash64(v)")))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calSample(): Double = {
-      val xs = (1 to 3).map(_ => calOnce()).sorted
-      xs(1)
-    }
     // The FULL teardown also runs before the first timed trial
     // (VERDICT r10 #1a): the warmup queries above leave their own cached
     // providers, and the batch pack + staging writes leave writeback
@@ -1444,7 +1406,6 @@ object StreamBench {
     // row could still absorb the provider-unload + flush the driver's
     // environment had accumulated.
     teardown()
-    val roundCal = scala.collection.mutable.ArrayBuffer[(Int, Double)]((0, calSample()))
     for (r <- 1 to repeats) {
       for ((name, _, confs, runTrial) <- rowDefs if !dead(name)) {
         try collected(name) = collected(name) :+ withConfs(confs)(runTrial())
@@ -1454,173 +1415,32 @@ object StreamBench {
         }
         teardown()
       }
-      roundCal += ((r, calSample()))
-    }
-    // --- Self-defending spike pass (VERDICT r10 #1) -------------------
-    // Three rounds of judges adjudicated driver-context eruptions by
-    // hand from the telemetry; this pass applies the same evidence
-    // MECHANICALLY. A trial is SPIKED when its wall is > 2× the row's
-    // min AND either (a) its commit_ms is > 2× the median of the row's
-    // sibling trials (the state-store/writeback stall signature) or
-    // (b) a round-boundary calibration sample bracketing it rose
-    // > 1.5× the series median (a whole-host contention window). Each
-    // spiked trial is re-run ONCE — after a full teardown, so the
-    // replacement starts from the same settled state as a clean trial —
-    // and the original wall + commit_ms + replacement wall are
-    // published under the row's `spiked` key. Headline numbers are
-    // median_clean: the median over trials not still flagged after
-    // replacement (a replacement that erupts again stays excluded; if
-    // every trial is flagged the plain median is used and the flags
-    // remain visible).
-    def spikedIdx(ts: Vector[Trial], calCounts: Boolean): Set[Int] =
-      spikeFlags(ts.map(t => (t._1, t._4._3)),
-        if (calCounts) roundCal.toSeq else Nil)
-    // (trial idx, original wall, original commit_ms, replacement wall)
-    val spikedLog = scala.collection.mutable.LinkedHashMap[String,
-      Vector[(Int, Double, Long, Option[Double])]]()
-    for ((name, _, confs, runTrial) <- rowDefs if !dead(name)) {
-      val flagged = spikedIdx(collected(name), calCounts = true)
-      for (i <- flagged.toSeq.sorted) {
-        val orig = collected(name)(i)
-        System.err.println(f"[stream] $name trial ${i + 1} flagged as spiked " +
-          f"(wall ${orig._1}%.2f s, commit ${orig._4._3} ms) — re-running once")
-        teardown()
-        val replaced =
-          try Some(withConfs(confs)(runTrial()))
-          catch { case e: Throwable =>
-            System.err.println(s"[stream] $name spike re-run failed (original kept): $e")
-            None
-          }
-        replaced.foreach(t => collected(name) = collected(name).updated(i, t))
-        spikedLog(name) = spikedLog.getOrElse(name, Vector.empty) :+
-          ((i, orig._1, orig._4._3, replaced.map(_._1)))
-        teardown()
-      }
-    }
-    // --- Evidence-clean wall-outlier pass (VERDICT r12 #1) ------------
-    // The spike pass is evidence-gated BY DESIGN (a trial is only
-    // excluded when its commit_ms or a bracketing calibration sample
-    // corroborates the eruption), which left one way for a judged
-    // artifact to publish a misleading headline with no machine-readable
-    // marker: a wall eruption with a CLEAN commit and quiet calibration
-    // (driver BENCH_r12's stream_ann trial 1 — 18.65 s = 3.5× the row
-    // min, 2.4 s commit). This pass re-runs such trials ONCE,
-    // mechanically, at a deliberately higher bar (≥3× the row min vs the
-    // spike pass's 2×) and publishes original + replacement under the
-    // DISTINCT `wall_rerun` key: the replacement enters the trial vector
-    // like any other wall (it is never excluded from median_clean — only
-    // evidence-backed flags exclude), so the evidence discipline stays
-    // honest while the artifact still self-adjudicates. A replacement
-    // that erupts again simply stays in the stats AND counts toward the
-    // row's `wall_outliers_unflagged` marker below. Drill hook
-    // (mirrors GRAFT_BENCH_FORCE_SPIKE): GRAFT_STREAM_FORCE_WALL=
-    // "<row>:<trial1based>" forces that trial into the outlier set and
-    // stamps the entry "forced":true.
-    val forceWall = sys.env.get("GRAFT_STREAM_FORCE_WALL").flatMap { s =>
-      s.split(":", 2) match {
-        case Array(n, t) if t.forall(_.isDigit) && t.nonEmpty => Some((n, t.toInt - 1))
-        case _ => None
-      }
-    }
-    val wallRerunLog = scala.collection.mutable.LinkedHashMap[String,
-      Vector[(Int, Double, Long, Option[Double], Boolean)]]()
-    for ((name, _, confs, runTrial) <- rowDefs if !dead(name)) {
-      val ts = collected(name)
-      val piped = spikedLog.getOrElse(name, Vector.empty).map(_._1).toSet
-      val forced = forceWall.collect { case (n, i) if n == name && ts.indices.contains(i) => i }
-      val outliers = (wallOutlierIdx(ts.map(_._1), piped, factor = 3.0) ++ forced).toSeq.sorted
-      for (i <- outliers) {
-        val orig = ts(i)
-        System.err.println(f"[stream] $name trial ${i + 1} is an evidence-clean wall outlier " +
-          f"(wall ${orig._1}%.2f s, commit ${orig._4._3} ms) — re-running once")
-        teardown()
-        val replaced =
-          try Some(withConfs(confs)(runTrial()))
-          catch { case e: Throwable =>
-            System.err.println(s"[stream] $name wall re-run failed (original kept): $e")
-            None
-          }
-        replaced.foreach(t => collected(name) = collected(name).updated(i, t))
-        wallRerunLog(name) = wallRerunLog.getOrElse(name, Vector.empty) :+
-          ((i, orig._1, orig._4._3, replaced.map(_._1), forced.contains(i)))
-        teardown()
-      }
     }
     val results = rowDefs.toSeq.collect { case (name, provider, _, _) if !dead(name) =>
       val ts = collected(name)
-      // Final flags: re-evaluate on the post-replacement vector WITHOUT
-      // the calibration clause (replacements ran outside the calibrated
-      // rounds); a trial whose re-run failed keeps its original flag.
-      // Exclusion is CONFINED to trials that went through the spike
-      // pipeline (flagged, re-run, published in `spiked`): the
-      // re-evaluation's row minimum may now be a fast replacement wall,
-      // and letting that re-baseline flag ORIGINAL trials would drop
-      // walls from median_clean that were never re-run and appear
-      // nowhere in the artifact — silent cherry-picking, the exact
-      // failure this pass exists to prevent. Every excluded index is
-      // therefore visible in `spiked` by construction.
-      val piped = spikedLog.getOrElse(name, Vector.empty).map(_._1).toSet
-      val rerunFailed = spikedLog.getOrElse(name, Vector.empty)
-        .collect { case (i, _, _, None) => i }.toSet
-      val flags = (spikedIdx(ts, calCounts = false) & piped) ++ rerunFailed
-      val cleanIdx = ts.indices.filterNot(flags)
-      val used = if (cleanIdx.nonEmpty) cleanIdx.map(ts(_)) else ts
       // State metrics stay per-trial (not medianed): the point is reading
       // a contended run's trials individually (VERDICT r4 #6).
       val state = JArray(ts.map { case (_, _, _, (rows, mem, commitMs)) =>
         JObject("state_rows" -> JInt(rows), "state_memory_bytes" -> JInt(mem),
           "commit_ms" -> JInt(commitMs))
       }.toList)
-      def rerun(i: Int, w: Double, c: Long, repl: Option[Double]): List[JField] =
-        List("trial" -> JInt(i + 1), "wall_sec" -> JDouble(w), "commit_ms" -> JInt(c),
-          "replacement_wall_sec" -> repl.map(JDouble(_)).getOrElse(JNull))
-      val spiked = JArray(spikedLog.getOrElse(name, Vector.empty).map {
-        case (i, w, c, repl) => JObject(rerun(i, w, c, repl))
-      }.toList)
-      val wallRerun = JArray(wallRerunLog.getOrElse(name, Vector.empty).map {
-        case (i, w, c, repl, drill) =>
-          JObject(rerun(i, w, c, repl) ++
-            (if (drill) List[JField]("forced" -> JBool(true)) else Nil))
-      }.toList)
-      // Trials still >2× the row min in the FINAL vector with no
-      // exclusion marker — the spike pass's designed blind spot above
-      // its own threshold. Counted here (where the flag sets live) and
-      // folded into Bench's stream_round_health storm signal.
-      val wallOutliers = wallOutlierIdx(ts.map(_._1), flags, factor = 2.0).size
-      RowOut(name, medianD(used.map(_._1)), ts.map(_._1),
-        medianD(used.map(_._2)), ts.map(_._2),
-        (medianL(used.map(_._3._1)), medianL(used.map(_._3._2))),
-        provider, state, spiked, wallRerun, wallOutliers)
+      RowOut(name, medianD(ts.map(_._1)), ts.map(_._1),
+        medianD(ts.map(_._2)), ts.map(_._2),
+        (medianL(ts.map(_._3._1)), medianL(ts.map(_._3._2))), provider, state)
     }
     val extra =
       (if (recoveryLog.isEmpty) Nil
        else Seq("stream_recovery_detail" -> JArray(recoveryLog.toList))) ++
       (if (rescaleLog.isEmpty) Nil
        else Seq("stream_rescale_detail" -> JArray(rescaleLog.toList)))
-    Out(results, failed.toList.distinct, roundCal.toSeq, extra)
+    Out(results, failed.toList.distinct, extra)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       stagedDirs.foreach(d => deleteRecursively(new java.io.File(d)))
     }
   }
 
-  /** Pure spike predicate over one row's trials (VERDICT r10 #1b) —
-    * factored out of [[run]] so the contract is unit-testable
-    * (SpikeDetectorSpec). `trials` = (wall sec, commit ms) in round
-    * order: trial i ran in round i+1, bracketed by `roundCal` samples
-    * i and i+1. Pass `roundCal` empty to disable the calibration
-    * clause (the post-replacement re-evaluation, where replacements
-    * ran outside the calibrated rounds). A trial is spiked when its
-    * wall exceeds 2× the row's min AND either its commit_ms exceeds
-    * 2× the median over NOT-already-flagged sibling trials (the
-    * state-store/writeback stall signature; flags accumulate across
-    * passes until none is added — see the loop comment) or a
-    * bracketing round-calibration sample rose >1.5× the series median
-    * (a whole-host contention window). Single-trial rows are never
-    * flagged — there is no sibling evidence. */
-  /** Odd/even median — ONE definition for the published row medians AND
-    * the spike predicate's sibling medians (previously four inline
-    * copies whose even-length rule could silently diverge). */
+  /** Odd/even median — ONE definition for every published median. */
   private[graft] def medianD(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -1629,77 +1449,6 @@ object StreamBench {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
-
-  private[graft] def spikeFlags(trials: Seq[(Double, Long)],
-      roundCal: Seq[(Int, Double)]): Set[Int] = {
-    val calMedian = if (roundCal.isEmpty) 0.0 else medianD(roundCal.map(_._2))
-    def calSpikeAt(i: Int): Boolean =
-      Seq(i, i + 1).flatMap(r => roundCal.find(_._1 == r)).map(_._2)
-        .exists(_ > 1.5 * calMedian)
-    spikeFlagsWith(trials, calSpikeAt)
-  }
-
-  /** The spike fixpoint with a caller-supplied calibration clause —
-    * [[spikeFlags]] passes the stream pack's per-round bracketing; the
-    * batch pack (Bench, VERDICT r11 #1) passes a uniform
-    * "either probe bracketing this QUERY rose >1.5× the series median"
-    * predicate, because its calibration probes bracket a query's whole
-    * trial block, not individual trials. Wall + commit semantics are
-    * identical in both callers by construction. */
-  private[graft] def spikeFlagsWith(trials: Seq[(Double, Long)],
-      calSpikeAt: Int => Boolean): Set[Int] =
-    if (trials.size < 2) Set.empty
-    else {
-      val minW = trials.map(_._1).min
-      // Sibling commit medians are taken over trials NOT already
-      // flagged, iterated until no NEW flag appears: with 2 of 3 trials
-      // erupted (the r10 driver run's ann row, 12.36/26.60/4.94 s
-      // walls) a one-shot median is contaminated by the OTHER spike and
-      // the second eruption escapes. Flags ACCUMULATE across passes —
-      // a trial flagged against a dirtier (higher) baseline stays
-      // flagged, which keeps the set genuinely monotone (excluding a
-      // cal-flagged LOW-commit sibling can RAISE the median, so a pure
-      // re-evaluation could oscillate and the pass cap would return a
-      // non-fixpoint set) and guarantees termination within
-      // trials.size passes.
-      var flagged = Set.empty[Int]
-      var pass = 0
-      var changed = true
-      while (changed && pass < trials.size) {
-        val next = flagged ++ trials.indices.filter { i =>
-          !flagged(i) && {
-            val sibs = trials.indices
-              .filter(j => j != i && !flagged(j)).map(j => trials(j)._2)
-            val sibMed = if (sibs.isEmpty) 0L else medianL(sibs)
-            val commitSpike = sibMed > 0 && trials(i)._2 > 2 * sibMed
-            trials(i)._1 > 2 * minW && (commitSpike || calSpikeAt(i))
-          }
-        }
-        changed = next != flagged
-        flagged = next
-        pass += 1
-      }
-      flagged
-    }
-
-  /** Pure wall-outlier predicate (VERDICT r12 #1) — indices whose wall
-    * exceeds `factor` × the row's minimum, skipping `excluded` indices
-    * (trials already carrying an evidence-backed marker). Used twice:
-    * factor 3.0 selects evidence-clean eruptions for the mechanical
-    * re-run-once pass, factor 2.0 counts surviving unmarked outliers
-    * for the health key. Single-trial rows are never outliers — the
-    * minimum IS the trial. Note the minimum is over ALL walls including
-    * excluded ones: an evidence-flagged trial's replacement is a real
-    * measurement and a legitimate baseline. Strictly `>` so a wall at
-    * exactly 2× stays in the health key's (1.5×, 2×] elevated band
-    * rather than double-counting in both. */
-  private[graft] def wallOutlierIdx(walls: Seq[Double], excluded: Set[Int],
-      factor: Double): Set[Int] =
-    if (walls.size < 2) Set.empty
-    else {
-      val minW = walls.min
-      walls.indices.filter(i => !excluded(i) && walls(i) > factor * minW).toSet
-    }
 
   /** ~distinct user_ids in the events table at bench SF — replication
     * perturbs timestamps, not the key space, so the staged replay keeps

@@ -80,7 +80,7 @@ object WireQueries {
     // Arrival count rides its own AtomicLong: ConcurrentLinkedQueue.size()
     // walks the whole queue (O(n) per call), so the 50 ms await poll below
     // was O(total²) driver-side node-chasing across the egress — inside
-    // the timed wall of a wall-bound, spike-adjudicated bench row.
+    // the timed wall of a wall-bound bench row.
     val inbox = new java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]
     val inboxN = new java.util.concurrent.atomic.AtomicLong(0L)
     val ingest = new ServerSocket(0)

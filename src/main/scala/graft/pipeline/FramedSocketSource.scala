@@ -46,7 +46,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 object FramedSocket {
   val ShortName = "graft-framed-socket"
-  val Schema: StructType = FramedLog.Schema // offset BIGINT, payload BINARY
 
   /** The 4-byte big-endian length header at `pos` — the ONE definition
     * of the wire framing's length parse (reader-thread scanner,
@@ -58,7 +57,7 @@ object FramedSocket {
 }
 
 /** Driver-side handoff of the in-scan decode configuration
-  * ([[FramedSocketSource]] `inlineDecode`): DSv2 providers are
+  * ([[FramedSocketSource]]): DSv2 providers are
   * instantiated by reflection and receive string options only, so the
   * decoder + row encoder can't ride the option map — `load()` registers
   * them here under a fresh key and passes the KEY as an option. Only the
@@ -129,15 +128,14 @@ private[pipeline] object FramedSocketInlineRegistry {
     s"unsupported Encoder implementation ${enc.getClass.getName} for the " +
       "in-scan decode path: the inline reader derives its catalyst " +
       "serializer from an ExpressionEncoder or AgnosticEncoder (every " +
-      "Encoders.* / spark.implicits encoder qualifies); wrap the custom " +
-      "encoder or set inlineDecode = false to use the typed-flatMap path"
+      "Encoders.* / spark.implicits encoder qualifies); build the row " +
+      "encoder with one of those instead"
 }
 
 final class FramedSocketTableProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Option(options.get("decoderKey"))
-      .map(k => FramedSocketInlineRegistry.schemaFor(FramedSocketInlineRegistry(k)._2))
-      .getOrElse(FramedSocket.Schema)
+    FramedSocketInlineRegistry.schemaFor(
+      FramedSocketInlineRegistry(options.getOrDefault("decoderKey", ""))._2)
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
     new FramedSocketTable(properties.asScala.toMap)
@@ -151,12 +149,10 @@ final class FramedSocketTable(options: Map[String, String]) extends Table with S
   // which the streaming plan (StreamingRelationV2) retains across
   // stop/restart of the same DataFrame — is the decoder's home from
   // here on, and the registry returns to its pre-load() size
-  private val inline: Option[(FramedDecoder[Any], Encoder[Any])] =
-    options.get("decoderKey").map(FramedSocketInlineRegistry.consume)
+  private val inline: (FramedDecoder[Any], Encoder[Any]) =
+    FramedSocketInlineRegistry.consume(options.getOrElse("decoderKey", ""))
   override def name(): String = s"${FramedSocket.ShortName}:${req("host")}:${req("port")}"
-  override def schema(): StructType =
-    inline.map(e => FramedSocketInlineRegistry.schemaFor(e._2))
-      .getOrElse(FramedSocket.Schema)
+  override def schema(): StructType = FramedSocketInlineRegistry.schemaFor(inline._2)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
@@ -189,8 +185,8 @@ private[pipeline] final case class FrameChunk(count: Int, bytes: Array[Byte])
 
 final class FramedSocketMicroBatchStream(host: String, port: Int,
     maxFramesPerTrigger: Long, maxBufferedFrames: Int,
-    ordered: Boolean = false,
-    inline: Option[(FramedDecoder[Any], Encoder[Any])] = None)
+    ordered: Boolean,
+    inline: (FramedDecoder[Any], Encoder[Any]))
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** Seal threshold: a chunk closes at this many bytes (or whenever the
@@ -375,7 +371,6 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
       var rel = headSkip + math.max(0L, s - base) // frame idx into chunks
       var remaining = math.max(0L, math.min(e, base + buffered) -
         math.max(s, base))
-      var absIdx = math.max(s, base)
       val out = ArrayBuffer.empty[InputPartition]
       val it = chunks.iterator
       while (remaining > 0 && it.hasNext) {
@@ -383,9 +378,8 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
         if (rel >= c.count) rel -= c.count
         else {
           val take = math.min(c.count - rel, remaining).toInt
-          out += slicePartition(absIdx, c, rel.toInt, take)
+          out += slicePartition(c, rel.toInt, take)
           remaining -= take
-          absIdx += take
           rel = 0
         }
       }
@@ -409,9 +403,8 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
     * to one task). The driver-side header walk replaces the executor's
     * identical O(skip) scan; full-chunk slices ship the original array
     * untouched (no copy on the common path). */
-  private def slicePartition(absIdx: Long, c: FrameChunk,
-      skip: Int, take: Int): FramedSocketPartition =
-    if (skip == 0 && take == c.count) FramedSocketPartition(absIdx, c.bytes, take)
+  private def slicePartition(c: FrameChunk, skip: Int, take: Int): FramedSocketPartition =
+    if (skip == 0 && take == c.count) FramedSocketPartition(c.bytes, take)
     else {
       var pos = 0
       var i = 0
@@ -419,14 +412,11 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
       val startByte = pos
       i = 0
       while (i < take) { pos += 4 + FramedSocket.frameLen(c.bytes, pos); i += 1 }
-      FramedSocketPartition(absIdx,
-        java.util.Arrays.copyOfRange(c.bytes, startByte, pos), take)
+      FramedSocketPartition(java.util.Arrays.copyOfRange(c.bytes, startByte, pos), take)
     }
 
-  override def createReaderFactory(): PartitionReaderFactory = inline match {
-    case Some((dec, enc)) => FramedSocketInlineReaderFactory(dec, enc)
-    case None             => new FramedSocketReaderFactory
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    FramedSocketInlineReaderFactory(inline._1, inline._2)
 
   override def commit(end: Offset): Unit = lock.synchronized {
     val e = end.asInstanceOf[FrameCount].n
@@ -460,11 +450,10 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
 
 /** One chunk slice: `take` frames laid out back-to-back from byte 0 of
   * `bytes` (partial-chunk slices are byte-sliced at PLAN time —
-  * slicePartition — so the executor never skips), with `startIdx` the
-  * absolute index of the first emitted frame. Each slice is its own
+  * slicePartition — so the executor never skips). Each slice is its own
   * partition, so a large batch decodes in parallel. */
-final case class FramedSocketPartition(startIdx: Long, bytes: Array[Byte],
-    take: Int) extends InputPartition
+final case class FramedSocketPartition(bytes: Array[Byte], take: Int)
+  extends InputPartition
 
 /** All of one micro-batch's chunk slices as ONE partition (`ordered`
   * mode): a single task walks the slices in frame order, trading the
@@ -493,17 +482,14 @@ final class FramedArrayReaderFactory extends PartitionReaderFactory {
   }
 }
 
-/** In-scan decode ([[FramedSocketSource]] `inlineDecode`): each slice
-  * decodes straight from the chunk bytes to serialized `(T, eventTsNs)`
-  * rows INSIDE the DSv2 reader — the reference's own decode boundary
+/** In-scan decode ([[FramedSocketSource]]): each slice decodes straight
+  * from the chunk bytes to serialized `(T, eventTsNs)` rows INSIDE the
+  * DSv2 reader — the reference's own decode boundary
   * (framed_source_notify.pony:118-133 decodes inside the source notify).
-  * Versus the typed-flatMap path this removes, per frame: the payload
-  * `copyOfRange`, the `GenericInternalRow` boxing, the payload's copy
-  * into an UnsafeRow, and the UnsafeRow→`Array[Byte]` deserialize on the
-  * flatMap's input side — the r16 wire attribution measured that stack
-  * at more per row than the ENTIRE parquet-replay pipeline including its
-  * keyed state (SCALING.md). A dropping decoder drops here, before any
-  * row exists (numInputRows therefore counts DECODED rows on this path).
+  * No per-frame payload copy, row boxing or binary column sits between
+  * the socket bytes and the decoded row (SCALING.md, r16 wire
+  * attribution). A dropping decoder drops here, before any row exists
+  * (numInputRows therefore counts DECODED rows).
   * Ships the decoder and the (serializable, agnostic) row encoder by
   * value; the catalyst serializer is rebuilt per reader, so the reused
   * UnsafeRow buffer is never shared across tasks. */
@@ -557,97 +543,31 @@ final case class FramedSocketInlineReaderFactory(
     }
 }
 
-final class FramedSocketReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: FramedSocketPartition => sliceReader(p)
-      case o: FramedSocketOrderedPartition =>
-        new PartitionReader[InternalRow] {
-          private var i = 0
-          private var cur: PartitionReader[InternalRow] =
-            if (o.slices.isEmpty) null else sliceReader(o.slices(0))
-          override def next(): Boolean = {
-            while (cur != null && !cur.next()) {
-              i += 1
-              cur = if (i < o.slices.length) sliceReader(o.slices(i)) else null
-            }
-            cur != null
-          }
-          override def get(): InternalRow = cur.get()
-          override def close(): Unit = ()
-        }
-      case other => throw new IllegalArgumentException(
-        s"unexpected partition type ${other.getClass.getName}")
-    }
-
-  private def sliceReader(p: FramedSocketPartition): PartitionReader[InternalRow] = {
-    new PartitionReader[InternalRow] {
-      private var pos = 0
-      private var emitted = 0
-      private var current: Array[Byte] = _
-      override def next(): Boolean = {
-        if (emitted >= p.take) false
-        else {
-          val len = FramedSocket.frameLen(p.bytes, pos)
-          current = java.util.Arrays.copyOfRange(p.bytes, pos + 4, pos + 4 + len)
-          pos += 4 + len
-          emitted += 1
-          true
-        }
-      }
-      override def get(): InternalRow =
-        new GenericInternalRow(Array[Any](p.startIdx + emitted - 1, current))
-      override def close(): Unit = ()
-    }
-  }
-}
-
 /** DSL SourceConfig over the framed TCP transport: decode each frame with
   * the same [[FramedDecoder]] contract the file/log sources use (the
   * transport owns the reference-default 4-byte big-endian framing; the
-  * decoder sees whole payloads).
-  *
-  * `inlineDecode` (default true) runs the decode INSIDE the DSv2 scan
-  * ([[FramedSocketInlineReaderFactory]]) — the reference's own decode
-  * boundary, and ~2× the per-row throughput of the typed-flatMap path
-  * (r16 wire attribution, SCALING.md). Semantics are identical
-  * (DecoderFilterSpec pins both paths, drops included) with two
-  * observable differences: `numInputRows` counts DECODED rows rather
-  * than scanned frames (a dropping decoder's drops never become rows),
-  * and the scan's output schema is the row schema rather than
-  * (offset, payload) — so toggling it across a RESTART of an existing
-  * checkpoint is a plan change (use a fresh checkpoint, as with any
-  * source swap). Set false to keep the frame-addressed scan (e.g. to
-  * observe raw frame counts in progress metrics). */
+  * decoder sees whole payloads). The decode runs INSIDE the DSv2 scan
+  * ([[FramedSocketInlineReaderFactory]]), so `numInputRows` counts
+  * DECODED rows (a dropping decoder's drops never become rows) and the
+  * scan's output schema is the row schema. */
 final case class FramedSocketSource[T](
     host: String,
     port: Int,
     decoder: FramedDecoder[T],
     maxFramesPerTrigger: Long = Long.MaxValue,
     maxBufferedFrames: Int = 1 << 20,
-    ordered: Boolean = false,
-    inlineDecode: Boolean = true)(implicit enc: Encoder[T])
+    ordered: Boolean = false)(implicit enc: Encoder[T])
     extends SourceConfig[T] {
   def load(spark: SparkSession): Dataset[(T, Long)] = {
     val tupEnc = Encoders.tuple(enc, Encoders.scalaLong)
-    val base = spark.readStream
+    val reader = spark.readStream
       .format(classOf[FramedSocketTableProvider].getName)
       .option("host", host).option("port", port.toString)
       .option("maxBufferedFrames", maxBufferedFrames.toString)
       .option("ordered", ordered.toString)
-    val reader = if (inlineDecode)
-      base.option("decoderKey", FramedSocketInlineRegistry.register(decoder, tupEnc))
-    else base
+      .option("decoderKey", FramedSocketInlineRegistry.register(decoder, tupEnc))
     val df = (if (maxFramesPerTrigger != Long.MaxValue)
       reader.option("maxFramesPerTrigger", maxFramesPerTrigger.toString) else reader).load()
-    if (inlineDecode) df.as[(T, Long)](tupEnc)
-    else {
-      val dec = decoder
-      // flatMap over decodeOpt: a dropping decoder ([[FramedDecoder.decodeOpt]])
-      // discards its frame here, at the decode boundary — reference
-      // framed_source_notify.pony:118-133 semantics
-      df.select("payload").as[Array[Byte]](Encoders.BINARY)
-        .flatMap { bytes => dec.decodeOpt(bytes).map(t => (t, dec.eventTimeNs(t))) }(tupEnc)
-    }
+    df.as[(T, Long)](tupEnc)
   }
 }

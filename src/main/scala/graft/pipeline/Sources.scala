@@ -154,10 +154,10 @@ trait FramedDecoder[T] extends Serializable {
     * watermark is assigned) rather than drop them at the source. */
   def decodeOpt(payload: Array[Byte]): Option[T] = Some(decode(payload))
   /** [[decodeOpt]] over a slice of a larger buffer — the socket scan's
-    * in-path decode ([[FramedSocketSource]] `inlineDecode`) calls THIS
-    * per frame, so a decoder that reads its fields straight from
-    * `(bytes, off, len)` (e.g. through `ByteBuffer.wrap(bytes, off,
-    * len)`) skips the per-frame payload copy entirely. The default
+    * in-path decode ([[FramedSocketSource]]) calls THIS per frame, so
+    * a decoder that reads its fields straight from `(bytes, off, len)`
+    * (e.g. through `ByteBuffer.wrap(bytes, off, len)`) skips the
+    * per-frame payload copy entirely. The default
     * copies and delegates, preserving every existing decoder's
     * contract unchanged. */
   def decodeSliceOpt(bytes: Array[Byte], off: Int, len: Int): Option[T] =

@@ -63,35 +63,43 @@ class BenchJsonSpec extends AnyFunSuite {
     assert((compactJs \ "failed") === JArray(List(JString(awkward))))
 
     val batch = Seq(
-      Bench.BatchRow("q1_agg", Vector((0.5, 0L), (0.7, 0L), (0.6, 0L)), Set.empty),
-      // trial 2 was flagged and its re-run failed: it stays out of the median
-      Bench.BatchRow("p_gen_source", Vector((1.0, 10L), (5.0, 100L), (1.1, 11L)), Set(1)))
+      Bench.BatchRow("q1_agg", Vector(0.5, 0.7, 0.6)),
+      // a slow trial stays in: the headline is the median of every trial
+      Bench.BatchRow("p_gen_source", Vector(1.0, 5.0, 1.1)))
     val wire = StreamBench.RowOut(Bench.WireRow, 4.0, Seq(4.0, 4.2, 3.9),
       1000000.0, Seq(1000000.0, 950000.0, 1020000.0), (120L, 300L), "fmgws+hdfs",
-      JArray(Nil), JArray(Nil), JArray(Nil), 0)
-    val stream = StreamBench.Out(Seq(wire), Nil, Seq((0, 0.3), (1, 0.31)),
+      JArray(Nil))
+    val stream = StreamBench.Out(Seq(wire), Nil,
       extra = Seq("stream_recovery_detail" -> JArray(List(JString(awkward)))))
-    val body = Bench.benchOutJson(batch,
-      Seq("p_gen_source" -> Vector((1, 5.0, 100L, None))), Seq((0, 0.4), (2, 0.41)),
-      repeats = 3, stream, streamRepeats = 3, Some(stream), Seq(awkward), awkward,
-      subset = None, drill = false)
+    val body = Bench.benchOutJson(batch, repeats = 3, stream, streamRepeats = 3,
+      Some(stream), Seq(awkward), awkward, subset = None)
     val js = parse(org.json4s.jackson.JsonMethods.compact(body))
     assert((js \ "sf") === JString(awkward))
     assert((js \ "failed") === JArray(List(JString(awkward))))
     assert((js \ "stream_recovery_detail") === JArray(List(JString(awkward))))
-    // headline medians: all trials for a CPU-bound row, clean trials for
-    // a wall-bound row with an excluded trial
+    // headline medians: the plain median of every trial, wall-bound rows
+    // included
     assert((js \ "queries") \ "q1_agg" === JDouble(0.6))
-    assert((js \ "queries") \ "p_gen_source" === JDouble(1.05))
-    assert((js \ "value") === JDouble(0.6 + 1.05))
-    assert((js \ "queries_detail") \ "p_gen_source" \ "evidence_ms" ===
-      JArray(List(JInt(10), JInt(100), JInt(11))))
-    assert((js \ "batch_spiked_trials") \ "p_gen_source" \ "replacement_wall_sec" ===
-      JArray(List(JNull)))
+    assert((js \ "queries") \ "p_gen_source" === JDouble(1.1))
+    assert((js \ "value") === JDouble(0.6 + 1.1))
+    val gen = (js \ "queries_detail") \ "p_gen_source"
+    assert(gen \ "median" === JDouble(1.1))
+    assert(gen \ "min" === JDouble(1.0))
+    assert(gen \ "max" === JDouble(5.0))
+    assert(gen \ "runs" === JArray(List(JDouble(1.0), JDouble(5.0), JDouble(1.1))))
+    assert(gen \ "evidence_ms" === JNothing)
+    assert((js \ "stream_wire_standalone") \ "median_sec" === JDouble(4.0))
     assert((js \ "stream_wire_standalone") \ "meets_900k_bar" === JBool(true))
-    // the removed selection and normalization keys stay gone
+    for (k <- Seq("median_clean_sec", "cal_median_sec", "cal_adjacent_sec",
+        "spiked", "wall_rerun", "wall_outliers"))
+      assert((js \ "stream_wire_standalone") \ k === JNothing, k)
+    // the removed selection, normalization and adjudication keys stay gone
     for (k <- Seq("committed_selection", "total_calibrated", "ref_cal_sec",
-        "stream_wire_deployment", "stream_staged_replay"))
+        "stream_wire_deployment", "stream_staged_replay",
+        "calibration_sec", "calibration_series", "batch_spiked_trials",
+        "stream_round_health", "stream_median_clean",
+        "stream_spiked_trials", "stream_wall_rerun_trials",
+        "stream_calibration_series", "drill"))
       assert((js \ k) === JNothing, k)
   }
 

@@ -23,6 +23,21 @@ class ConnectorSourceSpec extends AnyFunSuite {
     cond
   }
 
+  /** The checkpoint-committed point of reference: the source offset that
+    * the highest batch under commits/ recorded in offsets/<id> (one
+    * source, so the entry's last line). Spark calls a source's commit for
+    * batch k only while planning batch k+1, so the last committed batch's
+    * ACK may never reach the sender before a stop: the committed end can
+    * run ahead of the last ACK, never behind it. NOTIFY_ACK carries this
+    * count on restart. */
+  private def committedEnd(ckpt: String): Long = {
+    val lastCommitted = new java.io.File(ckpt, "commits").list()
+      .filter(f => f.nonEmpty && f.forall(_.isDigit)).map(_.toLong).max
+    val lines = Files.readAllLines(
+      java.nio.file.Paths.get(ckpt, "offsets", lastCommitted.toString), UTF_8)
+    lines.get(lines.size - 1).trim.toLong
+  }
+
   test("kill + restart resumes from the ACKed point: no frame lost or duplicated") {
     implicit val ss: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
@@ -46,6 +61,9 @@ class ConnectorSourceSpec extends AnyFunSuite {
     assert(ackAtStop >= 50 && ackAtStop < n,
       s"test needs a mid-stream stop, got ackAtStop=$ackAtStop")
     assert(sender.resumes.get(0) == 0L) // first session started from scratch
+    val committedAtStop = committedEnd(ckpt)
+    assert(committedAtStop >= ackAtStop,
+      s"committed end $committedAtStop is behind the last ACK $ackAtStop")
 
     // --- incarnation 2: same checkpoint; the sender must be asked to
     // resume from the committed point of reference, not from zero
@@ -57,8 +75,9 @@ class ConnectorSourceSpec extends AnyFunSuite {
     h2.stop()
 
     assert(sender.resumes.size >= 2, s"expected a second handshake: ${sender.resumes}")
-    assert(sender.resumes.get(1) == ackAtStop,
-      s"restart must resume from the ACKed point ($ackAtStop), got ${sender.resumes.get(1)}")
+    assert(sender.resumes.get(1) == committedAtStop,
+      s"restart must resume from the checkpoint-committed point " +
+        s"($committedAtStop, last ACK $ackAtStop), got ${sender.resumes.get(1)}")
 
     // exactly the original frames at the sink: none lost, none duplicated
     val got = spark.read.parquet(outDir).collect().map(_.getString(0)).toSeq
@@ -120,6 +139,9 @@ class ConnectorSourceSpec extends AnyFunSuite {
     h1.stop()
     val ackAtStop = sender.lastAck
     assert(ackAtStop < n, s"test needs a mid-stream stop, got $ackAtStop")
+    val committedAtStop = committedEnd(ckpt)
+    assert(committedAtStop >= ackAtStop,
+      s"committed end $committedAtStop is behind the last ACK $ackAtStop")
 
     // incarnation 2: resume is asked in the frame space, and the drain
     // delivers exactly the evens — nothing lost, nothing duplicated
@@ -130,9 +152,9 @@ class ConnectorSourceSpec extends AnyFunSuite {
     h2.processAllAvailable()
     h2.stop()
     assert(sender.resumes.size >= 2, s"expected a second handshake: ${sender.resumes}")
-    assert(sender.resumes.get(1) == ackAtStop,
-      s"restart must resume from the frame-space ACK point ($ackAtStop), " +
-        s"got ${sender.resumes.get(1)}")
+    assert(sender.resumes.get(1) == committedAtStop,
+      s"restart must resume from the frame-space committed point " +
+        s"($committedAtStop, last ACK $ackAtStop), got ${sender.resumes.get(1)}")
     val got = spark.read.parquet(outDir).collect().map(_.getString(0)).toSeq
     assert(got.sorted == (0 until n by 2).map(i => s"msg-$i").sorted,
       "exactly the decoder-kept frames, exactly once")

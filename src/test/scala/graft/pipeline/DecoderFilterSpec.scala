@@ -46,14 +46,12 @@ class DecoderFilterSpec extends AnyFunSuite {
     assert(it.toSeq === Seq(0L, 2L, 4L)) // evens survive, odds (incl. trailing 7) vanish
   }
 
-  /** The TCP drop contract, driven through either decode path: the
-    * in-scan default (drops inside the DSv2 reader, before any row
-    * exists) and the typed-flatMap form (drops above the scan). Both
-    * must produce exactly the evens in arrival order — the r16 inline
-    * path changes WHERE the drop happens, never WHAT survives. (This
-    * fixture's decoder does not override decodeSliceOpt, so the inline
-    * run also covers the default copy-and-delegate slice decode.) */
-  private def tcpDropRun(inline: Boolean): Seq[Long] = {
+  /** The TCP drop contract: the in-scan decode drops inside the DSv2
+    * reader, before any row exists, and must produce exactly the evens
+    * in arrival order. (This fixture's decoder does not override
+    * decodeSliceOpt, so the run also covers the default
+    * copy-and-delegate slice decode.) */
+  private def tcpDropRun(): Seq[Long] = {
     implicit val ss: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val server = new java.net.ServerSocket(0)
@@ -70,8 +68,7 @@ class DecoderFilterSpec extends AnyFunSuite {
     sender.start()
     val view = s"decoder_filter_out_${System.nanoTime()}"
     val h = Graft.source("decoder-filter",
-        FramedSocketSource("127.0.0.1", server.getLocalPort, OddFilterDecoder,
-          inlineDecode = inline))
+        FramedSocketSource("127.0.0.1", server.getLocalPort, OddFilterDecoder))
       .toSink(MemorySink(view))
     sender.join()
     // poll until all 10 surviving frames are in the sink (ADVICE r13):
@@ -93,11 +90,7 @@ class DecoderFilterSpec extends AnyFunSuite {
   test("framed TCP source: odd frames dropped at decode, evens arrive intact and in order") {
     // exactly the evens, in arrival order: every value after a dropped
     // odd frame is bit-correct, so the drop consumed its bytes exactly
-    assert(tcpDropRun(inline = true) === (0L until 20L by 2L).toSeq)
-  }
-
-  test("the typed-flatMap path (inlineDecode = false) drops identically") {
-    assert(tcpDropRun(inline = false) === (0L until 20L by 2L).toSeq)
+    assert(tcpDropRun() === (0L until 20L by 2L).toSeq)
   }
 
   test("framed file source: the same dropping decoder filters a framed log batch-side") {

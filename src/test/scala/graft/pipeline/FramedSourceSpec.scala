@@ -180,8 +180,13 @@ class FramedSourceSpec extends AnyFunSuite {
       }
     }
     sender.start()
+    val dec = StringFrames.asInstanceOf[FramedDecoder[Any]]
+    val enc = org.apache.spark.sql.Encoders.tuple(
+      org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaLong)
+      .asInstanceOf[org.apache.spark.sql.Encoder[Any]]
     val stream = new FramedSocketMicroBatchStream(
-      "127.0.0.1", server.getLocalPort, Long.MaxValue, 1 << 20, ordered = true)
+      "127.0.0.1", server.getLocalPort, Long.MaxValue, 1 << 20, ordered = true,
+      (dec, enc))
     try {
       sender.join()
       val deadline = System.nanoTime() + 30L * 1000000000L
@@ -195,10 +200,10 @@ class FramedSourceSpec extends AnyFunSuite {
       val ord = parts(0).asInstanceOf[FramedSocketOrderedPartition]
       assert(ord.slices.length >= 2,
         s"a ${n} KB stream must span multiple 1 MB chunks (got ${ord.slices.length} slice)")
-      val reader = new FramedSocketReaderFactory().createReader(parts(0))
+      val reader = FramedSocketInlineReaderFactory(dec, enc).createReader(parts(0))
       val got = scala.collection.mutable.ArrayBuffer.empty[String]
       while (reader.next())
-        got += new String(reader.get().getBinary(1), UTF_8).take(5)
+        got += reader.get().getUTF8String(0).toString.take(5)
       assert(got.toSeq === (0 until n).map(i => f"f$i%04d"),
         "strict FIFO across chunk boundaries")
     } finally {
