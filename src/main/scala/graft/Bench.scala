@@ -44,7 +44,7 @@ object Bench {
     // single contended run can't masquerade as a regression (or a
     // speedup), and `queries_detail` carries median/min/max/all runs so
     // round-over-round deltas read against the row's own spread.
-    val repeats = sys.env.getOrElse("GRAFT_BENCH_REPEATS", "3").toInt.max(1)
+    val repeats = envRepeats
 
     // GRAFT_BENCH_ONLY="d_cluster,d_ngram_jaccard" benches a subset (and
     // skips the streaming pack) — the iterate-on-one-operator loop.
@@ -100,37 +100,14 @@ object Bench {
     // still escapes (round-5 verdict: one table's analysis error here
     // zeroed the entire artifact). Either way the JSON below gets written.
     val streamOut =
-      if (only.isDefined) StreamBench.Out(Nil, Nil)
+      if (only.isDefined) StreamBench.Out(Nil, Nil, repeats)
       else try StreamBench.run(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] StreamBench.run failed: $e")
-        StreamBench.Out(Nil, Seq("stream_bench"))
+        StreamBench.Out(Nil, Seq("stream_bench"), repeats)
       }
     failed = streamOut.failed.toList.reverse ::: failed
-    // ---- Standalone wire reading (VERDICT r13 #2): the in-pack wire row
-    // is socket-pacing-sensitive (r13: driver 893 K vs builder 1.157 M
-    // rows/s on identical code), and an isolated wire-only run is the
-    // code-level reading. One re-entry into the stream rig AFTER the
-    // pack — same staging and per-trial teardown — published under its
-    // own key with the ≥900 K bar verdict. 5 trials, not the pack's 3
-    // (VERDICT r14 #6): a 3-trial median flips on a single slow trial; a
-    // 5-trial median survives two.
-    val wireStandalone: Option[StreamBench.Out] =
-      if (only.isDefined ||
-          !streamOut.rows.exists(_.name == WireRow)) None
-      else try {
-        val o = StreamBench.run(spark, sfDir,
-          onlyOverride = Some(Set(WireRow)),
-          repeatsOverride = Some(5))
-        failed = (o.failed.toList ::: failed).distinct
-        Some(o)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] standalone wire run failed: $e")
-        None
-      }
-    val streamRepeats = sys.env.getOrElse("GRAFT_STREAM_REPEATS", "3").toInt.max(1)
-    val artifact = benchOutJson(batchRows, repeats, streamOut, streamRepeats,
-      wireStandalone, failed, sfDir, only)
+    val artifact = benchOutJson(batchRows, repeats, streamOut, failed, sfDir, only)
     // The round-4 driver capture truncated the stdout tail and destroyed
     // the artifact (VERDICT r4 #1) — the full JSON goes to a file so log
     // interleaving / tail-truncation can never lose it. A
@@ -157,6 +134,11 @@ object Bench {
       failed, sfDir, spark.sparkContext.defaultParallelism, only))
     spark.stop()
   }
+
+  /** Trials per row, batch and stream alike: GRAFT_BENCH_REPEATS,
+    * default 3. */
+  private[graft] def envRepeats: Int =
+    sys.env.getOrElse("GRAFT_BENCH_REPEATS", "3").toInt.max(1)
 
   /** One batch row as measured: the wall seconds of every trial it ran;
     * the headline is their plain median. */
@@ -201,8 +183,7 @@ object Bench {
     * it back. Every string goes through json4s, so names, paths and
     * failure messages are escaped by construction. */
   private[graft] def benchOutJson(batch: Seq[BatchRow], repeats: Int,
-      stream: StreamBench.Out, streamRepeats: Int,
-      wireStandalone: Option[StreamBench.Out], failed: Seq[String],
+      stream: StreamBench.Out, failed: Seq[String],
       sf: String, subset: Option[Set[String]]): JObject = {
     val medians = batch.map(r => r.name -> r.median)
     val (total, totalCpuBound, totalWallBound) = splitTotals(medians)
@@ -213,18 +194,6 @@ object Bench {
         "max" -> JDouble(r.walls.max), "runs" -> dbl(r.walls)) ++
         (if (PinnedTwins(r.name)) List[JField]("pinned_twin" -> JBool(true)) else Nil))
     }
-    val wireJson = wireStandalone.flatMap(_.rows.find(_.name == WireRow)) match {
-      case Some(r) =>
-        JObject(
-          "median_sec" -> JDouble(r.medianSec),
-          "rows_per_sec" -> JInt(r.rowsPerSec.round),
-          // the fastest trial: the stall-robust floor reading
-          "rows_per_sec_best" -> JInt(r.trialsRps.max.round),
-          "trials_sec" -> dbl(r.trialsSec),
-          "trials_rps" -> JArray(r.trialsRps.map(x => JInt(x.round)).toList),
-          "meets_900k_bar" -> JBool(r.rowsPerSec >= WireBarRps))
-      case None => JNull
-    }
     JObject(List[JField](
       "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
       "subset" -> subset.fold[JValue](JBool(false))(names),
@@ -234,7 +203,7 @@ object Bench {
       "stream_wall_bound_queries" -> names(StreamWallBound),
       "pinned_twins" -> names(PinnedTwins),
       "repeats" -> JInt(repeats),
-      "stream_repeats" -> JInt(streamRepeats),
+      "stream_repeats" -> JInt(stream.repeats),
       "queries" -> obj(medians ++ streamRows.map(r => r.name -> r.medianSec))(JDouble(_)),
       "queries_detail" -> detail,
       // A query that failed on its FIRST run records Vector(0.0) and so
@@ -252,7 +221,6 @@ object Bench {
       // kill/restart/verify record — as top-level keys.
       stream.extra.map { case (k, v) => JField(k, v) } ++
       List[JField](
-        "stream_wire_standalone" -> wireJson,
         "stream_batch_latency" -> obj(streamRows.map(r => r.name -> r.latency)) {
           case (p50, mx) => JObject("p50_ms" -> JInt(p50), "max_ms" -> JInt(mx)) },
         "stream_state_provider" -> obj(streamRows.map(r => r.name -> r.provider))(JString(_)),
@@ -304,7 +272,4 @@ object Bench {
     *    bridged by a file handoff the downstream polls. */
   private[graft] val StreamWallBound: Set[String] = Set(
     WireRow, "stream_recovery", "stream_two_stage", "stream_topk")
-
-  /** The published wire done-bar (rows/s, standalone reading). */
-  private[graft] val WireBarRps: Double = 900000.0
 }

@@ -3,8 +3,9 @@ package graft
 /** Dev tool: `runMain graft.ExplainAll <outDir> <q1,q2,...> [sfDir] [runs]`
   * — for each named query, write its formatted physical plan to
   * `<outDir>/<name>.txt` and print `runs` noop-write timings (the Bench
-  * measurement shape) as one line per query. One JVM for the whole list —
-  * the per-run Explain loop paid ~30 s of JVM/codegen warmup per query.
+  * measurement shape) as one line per query. One JVM for the whole list,
+  * so JVM/codegen warmup (~30 s) is paid once; a single-query list is
+  * the iterate-on-one-plan loop.
   * Used to produce the r17 `plans/r17/<query>_{before,after}.txt`
   * artifacts and the per-change timing evidence in OPTIMIZATION_r17.md. */
 object ExplainAll {

@@ -245,15 +245,22 @@ object WireQueries {
   def pGenSource(s: SparkSession, dir: String): DataFrame = {
     implicit val ss: SparkSession = s
     val view = s"p_gen_src_${System.nanoTime()}"
+    // GenSourceN rows per second: the rate source's first full second
+    // emits exactly the indices the entry keeps, so the sink holds about
+    // GenSourceN rows. The wait reads the query's own progress, never the
+    // sink: the rate source emits indices in order, so once the processed
+    // rows reach GenSourceN every index below it is in the sink, which is
+    // then read once. (processAllAvailable is no wait here: a rate source
+    // always has a next second of data, so on a slow host it may never
+    // return.)
     val h = Graft.source("gen-src", GenSource[(Long, String, Long)](
         i => (i, "e" + (i % 7), (i * 37) % 1000),
-        rowsPerSecond = 200000, numPartitions = 4))
+        rowsPerSecond = GenSourceN, numPartitions = 4))
       .toSink(MemorySink(view))
     try {
       require(awaitCond(180000) {
-        h.processAllAvailable()
-        val t = s.table(view)
-        !t.isEmpty && t.agg(max(col("_1._1"))).head().getLong(0) >= GenSourceN - 1
+        h.query.foreach(_.exception.foreach(throw _))
+        h.query.exists(_.recentProgress.map(_.numInputRows).sum >= GenSourceN)
       }, "rate source never reached the generation mark")
     } finally h.stop()
     s.table(view)

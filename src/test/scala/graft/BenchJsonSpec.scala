@@ -69,10 +69,10 @@ class BenchJsonSpec extends AnyFunSuite {
     val wire = StreamBench.RowOut(Bench.WireRow, 4.0, Seq(4.0, 4.2, 3.9),
       1000000.0, Seq(1000000.0, 950000.0, 1020000.0), (120L, 300L), "fmgws+hdfs",
       JArray(Nil))
-    val stream = StreamBench.Out(Seq(wire), Nil,
+    val stream = StreamBench.Out(Seq(wire), Nil, repeats = 5,
       extra = Seq("stream_recovery_detail" -> JArray(List(JString(awkward)))))
-    val body = Bench.benchOutJson(batch, repeats = 3, stream, streamRepeats = 3,
-      Some(stream), Seq(awkward), awkward, subset = None)
+    val body = Bench.benchOutJson(batch, repeats = 3, stream,
+      Seq(awkward), awkward, subset = None)
     val js = parse(org.json4s.jackson.JsonMethods.compact(body))
     assert((js \ "sf") === JString(awkward))
     assert((js \ "failed") === JArray(List(JString(awkward))))
@@ -88,18 +88,15 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(gen \ "max" === JDouble(5.0))
     assert(gen \ "runs" === JArray(List(JDouble(1.0), JDouble(5.0), JDouble(1.1))))
     assert(gen \ "evidence_ms" === JNothing)
-    assert((js \ "stream_wire_standalone") \ "median_sec" === JDouble(4.0))
-    assert((js \ "stream_wire_standalone") \ "meets_900k_bar" === JBool(true))
-    for (k <- Seq("median_clean_sec", "cal_median_sec", "cal_adjacent_sec",
-        "spiked", "wall_rerun", "wall_outliers"))
-      assert((js \ "stream_wire_standalone") \ k === JNothing, k)
+    // the stream pack's trial count comes from its own Out
+    assert((js \ "stream_repeats") === JInt(5))
     // the removed selection, normalization and adjudication keys stay gone
     for (k <- Seq("committed_selection", "total_calibrated", "ref_cal_sec",
         "stream_wire_deployment", "stream_staged_replay",
         "calibration_sec", "calibration_series", "batch_spiked_trials",
         "stream_round_health", "stream_median_clean",
         "stream_spiked_trials", "stream_wall_rerun_trials",
-        "stream_calibration_series", "drill"))
+        "stream_calibration_series", "drill", "stream_wire_standalone"))
       assert((js \ k) === JNothing, k)
   }
 

@@ -19,15 +19,15 @@ except ImportError:  # pandas is driver-side tooling; degrade to value mode
     pd = None
 
 
-def driver_compare(files, con, sql):
-    """Emulate the driver's pandas-path compare (CORRECTNESS hash gate):
-    spark output read via pyarrow->pandas, oracle via duckdb .df() (this
-    is where e.g. HUGEINT becomes float64), columns sorted by name, rows
-    sorted by all columns, then dtype-strict exact equality — the local
-    stand-in for the driver's sorted-row hash. Returns (status, detail).
+def pandas_compare(files, odf):
+    """Emulate the pandas-path compare of the CORRECTNESS hash gate:
+    spark output read via pyarrow->pandas, the oracle result `odf` read
+    via duckdb .df() (this is where e.g. HUGEINT becomes float64), columns
+    sorted by name, rows sorted by all columns, then dtype-strict exact
+    equality — the local stand-in for the sorted-row hash. Returns
+    (status, detail).
     """
     sdf = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-    odf = con.execute(sql).df()
     # Equal-instant timestamps pass the real driver's hash whatever the
     # storage unit (r4: q_events_tumbling, datetime64[ns] vs [us], green),
     # so normalize datetime units before the strict dtype check below —
@@ -85,7 +85,7 @@ def rows_of(rel_rows, colnames):
 def close(a, b):
     if isinstance(a, float) and isinstance(b, float):
         # both-NaN is equal, like a hash of the bits — the driver's
-        # pandas-path compare (driver_compare) and the real hash gate
+        # pandas-path compare (pandas_compare) and the real hash gate
         # both treat it so; before this the value gate alone FAILed a
         # both-NaN cell the driver would pass (r14 gate-tooling sweep)
         if math.isnan(a) and math.isnan(b):
@@ -123,7 +123,13 @@ def main():
             print(f"[{'rows-only' if ok else 'FAIL'}] {name}: {len(got)} rows "
                   f"{'OK' if ok else 'EMPTY!'}")
             continue
-        exp = con.execute(oracle[name]).fetchall()
+        # The oracle SQL runs once, into a temp table both gates read:
+        # the value gate through fetchall, the pandas gate through .df().
+        # (Each Spark output keeps its two readers, duckdb and pyarrow:
+        # those are what the two gates compare, and both reads together
+        # take well under a second for all outputs.)
+        con.execute(f"CREATE OR REPLACE TEMP TABLE oracle_result AS {oracle[name]}")
+        exp = con.execute("SELECT * FROM oracle_result").fetchall()
         exp_cols = [c[0] for c in con.description]
         g_rows, g_names = rows_of(got, got_cols)
         e_rows, e_names = rows_of(exp, exp_cols)
@@ -150,7 +156,8 @@ def main():
         # equal result can still hash-mismatch driver-side when the two
         # readers disagree on dtype (t_mix_domains r5: HUGEINT->float64).
         if status == "PASS" and pd is not None:
-            dstat, ddetail = driver_compare(files, con, oracle[name])
+            dstat, ddetail = pandas_compare(
+                files, con.execute("SELECT * FROM oracle_result").df())
             if dstat != "PASS":
                 # keep ERR distinct from FAIL — the real driver records
                 # `err` as its own field and the round discipline demands
