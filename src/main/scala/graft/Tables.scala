@@ -1,13 +1,17 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet star schema (see TESTDATA.md).
   *
   * All readers go through [[Tables.load]] so every query inherits the same
   * scan behavior: parquet vectorized reads, predicate pushdown and column
-  * pruning are left to Catalyst (we never cache or materialize here — at
-  * 100 TB the scan must stream).
+  * pruning are left to Catalyst (schemas are memoized per session, rows
+  * never are — at 100 TB the scan must stream).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -23,9 +27,58 @@ object Tables {
     */
   val alwaysBroadcast: Set[String] = Set("region", "nation")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    if (alwaysBroadcast(name)) org.apache.spark.sql.functions.broadcast(df) else df
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    scan(spark, sfDir, name)._1
+
+  /** The table's DataFrame and the file statuses its schema is keyed on.
+    *
+    * `spark.read.parquet(path)` without a schema runs parquet schema
+    * inference as one Spark job on every call, at construction time. The
+    * inferred schema is memoized per session and per path, keyed on the
+    * `(name, length, modification time)` of the path and of the entries
+    * it lists, and the table is then read with `.schema(s)`, which starts
+    * no job. A table rewritten in place lists differently and is inferred
+    * again; the first inference of each layout is Spark's own, so the
+    * schema is exactly what an uncached read returns. */
+  private def scan(spark: SparkSession, sfDir: String, name: String)
+      : (DataFrame, Seq[FileStatus]) = {
+    val path = s"$sfDir/$name.parquet"
+    val files = listing(spark, path)
+    val df = spark.read.schema(schemaOf(spark, path, files)).parquet(path)
+    (if (alwaysBroadcast(name)) org.apache.spark.sql.functions.broadcast(df) else df, files)
+  }
+
+  /** The path's own status, then its entries when it is a directory. */
+  private def listing(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val self = fs.getFileStatus(p)
+    if (self.isDirectory) self +: fs.listStatus(p).toSeq else Seq(self)
+  }
+
+  private type Fingerprint = Seq[(String, Long, Long)]
+
+  /** Session → path → the fingerprint its schema was inferred at. Weak in
+    * the session, so a dropped session's entries go with it; per session,
+    * because inference reads session confs (`nanosAsLong`, NTZ inference;
+    * changing one on a live session does not re-infer). One entry per
+    * path: a rewrite replaces it. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Fingerprint, StructType)]]()
+
+  private def schemaOf(spark: SparkSession, path: String, files: Seq[FileStatus]): StructType = {
+    val key: Fingerprint =
+      files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+    val known = schemas.synchronized {
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+    }
+    known.get(path) match {
+      case (`key`, schema) => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        known.put(path, (key, schema))
+        schema
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
@@ -80,29 +133,26 @@ object Tables {
     * corpus that already arrives as many files (the 100 TB case) is never
     * gratuitously shuffled — then the scan's own parallelism wins.
     *
-    * The estimate uses the scan's own file listing (`inputFiles`) plus a
-    * 128 MB-split lower bound on task count, NOT `df.rdd.getNumPartitions`
-    * (r5 verdict: that builds the physical RDD plan at construction time).
-    * File sizes are only consulted when the file count alone is below
-    * target, so the 100 TB many-file path never issues per-file RPCs. */
+    * The estimate uses the listing [[scan]] already made for the schema
+    * key plus a 128 MB-split lower bound on task count, NOT
+    * `df.rdd.getNumPartitions` (r5 verdict: that builds the physical RDD
+    * plan at construction time), and issues no file-system call of its
+    * own. Data files are the listed files whose names do not start with
+    * `_` or `.` (Spark's own rule for hidden files). The listing is one
+    * level deep: files under partition directories are not counted, so a
+    * partitioned corpus is always repartitioned. */
   def documents(s: SparkSession, d: String): DataFrame = {
-    val df = load(s, d, "documents")
+    val (df, listed) = scan(s, d, "documents")
     val target = s.sparkContext.defaultParallelism
-    val files = df.inputFiles
+    val files = listed.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
     val estTasks =
       if (files.length >= target) files.length
       // zero listed data files (schema resolved from a metadata summary,
-      // or all parts compacted away): nothing to size by — fall through
-      // to the repartition branch instead of files.head crashing a
-      // best-effort estimate
-      else if (files.isEmpty) 0
-      else {
-        val fs = new org.apache.hadoop.fs.Path(files.head)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val bytes = files.map(f =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-        math.max(files.length.toLong, bytes / (128L << 20)).toInt
-      }
+      // or all parts compacted away) estimate 0 tasks: repartition
+      else math.max(files.length.toLong, files.map(_.getLen).sum / (128L << 20)).toInt
     if (estTasks < target) df.repartition(target) else df
   }
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

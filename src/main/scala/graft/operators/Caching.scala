@@ -33,7 +33,13 @@ import org.apache.spark.storage.StorageLevel
 object Caching {
 
   /** Compute-once subtree reuse for a plan referenced by several
-    * downstream branches. Lazy — nothing runs until the result does.
+    * downstream branches. NOT lazy under AQE (Spark's default):
+    * `queryExecution.toRdd` runs the subtree's shuffle-map stages when
+    * `reuse` is called, before the result's action. A grouped `range`
+    * runs 1 job at `toRdd`; d_ngram_jaccard runs 8 per build. The two
+    * lazy variants measured on d_ngram_jaccard (no cache; an unregistered
+    * lazy InMemoryRelation) were not faster — SCALING.md, "Table loads
+    * start no job".
     *
     * The cached rows are InternalRow (UnsafeRow byte arrays) via
     * [[org.apache.spark.sql.GraftSqlBridge]], NOT external `Row` objects:

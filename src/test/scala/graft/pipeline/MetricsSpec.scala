@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.TimeUnit
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Histogram bin math vectors from core/metrics/histogram.pony:21-66:
@@ -37,6 +39,15 @@ class MetricsSpec extends AnyFunSuite {
       s"a recorded 8 reports under EXCLUSIVE bound 16, got ${h.report}")
   }
 
+  /** Polls until `key`'s metrics satisfy `done`, for at most 10 s; the
+    * caller's assertion then reports what was there if they never did. */
+  private def awaitMetrics(listener: GraftMetricsListener, key: String)(
+      done: GraftMetricsListener#QueryMetrics => Boolean): Unit = {
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
+    while (!listener.metricsFor(key).exists(done) && System.nanoTime() < deadline)
+      Thread.sleep(10)
+  }
+
   // r13 sweep: the listener was shipped unregistered and untested, and
   // NPE'd on queries started without a queryName (null map key) — the
   // bus swallowed the NPE, so such a query's metrics silently vanished.
@@ -53,6 +64,9 @@ class MetricsSpec extends AnyFunSuite {
       val q = src.toDS().writeStream.format("noop").start()
       q.processAllAvailable()
       q.stop()
+      // the listener bus is asynchronous: the batch's QueryProgressEvent may
+      // land after stop() returns
+      awaitMetrics(listener, q.id.toString)(_.rows == 3L)
       val m = listener.metricsFor(q.id.toString)
       assert(m.exists(_.rows == 3L),
         s"unnamed query must be keyed by its id, got ${listener.summary.keySet}")
@@ -61,6 +75,7 @@ class MetricsSpec extends AnyFunSuite {
       src.addData(4L, 5L)
       named.processAllAvailable()
       named.stop()
+      awaitMetrics(listener, "metrics-named")(_.batches >= 1L)
       assert(listener.metricsFor("metrics-named").exists(_.batches >= 1L))
     } finally spark.streams.removeListener(listener)
   }

@@ -1,5 +1,10 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 
@@ -112,6 +117,109 @@ class TablesSpec extends AnyFunSuite {
       assert(violations === 0L,
         s"$sf: $violations same-user event pairs within one microsecond — " +
           "p_market_spread's replay/ASOF-oracle equivalence is broken")
+    }
+  }
+
+  /** A fresh directory holding one parquet table, removed after `body`. */
+  private def withTempTables[T](body: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory("graft_tables").toFile
+    try body(d.toString) finally FileUtils.deleteDirectory(d)
+  }
+
+  test("a second load of an unchanged table starts no Spark job") {
+    val sc = spark.sparkContext
+    val group = s"tables-no-job-${java.util.UUID.randomUUID()}"
+    val sentinelKey = "graft.tables.sentinel"
+    val jobs = new AtomicInteger
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = e.properties
+        if (props != null && props.getProperty("spark.jobGroup.id") == group) {
+          if (props.getProperty(sentinelKey) != null) sentinelSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    // the first loads may infer (and start jobs); only the second ones count
+    graft.Tables.load(spark, dir, "lineitem")
+    graft.Tables.events(spark, dir)
+    graft.Tables.documents(spark, dir)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "second loads")
+    try {
+      assert(graft.Tables.load(spark, dir, "lineitem").schema.nonEmpty)
+      assert(graft.Tables.events(spark, dir).schema.nonEmpty)
+      assert(graft.Tables.documents(spark, dir).schema.nonEmpty)
+      // the listener bus delivers in order: once the one-task sentinel's
+      // start is seen, every job the loads started has been seen too
+      sc.setLocalProperty(sentinelKey, "1")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(10, TimeUnit.SECONDS), "the sentinel job was never delivered")
+      assert(jobs.get == 0, s"second loads of unchanged tables started ${jobs.get} Spark job(s)")
+    } finally {
+      sc.setLocalProperty(sentinelKey, null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a table rewritten in place is loaded with its new schema and rows") {
+    import spark.implicits._
+    withTempTables { d =>
+      val path = s"$d/t.parquet"
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(path)
+      val before = graft.Tables.load(spark, d, "t")
+      assert(before.schema.fieldNames.toSeq == Seq("k", "v"))
+      assert(before.as[(Long, String)].collect().sorted.toSeq == Seq((1L, "a"), (2L, "b")))
+
+      Seq((1.5, 7, true), (2.5, 8, false), (3.5, 9, true)).toDF("x", "y", "z")
+        .write.mode("overwrite").parquet(path)
+      val after = graft.Tables.load(spark, d, "t")
+      assert(after.schema == spark.read.parquet(path).schema)
+      assert(after.schema.fieldNames.toSeq == Seq("x", "y", "z"))
+      assert(after.as[(Double, Int, Boolean)].collect().sorted.toSeq ==
+        Seq((1.5, 7, true), (2.5, 8, false), (3.5, 9, true)))
+    }
+  }
+
+  test("four threads loading one table at once get the same schema") {
+    import spark.implicits._
+    withTempTables { d =>
+      val path = s"$d/t.parquet"
+      Seq((1L, "a", 0.5), (2L, "b", 1.5)).toDF("k", "v", "w").write.parquet(path)
+      val expected = spark.read.parquet(path).schema
+      val pool = Executors.newFixedThreadPool(4)
+      try {
+        val go = new CountDownLatch(1)
+        val loads = (1 to 4).map { _ =>
+          pool.submit(new Callable[StructType] {
+            def call(): StructType = { go.await(); graft.Tables.load(spark, d, "t").schema }
+          })
+        }
+        go.countDown()
+        val schemas = loads.map(_.get(60, TimeUnit.SECONDS))
+        assert(schemas.forall(_ == expected), s"expected $expected, got ${schemas.distinct}")
+      } finally pool.shutdownNow()
+    }
+  }
+
+  test("documents repartitions one small file and leaves many files as they are") {
+    import spark.implicits._
+    val target = spark.sparkContext.defaultParallelism
+    def repartitioned(d: String): Boolean =
+      graft.Tables.documents(spark, d).queryExecution.logical.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+      }.isDefined
+    withTempTables { d =>
+      (1 to 8).map(i => (i.toLong, s"text $i")).toDF("doc_id", "text")
+        .coalesce(1).write.parquet(s"$d/documents.parquet")
+      assert(repartitioned(d), "one small file must be spread over the cluster")
+    }
+    withTempTables { d =>
+      (1 to 4 * target).map(i => (i.toLong, s"text $i")).toDF("doc_id", "text")
+        .repartition(2 * target).write.parquet(s"$d/documents.parquet")
+      assert(!repartitioned(d), s"${2 * target} files already give the scan its parallelism")
     }
   }
 }
