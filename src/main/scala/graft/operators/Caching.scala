@@ -48,14 +48,7 @@ object Caching {
     * bench's d_* family several times slower and bled GC pressure into
     * unrelated queries. UnsafeRow copies are one compact allocation per
     * row, read back with zero conversion. */
-  def reuse(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val rdd = org.apache.spark.sql.GraftSqlBridge.toInternalRowRdd(df)
-      .map(_.copy()) // the scan reuses one mutable buffer per partition
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    org.apache.spark.sql.GraftSqlBridge.fromInternalRowRdd(spark, rdd, schema)
-  }
+  def reuse(df: DataFrame): DataFrame = reuseWithHandle(df)._2
 
   /** [[reuse]] that also returns the persisted RDD for explicit lifecycle
     * control — iterative loops (d_cluster) unpersist the previous round
@@ -68,7 +61,7 @@ object Caching {
     val spark = df.sparkSession
     val schema = df.schema
     val rdd = org.apache.spark.sql.GraftSqlBridge.toInternalRowRdd(df)
-      .map(_.copy())
+      .map(_.copy()) // the scan reuses one mutable buffer per partition
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
     (rdd, org.apache.spark.sql.GraftSqlBridge.fromInternalRowRdd(spark, rdd, schema))
   }

@@ -3,18 +3,12 @@ package graft.pipeline
 import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.{Map => JMap}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The connector-protocol ingress: at-least-once framed TCP with
   * points-of-reference acknowledgment, the ack half of the reference's
@@ -114,38 +108,9 @@ object ConnectorProtocol {
   }
 }
 
-final class ConnectorSocketTableProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = FramedLog.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new ConnectorSocketTable(properties.asScala.toMap)
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-final class ConnectorSocketTable(options: Map[String, String]) extends Table with SupportsRead {
-  private def req(k: String): String = options.getOrElse(k,
-    throw new IllegalArgumentException(s"${ConnectorProtocol.ShortName} requires a '$k' option"))
-  override def name(): String = s"${ConnectorProtocol.ShortName}:${req("host")}:${req("port")}"
-  override def schema(): StructType = FramedLog.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = FramedLog.Schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new ConnectorSocketMicroBatchStream(req("host"), req("port").toInt,
-            options.get("maxFramesPerTrigger").map(_.toLong).getOrElse(Long.MaxValue),
-            options.get("maxBufferedFrames").map(_.toInt).getOrElse(1 << 20),
-            options.get("cookie"),
-            options.get("replayTimeoutMs").map(_.toLong).getOrElse(30000L))
-      }
-    }
-}
-
 final class ConnectorSocketMicroBatchStream(host: String, port: Int,
     maxFramesPerTrigger: Long, maxBufferedFrames: Int,
-    cookie: Option[String], replayTimeoutMs: Long)
+    cookie: Option[String], replayTimeoutMs: Long, rows: FramedReaderFactory)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   import ConnectorProtocol._
 
@@ -434,10 +399,10 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
             "retain frames past the last ACK")
       val lo = (s - base).toInt
       val hi = (e - base).toInt
-      Array(FramedArrayPartition(s, frames.slice(lo, hi).toArray))
+      Array(FramedArrayPartition(frames.slice(lo, hi).toArray))
     }
   }
-  override def createReaderFactory(): PartitionReaderFactory = new FramedArrayReaderFactory
+  override def createReaderFactory(): PartitionReaderFactory = rows
 
   /** Batch durably committed: trim the local buffer and report progress
     * to the sender — the ACK that lets it trim ITS replay buffer. The
@@ -494,9 +459,31 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
   }
 }
 
+/** One batch of the connector buffer: the payloads of consecutive
+  * message ids. The ALO connector path buffers per frame (its replay/ACK
+  * protocol is frame-addressed and its volumes are credit-bounded), so it
+  * doesn't need the chunked layout the throughput-oriented socket source
+  * uses. */
+final case class FramedArrayPartition(payloads: Array[Array[Byte]])
+    extends FramedPartition {
+  override def frames(): FrameWalk = new FrameWalk {
+    private var i = 0
+    override def advance(): Boolean = i < payloads.length && {
+      bytes = payloads(i)
+      len = bytes.length
+      i += 1
+      true
+    }
+  }
+}
+
 /** DSL SourceConfig over the connector protocol: at-least-once resumable
   * socket ingress (vs [[FramedSocketSource]]'s at-most-once raw framing).
-  * Same [[FramedDecoder]] contract as the other framed sources. */
+  * Same [[FramedDecoder]] contract and in-scan decode as the other framed
+  * sources. A decode-time drop is safe under ALO: the frame is still
+  * counted and ACKed by the protocol layer (offsets advance whether or not
+  * the decoder keeps it), so the sender trims its replay buffer and a
+  * dropped heartbeat is never replayed. */
 final case class ConnectorSocketSource[T](
     host: String,
     port: Int,
@@ -506,22 +493,8 @@ final case class ConnectorSocketSource[T](
     maxBufferedFrames: Int = 1 << 20,
     replayTimeoutMs: Long = 30000L)(implicit enc: Encoder[T])
     extends SourceConfig[T] {
-  def load(spark: SparkSession): Dataset[(T, Long)] = {
-    var reader = spark.readStream
-      .format(classOf[ConnectorSocketTableProvider].getName)
-      .option("host", host).option("port", port.toString)
-      .option("maxBufferedFrames", maxBufferedFrames.toString)
-      .option("replayTimeoutMs", replayTimeoutMs.toString)
-    cookie.foreach(c => reader = reader.option("cookie", c))
-    if (maxFramesPerTrigger != Long.MaxValue)
-      reader = reader.option("maxFramesPerTrigger", maxFramesPerTrigger.toString)
-    val dec = decoder
-    val tupEnc = Encoders.tuple(enc, Encoders.scalaLong)
-    // decode-time drop is SAFE under ALO: the frame is still counted and
-    // ACKed by the protocol layer below (offsets advance whether or not
-    // the decoder keeps the frame), so the sender trims its replay buffer
-    // and a dropped heartbeat is never replayed
-    reader.load().select("payload").as[Array[Byte]](Encoders.BINARY)
-      .flatMap { bytes => dec.decodeOpt(bytes).map(t => (t, dec.eventTimeNs(t))) }(tupEnc)
-  }
+  def load(spark: SparkSession): Dataset[(T, Long)] =
+    FramedTable.load(spark, s"${ConnectorProtocol.ShortName}:$host:$port", decoder, enc)(rows =>
+      new ConnectorSocketMicroBatchStream(host, port, maxFramesPerTrigger, maxBufferedFrames,
+        cookie, replayTimeoutMs, rows))
 }

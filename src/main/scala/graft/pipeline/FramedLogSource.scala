@@ -1,19 +1,10 @@
 package graft.pipeline
 
 import java.io.RandomAccessFile
-import java.util.{Map => JMap}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.{BinaryType, LongType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource-v2 micro-batch source that TAILS one append-only
   * length-framed binary log — the Spark-native form of the reference's
@@ -26,8 +17,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * resumes mid-file and picks up frames appended after the query started —
   * the live-tail contract of the reference's connector sources.
   *
-  * Schema: `offset BIGINT, payload BINARY` — decode stays in the DSL
-  * (the [[FramedDecoder]] the TCP/file sources share). Offsets advance
+  * Each frame decodes inside the scan with the [[FramedDecoder]] the
+  * TCP/file sources share ([[FramedReaderFactory]]). Offsets advance
   * only over COMPLETE frames; a partially-written trailing frame is left
   * for the next batch (a writer appends frame-atomically, so this is the
   * reference's EOS-pending state, not an error).
@@ -40,9 +31,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 object FramedLog {
   val ShortName = "graft-framed-log"
-  val Schema: StructType = new StructType()
-    .add("offset", LongType, nullable = false)
-    .add("payload", BinaryType, nullable = false)
 
   /** Walk frame headers from `from`, returning the last complete-frame end
     * ≤ the current file length, advancing at most `maxBytes`. Buffered:
@@ -87,49 +75,14 @@ object FramedLog {
   }
 }
 
-final class FramedLogTableProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = FramedLog.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new FramedLogTable(properties.asScala.toMap)
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-final class FramedLogTable(options: Map[String, String]) extends Table with SupportsRead {
-  private val path = options.getOrElse("path",
-    throw new IllegalArgumentException("graft-framed-log requires a 'path' option"))
-  override def name(): String = s"${FramedLog.ShortName}:$path"
-  override def schema(): StructType = FramedLog.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new FramedLogScan(path,
-        options.get("maxBytesPerTrigger").map(_.toLong).getOrElse(Long.MaxValue))
-    }
-}
-
-final class FramedLogScan(path: String, maxBytesPerTrigger: Long) extends Scan {
-  override def readSchema(): StructType = FramedLog.Schema
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new FramedLogMicroBatchStream(path, maxBytesPerTrigger)
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val end = FramedLog.frameAlignedEnd(path, 0L, Long.MaxValue)
-      Array(FramedLogPartition(path, 0L, end))
-    }
-    override def createReaderFactory(): PartitionReaderFactory = new FramedLogReaderFactory
-  }
-}
-
 /** Offset = frame-aligned byte position (the connector protocol's
   * point-of-reference). */
 final case class BytePos(pos: Long) extends Offset {
   override def json(): String = pos.toString
 }
 
-final class FramedLogMicroBatchStream(path: String, maxBytesPerTrigger: Long)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+final class FramedLogMicroBatchStream(path: String, maxBytesPerTrigger: Long,
+    rows: FramedReaderFactory) extends MicroBatchStream with SupportsTriggerAvailableNow {
   @volatile private var availableNowCap: Option[Long] = None
   // Highest frame-aligned position any walk has proven. The log is
   // append-only, so an aligned position stays aligned forever — progress
@@ -171,62 +124,45 @@ final class FramedLogMicroBatchStream(path: String, maxBytesPerTrigger: Long)
     val e = end.asInstanceOf[BytePos].pos
     if (e <= s) Array.empty else Array(FramedLogPartition(path, s, e))
   }
-  override def createReaderFactory(): PartitionReaderFactory = new FramedLogReaderFactory
+  override def createReaderFactory(): PartitionReaderFactory = rows
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
+/** The frames of `path` in `[start, end)`, one contiguous frame-aligned
+  * region: a single buffered sequential pass (a per-frame
+  * seek+readInt+readFully would pay 3 syscalls per frame). The payload
+  * buffer is reused across frames. */
 final case class FramedLogPartition(path: String, start: Long, end: Long)
-    extends InputPartition
-
-final class FramedLogReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FramedLogPartition]
-    new PartitionReader[InternalRow] {
-      // [p.start, p.end) is one contiguous frame-aligned region: a single
-      // buffered sequential pass (the former per-frame seek+readInt+
-      // readFully paid 3 syscalls per frame).
-      private val raw = new RandomAccessFile(p.path, "r")
-      private val in: java.io.DataInputStream = {
-        raw.seek(p.start)
-        new java.io.DataInputStream(new java.io.BufferedInputStream(
-          java.nio.channels.Channels.newInputStream(raw.getChannel), 256 << 10))
-      }
-      private var pos = p.start
-      private var row: InternalRow = _
-      override def next(): Boolean =
-        if (pos >= p.end) false
-        else {
-          val len = in.readInt()
-          require(pos + 4 + len <= p.end, s"frame at $pos crosses batch end ${p.end}")
-          val payload = new Array[Byte](len)
-          in.readFully(payload)
-          row = new GenericInternalRow(Array[Any](pos, payload))
-          pos += 4 + len
-          true
-        }
-      override def get(): InternalRow = row
-      override def close(): Unit = raw.close()
+    extends FramedPartition {
+  override def frames(): FrameWalk = new FrameWalk {
+    private val raw = new RandomAccessFile(path, "r")
+    private val in: java.io.DataInputStream = {
+      raw.seek(start)
+      new java.io.DataInputStream(new java.io.BufferedInputStream(
+        java.nio.channels.Channels.newInputStream(raw.getChannel), 256 << 10))
     }
+    private var pos = start
+    override def advance(): Boolean = pos < end && {
+      len = in.readInt()
+      require(pos + 4 + len <= end, s"frame at $pos crosses batch end $end")
+      if (bytes.length < len) bytes = new Array[Byte](len)
+      in.readFully(bytes, 0, len)
+      pos += 4 + len
+      true
+    }
+    override def close(): Unit = raw.close()
   }
 }
 
 /** DSL SourceConfig over the v2 source: decode each frame with the same
-  * [[FramedDecoder]] contract the file/TCP paths use. */
+  * [[FramedDecoder]] contract the file/TCP paths use, inside the scan. */
 final case class FramedLogSource[T](
     path: String,
     decoder: FramedDecoder[T],
     maxBytesPerTrigger: Long = Long.MaxValue)(implicit enc: Encoder[T])
     extends SourceConfig[T] {
-  def load(spark: SparkSession): Dataset[(T, Long)] = {
-    val reader = spark.readStream
-      .format(classOf[FramedLogTableProvider].getName)
-      .option("path", path)
-    val df = (if (maxBytesPerTrigger != Long.MaxValue)
-      reader.option("maxBytesPerTrigger", maxBytesPerTrigger.toString) else reader).load()
-    val dec = decoder
-    val tupEnc = Encoders.tuple(enc, Encoders.scalaLong)
-    df.select("payload").as[Array[Byte]](Encoders.BINARY)
-      .flatMap { bytes => dec.decodeOpt(bytes).map(t => (t, dec.eventTimeNs(t))) }(tupEnc)
-  }
+  def load(spark: SparkSession): Dataset[(T, Long)] =
+    FramedTable.load(spark, s"${FramedLog.ShortName}:$path", decoder, enc)(rows =>
+      new FramedLogMicroBatchStream(path, maxBytesPerTrigger, rows))
 }

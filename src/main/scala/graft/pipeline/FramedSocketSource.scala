@@ -2,18 +2,16 @@ package graft.pipeline
 
 import java.io.EOFException
 import java.net.Socket
-import java.util.{Map => JMap}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.graft.TableBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -56,117 +54,38 @@ object FramedSocket {
       ((b(pos + 2) & 0xff) << 8) | (b(pos + 3) & 0xff)
 }
 
-/** Driver-side handoff of the in-scan decode configuration
-  * ([[FramedSocketSource]]): DSv2 providers are
-  * instantiated by reflection and receive string options only, so the
-  * decoder + row encoder can't ride the option map — `load()` registers
-  * them here under a fresh key and passes the KEY as an option. Only the
-  * driver consults the registry (schema inference + stream
-  * construction); the reader factory ships the actual objects to
-  * executors, so this is cluster-safe.
-  *
-  * Lifecycle (VERDICT r16 next #6 — the map must not grow for the
-  * driver's lifetime): an entry lives only for the duration of ONE
-  * `load()` call. The provider's `inferSchema` reads it ([[apply]]),
-  * then `getTable` CONSUMES it ([[consume]]) into the
-  * [[FramedSocketTable]] instance, which Spark's streaming plan
-  * retains — restart-after-stop of the same DataFrame re-uses that
-  * resolved table, never the registry, so eviction costs no restart
-  * semantics. N load/start/stop cycles leave the map exactly as it
-  * started (InlineRegistryLifecycleSpec). */
-private[pipeline] object FramedSocketInlineRegistry {
-  private val entries = new java.util.concurrent.ConcurrentHashMap[
-    String, (FramedDecoder[Any], Encoder[Any])]()
-  def register(decoder: FramedDecoder[_], enc: Encoder[_]): String = {
-    // fail-fast on an unsupported Encoder implementation HERE, on the
-    // driver at load() time, instead of a MatchError at first read
-    // (ADVICE r16): schemaFor forces the encoder match
-    schemaFor(enc.asInstanceOf[Encoder[Any]])
-    val key = java.util.UUID.randomUUID().toString
-    entries.put(key, (decoder.asInstanceOf[FramedDecoder[Any]],
-      enc.asInstanceOf[Encoder[Any]]))
-    key
-  }
-  private def missing(key: String): Nothing = throw new IllegalArgumentException(
-    s"no inline decoder registered under '$key' — the 'decoderKey' " +
-      s"option is ${FramedSocket.ShortName}-internal (set by " +
-      "FramedSocketSource.load on this driver, and consumed by the one " +
-      "table resolution of that load), not a user-facing option")
-  def apply(key: String): (FramedDecoder[Any], Encoder[Any]) = {
-    val e = entries.get(key)
-    if (e == null) missing(key) else e
-  }
-  /** Remove-and-return: the table resolution at the end of `load()` takes
-    * ownership of the entry, returning the map to its prior size. */
-  def consume(key: String): (FramedDecoder[Any], Encoder[Any]) = {
-    val e = entries.remove(key)
-    if (e == null) missing(key) else e
-  }
-  private[pipeline] def size: Int = entries.size
-  /** The catalyst serializer for the registered row encoder — built on
-    * demand (executor side too: the factory re-derives it from the
-    * shipped Encoder, which is a serializable AgnosticEncoder). */
-  def serializerFor(enc: Encoder[Any]): Any => org.apache.spark.sql.catalyst.InternalRow = {
-    import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
-    val ee = enc match {
-      case e: ExpressionEncoder[Any @unchecked] => e
-      case a: AgnosticEncoder[Any @unchecked]   => ExpressionEncoder(a)
-      case other => throw new IllegalArgumentException(unsupportedEncoder(other))
-    }
-    val ser = ee.createSerializer()
-    (v: Any) => ser(v)
-  }
-  def schemaFor(enc: Encoder[Any]): StructType = {
-    import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
-    enc match {
-      case e: ExpressionEncoder[Any @unchecked] => e.schema
-      case a: AgnosticEncoder[Any @unchecked]   => ExpressionEncoder(a).schema
-      case other => throw new IllegalArgumentException(unsupportedEncoder(other))
-    }
-  }
-  private def unsupportedEncoder(enc: Encoder[_]): String =
-    s"unsupported Encoder implementation ${enc.getClass.getName} for the " +
-      "in-scan decode path: the inline reader derives its catalyst " +
-      "serializer from an ExpressionEncoder or AgnosticEncoder (every " +
-      "Encoders.* / spark.implicits encoder qualifies); build the row " +
-      "encoder with one of those instead"
-}
-
-final class FramedSocketTableProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FramedSocketInlineRegistry.schemaFor(
-      FramedSocketInlineRegistry(options.getOrDefault("decoderKey", ""))._2)
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new FramedSocketTable(properties.asScala.toMap)
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-final class FramedSocketTable(options: Map[String, String]) extends Table with SupportsRead {
-  private def req(k: String): String = options.getOrElse(k,
-    throw new IllegalArgumentException(s"${FramedSocket.ShortName} requires a '$k' option"))
-  // resolved ONCE, consuming the registry entry: this table instance —
-  // which the streaming plan (StreamingRelationV2) retains across
-  // stop/restart of the same DataFrame — is the decoder's home from
-  // here on, and the registry returns to its pre-load() size
-  private val inline: (FramedDecoder[Any], Encoder[Any]) =
-    FramedSocketInlineRegistry.consume(options.getOrElse("decoderKey", ""))
-  override def name(): String = s"${FramedSocket.ShortName}:${req("host")}:${req("port")}"
-  override def schema(): StructType = FramedSocketInlineRegistry.schemaFor(inline._2)
+/** The table of a framed DSv2 source ([[FramedSocketSource]],
+  * [[ConnectorSocketSource]], [[FramedLogSource]]), built by the
+  * source's `load()` around live objects rather than string options: the
+  * decode ([[FramedReaderFactory]]) and a builder for the source's
+  * MicroBatchStream. The streaming plan retains this instance, so each
+  * query start (including a restart of the same DataFrame) builds a fresh
+  * stream from it. */
+final class FramedTable(tableName: String, rows: FramedReaderFactory,
+    stream: FramedReaderFactory => MicroBatchStream) extends Table with SupportsRead {
+  override def name(): String = tableName
+  override def schema(): StructType = rows.enc.schema
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = FramedSocketTable.this.schema()
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new FramedSocketMicroBatchStream(req("host"), req("port").toInt,
-            options.get("maxFramesPerTrigger").map(_.toLong).getOrElse(Long.MaxValue),
-            options.get("maxBufferedFrames").map(_.toInt).getOrElse(1 << 20),
-            options.get("ordered").exists(_.toBoolean),
-            inline)
-      }
+    java.util.Set.of(TableCapability.MICRO_BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () =>
+    new Scan {
+      override def readSchema(): StructType = rows.enc.schema
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+        stream(rows)
     }
+}
+
+object FramedTable {
+  /** The `load()` of every framed DSv2 source: a streaming Dataset of
+    * `(T, eventTimeNs)` rows decoded inside the scan. An unsupported
+    * `enc` fails here, on the driver. */
+  def load[T](spark: SparkSession, name: String, decoder: FramedDecoder[T], enc: Encoder[T])(
+      stream: FramedReaderFactory => MicroBatchStream): Dataset[(T, Long)] = {
+    val rowEnc = Encoders.tuple(FramedReaderFactory.agnostic(enc), Encoders.scalaLong)
+    val rows = FramedReaderFactory(decoder.asInstanceOf[FramedDecoder[Any]],
+      rowEnc.asInstanceOf[Encoder[Any]])
+    TableBridge.readStream(spark, new FramedTable(name, rows, stream)).as(rowEnc)
+  }
 }
 
 /** Offset = count of frames received since connect. */
@@ -186,7 +105,7 @@ private[pipeline] final case class FrameChunk(count: Int, bytes: Array[Byte])
 final class FramedSocketMicroBatchStream(host: String, port: Int,
     maxFramesPerTrigger: Long, maxBufferedFrames: Int,
     ordered: Boolean,
-    inline: (FramedDecoder[Any], Encoder[Any]))
+    rows: FramedReaderFactory)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** Seal threshold: a chunk closes at this many bytes (or whenever the
@@ -415,8 +334,7 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
       FramedSocketPartition(java.util.Arrays.copyOfRange(c.bytes, startByte, pos), take)
     }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    FramedSocketInlineReaderFactory(inline._1, inline._2)
+  override def createReaderFactory(): PartitionReaderFactory = rows
 
   override def commit(end: Offset): Unit = lock.synchronized {
     val e = end.asInstanceOf[FrameCount].n
@@ -453,103 +371,110 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
   * slicePartition — so the executor never skips). Each slice is its own
   * partition, so a large batch decodes in parallel. */
 final case class FramedSocketPartition(bytes: Array[Byte], take: Int)
-  extends InputPartition
+    extends FramedPartition {
+  override def frames(): FrameWalk = new SliceWalk(Array(this))
+}
 
 /** All of one micro-batch's chunk slices as ONE partition (`ordered`
   * mode): a single task walks the slices in frame order, trading the
   * parallel decode for a strict per-connection FIFO that survives any
   * downstream shuffle. */
 final case class FramedSocketOrderedPartition(
-    slices: Array[FramedSocketPartition]) extends InputPartition
+    slices: Array[FramedSocketPartition]) extends FramedPartition {
+  override def frames(): FrameWalk = new SliceWalk(slices)
+}
 
-/** Per-frame-array partition kept for [[ConnectorSocketMicroBatchStream]]
-  * — the ALO connector path buffers per frame (its replay/ACK protocol
-  * is frame-addressed and its volumes are credit-bounded), so it doesn't
-  * need the chunked layout the throughput-oriented socket source uses. */
-final case class FramedArrayPartition(startIdx: Long, payloads: Array[Array[Byte]])
-    extends InputPartition
-
-final class FramedArrayReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FramedArrayPartition]
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < p.payloads.length }
-      override def get(): InternalRow =
-        new GenericInternalRow(Array[Any](p.startIdx + i, p.payloads(i)))
-      override def close(): Unit = ()
+/** Walks chunk slices in order, reading each length header in place: the
+  * payload is handed to the decoder as a view into the slice's bytes, with
+  * no per-frame copy. */
+private final class SliceWalk(slices: Array[FramedSocketPartition]) extends FrameWalk {
+  private var s = 0
+  private var pos = 0
+  private var walked = 0
+  override def advance(): Boolean = {
+    while (s < slices.length && walked == slices(s).take) { s += 1; pos = 0; walked = 0 }
+    s < slices.length && {
+      bytes = slices(s).bytes
+      len = FramedSocket.frameLen(bytes, pos)
+      off = pos + 4
+      pos = off + len
+      walked += 1
+      true
     }
   }
 }
 
-/** In-scan decode ([[FramedSocketSource]]): each slice decodes straight
-  * from the chunk bytes to serialized `(T, eventTsNs)` rows INSIDE the
-  * DSv2 reader — the reference's own decode boundary
+/** A partition of a framed DSv2 source: its frames, as a walk the one
+  * decode reader ([[FramedReaderFactory]]) consumes. */
+trait FramedPartition extends InputPartition {
+  def frames(): FrameWalk
+}
+
+/** Cursor over a partition's frames: after `advance()` returns true, the
+  * current payload is `bytes(off until off + len)`. The walk owns the
+  * bytes, so the decoder must not keep them past its call. */
+abstract class FrameWalk {
+  var bytes: Array[Byte] = Array.emptyByteArray
+  var off = 0
+  var len = 0
+  def advance(): Boolean
+  def close(): Unit = ()
+}
+
+/** In-scan decode shared by the framed DSv2 sources: each frame decodes
+  * straight from the partition's bytes to a serialized `(T, eventTsNs)`
+  * row INSIDE the DSv2 reader — the reference's own decode boundary
   * (framed_source_notify.pony:118-133 decodes inside the source notify).
-  * No per-frame payload copy, row boxing or binary column sits between
-  * the socket bytes and the decoded row (SCALING.md, r16 wire
-  * attribution). A dropping decoder drops here, before any row exists
-  * (numInputRows therefore counts DECODED rows).
-  * Ships the decoder and the (serializable, agnostic) row encoder by
-  * value; the catalyst serializer is rebuilt per reader, so the reused
-  * UnsafeRow buffer is never shared across tasks. */
-final case class FramedSocketInlineReaderFactory(
+  * No binary column sits between the frame bytes and the decoded row. A
+  * dropping decoder drops here, before any row exists (numInputRows
+  * therefore counts DECODED rows); the frame still counts toward the
+  * source's offsets. Ships the decoder and the (serializable, agnostic)
+  * row encoder by value; the catalyst serializer is rebuilt per reader,
+  * so the reused UnsafeRow buffer is never shared across tasks. */
+final case class FramedReaderFactory(
     decoder: FramedDecoder[Any], enc: Encoder[Any]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: FramedSocketPartition => sliceReader(p)
-      case o: FramedSocketOrderedPartition =>
-        new PartitionReader[InternalRow] {
-          private var i = 0
-          private var cur: PartitionReader[InternalRow] =
-            if (o.slices.isEmpty) null else sliceReader(o.slices(0))
-          override def next(): Boolean = {
-            while (cur != null && !cur.next()) {
-              i += 1
-              cur = if (i < o.slices.length) sliceReader(o.slices(i)) else null
-            }
-            cur != null
-          }
-          override def get(): InternalRow = cur.get()
-          override def close(): Unit = ()
-        }
-      case other => throw new IllegalArgumentException(
-        s"unexpected partition type ${other.getClass.getName}")
-    }
-
-  private def sliceReader(p: FramedSocketPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val ser = FramedSocketInlineRegistry.serializerFor(enc)
-      private var pos = 0
-      private var walked = 0
+      private val frames = partition.asInstanceOf[FramedPartition].frames()
+      private val ser = ExpressionEncoder(FramedReaderFactory.agnostic(enc)).createSerializer()
       private var current: InternalRow = _
       override def next(): Boolean = {
-        while (walked < p.take) {
-          val len = FramedSocket.frameLen(p.bytes, pos)
-          val off = pos + 4
-          pos += 4 + len
-          walked += 1
-          decoder.decodeSliceOpt(p.bytes, off, len) match {
+        while (frames.advance())
+          decoder.decodeSliceOpt(frames.bytes, frames.off, frames.len) match {
             case Some(t) =>
               current = ser((t, decoder.eventTimeNs(t)))
               return true
-            case None => () // decode-time drop: advance past the frame
+            case None => () // decode-time drop: the walk is already past the frame
           }
-        }
         false
       }
       override def get(): InternalRow = current
-      override def close(): Unit = ()
+      override def close(): Unit = frames.close()
     }
+}
+
+object FramedReaderFactory {
+  /** `enc` as the AgnosticEncoder the reader derives its catalyst
+    * serializer from; throws for any other Encoder implementation. */
+  def agnostic[T](enc: Encoder[T]): AgnosticEncoder[T] = enc match {
+    case a: AgnosticEncoder[T @unchecked]   => a
+    case e: ExpressionEncoder[T @unchecked] => e.encoder
+    case other => throw new IllegalArgumentException(
+      s"unsupported Encoder implementation ${other.getClass.getName} for the " +
+        "in-scan decode path: the reader derives its catalyst serializer " +
+        "from an ExpressionEncoder or AgnosticEncoder (every Encoders.* / " +
+        "spark.implicits encoder qualifies); build the row encoder with one " +
+        "of those instead")
+  }
 }
 
 /** DSL SourceConfig over the framed TCP transport: decode each frame with
   * the same [[FramedDecoder]] contract the file/log sources use (the
   * transport owns the reference-default 4-byte big-endian framing; the
   * decoder sees whole payloads). The decode runs INSIDE the DSv2 scan
-  * ([[FramedSocketInlineReaderFactory]]), so `numInputRows` counts
-  * DECODED rows (a dropping decoder's drops never become rows) and the
-  * scan's output schema is the row schema. */
+  * ([[FramedReaderFactory]]), so `numInputRows` counts DECODED rows (a
+  * dropping decoder's drops never become rows) and the scan's output
+  * schema is the row schema. */
 final case class FramedSocketSource[T](
     host: String,
     port: Int,
@@ -558,16 +483,8 @@ final case class FramedSocketSource[T](
     maxBufferedFrames: Int = 1 << 20,
     ordered: Boolean = false)(implicit enc: Encoder[T])
     extends SourceConfig[T] {
-  def load(spark: SparkSession): Dataset[(T, Long)] = {
-    val tupEnc = Encoders.tuple(enc, Encoders.scalaLong)
-    val reader = spark.readStream
-      .format(classOf[FramedSocketTableProvider].getName)
-      .option("host", host).option("port", port.toString)
-      .option("maxBufferedFrames", maxBufferedFrames.toString)
-      .option("ordered", ordered.toString)
-      .option("decoderKey", FramedSocketInlineRegistry.register(decoder, tupEnc))
-    val df = (if (maxFramesPerTrigger != Long.MaxValue)
-      reader.option("maxFramesPerTrigger", maxFramesPerTrigger.toString) else reader).load()
-    df.as[(T, Long)](tupEnc)
-  }
+  def load(spark: SparkSession): Dataset[(T, Long)] =
+    FramedTable.load(spark, s"${FramedSocket.ShortName}:$host:$port", decoder, enc)(rows =>
+      new FramedSocketMicroBatchStream(host, port, maxFramesPerTrigger, maxBufferedFrames,
+        ordered, rows))
 }

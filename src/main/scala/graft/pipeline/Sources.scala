@@ -153,11 +153,11 @@ trait FramedDecoder[T] extends Serializable {
     * time must DECODE them (into a row the pipeline filters after the
     * watermark is assigned) rather than drop them at the source. */
   def decodeOpt(payload: Array[Byte]): Option[T] = Some(decode(payload))
-  /** [[decodeOpt]] over a slice of a larger buffer — the socket scan's
-    * in-path decode ([[FramedSocketSource]]) calls THIS per frame, so
-    * a decoder that reads its fields straight from `(bytes, off, len)`
-    * (e.g. through `ByteBuffer.wrap(bytes, off, len)`) skips the
-    * per-frame payload copy entirely. The default
+  /** [[decodeOpt]] over a slice of a larger buffer — the framed DSv2
+    * sources' in-scan decode ([[FramedReaderFactory]]) calls THIS per
+    * frame, so a decoder that reads its fields straight from
+    * `(bytes, off, len)` (e.g. through `ByteBuffer.wrap(bytes, off, len)`)
+    * skips the per-frame payload copy entirely. The default
     * copies and delegates, preserving every existing decoder's
     * contract unchanged. */
   def decodeSliceOpt(bytes: Array[Byte], off: Int, len: Int): Option[T] =

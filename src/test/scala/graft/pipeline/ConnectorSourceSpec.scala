@@ -440,7 +440,10 @@ class ConnectorSourceSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException] {
       new ConnectorSocketMicroBatchStream("127.0.0.1", 1,
         maxFramesPerTrigger = Long.MaxValue, maxBufferedFrames = 1,
-        cookie = None, replayTimeoutMs = 1000)
+        cookie = None, replayTimeoutMs = 1000,
+        rows = FramedReaderFactory(StringFrames.asInstanceOf[FramedDecoder[Any]],
+          org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
+            org.apache.spark.sql.Encoders.scalaLong).asInstanceOf[org.apache.spark.sql.Encoder[Any]]))
     }
     assert(ex.getMessage.contains("maxBufferedFrames"), ex.getMessage)
   }

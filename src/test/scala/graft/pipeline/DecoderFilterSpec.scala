@@ -93,6 +93,29 @@ class DecoderFilterSpec extends AnyFunSuite {
     assert(tcpDropRun() === (0L until 20L by 2L).toSeq)
   }
 
+  test("framed log source: odd frames dropped in the scan, evens arrive in order, offsets cover the drops") {
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    val log = java.nio.file.Files.createTempDirectory("decoder_filter_log")
+      .resolve("log.bin").toFile
+    val out = new DataOutputStream(new java.io.FileOutputStream(log))
+    (0L until 20L).foreach(frame(out, _)) // ends on a DROPPED frame (19)
+    out.close()
+    val view = s"decoder_filter_log_out_${System.nanoTime()}"
+    val h = Graft.source("decoder-filter-log",
+        FramedLogSource(log.getAbsolutePath, OddFilterDecoder))
+      .toSink(MemorySink(view))
+    h.processAllAvailable()
+    val got = spark.table(view).collect().map(_.getLong(0)).toSeq
+    val end = h.query.get.lastProgress.sources.head.endOffset
+    h.stop()
+    graft.StreamBench.deleteRecursively(log.getParentFile)
+    assert(got === (0L until 20L by 2L).toSeq)
+    // the trailing dropped frame still advances the offset: 20 frames of
+    // 4 + 8 bytes, so the end is the last frame's byte end
+    assert(end === (20 * 12).toString)
+  }
+
   test("framed file source: the same dropping decoder filters a framed log batch-side") {
     implicit val ss: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._

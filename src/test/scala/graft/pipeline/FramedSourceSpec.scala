@@ -186,7 +186,7 @@ class FramedSourceSpec extends AnyFunSuite {
       .asInstanceOf[org.apache.spark.sql.Encoder[Any]]
     val stream = new FramedSocketMicroBatchStream(
       "127.0.0.1", server.getLocalPort, Long.MaxValue, 1 << 20, ordered = true,
-      (dec, enc))
+      FramedReaderFactory(dec, enc))
     try {
       sender.join()
       val deadline = System.nanoTime() + 30L * 1000000000L
@@ -200,7 +200,7 @@ class FramedSourceSpec extends AnyFunSuite {
       val ord = parts(0).asInstanceOf[FramedSocketOrderedPartition]
       assert(ord.slices.length >= 2,
         s"a ${n} KB stream must span multiple 1 MB chunks (got ${ord.slices.length} slice)")
-      val reader = FramedSocketInlineReaderFactory(dec, enc).createReader(parts(0))
+      val reader = FramedReaderFactory(dec, enc).createReader(parts(0))
       val got = scala.collection.mutable.ArrayBuffer.empty[String]
       while (reader.next())
         got += reader.get().getUTF8String(0).toString.take(5)
@@ -210,16 +210,6 @@ class FramedSourceSpec extends AnyFunSuite {
       stream.stop()
       server.close()
     }
-  }
-
-  test("an unknown inline-decoder key fails with the internal-option diagnostic") {
-    // the 'decoderKey' option is library-internal (FramedSocketSource.load
-    // registers the decoder driver-side and passes the key); a user
-    // pasting the format string by hand must get the contract message,
-    // not a null-pointer from the registry
-    val e = intercept[IllegalArgumentException](
-      FramedSocketInlineRegistry("no-such-key"))
-    assert(e.getMessage.contains("no inline decoder registered"))
   }
 
   test("a stream larger than maxBufferedFrames drains (deferred-commit wedge regression)") {
@@ -266,5 +256,95 @@ class FramedSourceSpec extends AnyFunSuite {
     server.close()
     assert(got === (0 until n).map(i => s"x$i"),
       s"drained ${got.length}/$n frames before the deadline")
+  }
+
+  /** One framed DSv2 source per case, fed in two bursts: `feed(k)` makes
+    * burst k available (k = 0, 1) before the k-th query start. */
+  private case class Restartable(name: String, source: SourceConfig[String],
+      feed: Int => Unit, secondRun: Seq[String], close: () => Unit)
+  private val bursts = Seq(Seq("a1", "a2"), Seq("b1", "b2", "b3"))
+
+  private def restartables(): Seq[Restartable] = {
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    // raw socket: at-most-once, one connection per query start, and each
+    // connection gets its own burst
+    val server = new java.net.ServerSocket(0)
+    val sender = new Thread("framed-restart-sender") {
+      override def run(): Unit =
+        try bursts.foreach { burst =>
+          val conn = server.accept()
+          val out = new DataOutputStream(conn.getOutputStream)
+          burst.foreach { m =>
+            val p = m.getBytes(UTF_8); out.writeInt(p.length); out.write(p)
+          }
+          out.flush(); conn.close()
+        } catch { case _: java.io.IOException => }
+    }
+    sender.setDaemon(true); sender.start()
+    // connector: every connection replays from the resume point (0 without
+    // a checkpoint) whatever the sender holds by then
+    val held = new java.util.concurrent.CopyOnWriteArrayList[Array[Byte]]()
+    val replay = new ProtocolPeers.ReplaySender(new IndexedSeq[Array[Byte]] {
+      def apply(i: Int): Array[Byte] = held.get(i)
+      def length: Int = held.size
+    }, cookie = "c")
+    // log: appended per burst, read from byte 0 by each fresh query
+    val log = Files.createTempDirectory("framed-restart").resolve("r.log").toFile
+    Seq(
+      Restartable("socket",
+        FramedSocketSource("127.0.0.1", server.getLocalPort, StringFrames),
+        _ => (), bursts(1), () => server.close()),
+      Restartable("connector",
+        ConnectorSocketSource("127.0.0.1", replay.server.getLocalPort, StringFrames),
+        k => bursts(k).foreach(m => held.add(m.getBytes(UTF_8))), bursts.flatten,
+        () => replay.close()),
+      Restartable("log", FramedLogSource(log.getAbsolutePath, StringFrames),
+        k => writeFramed(log.getParentFile, log.getName, bursts.take(k + 1).flatten),
+        bursts.flatten, () => ()))
+  }
+
+  test("stop → restart of one loaded DataFrame reads the second burst, for every framed DSv2 source") {
+    // the plan retains the table built by load(); each query start builds
+    // a fresh stream from it, with the decoder the table holds
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    restartables().foreach { r =>
+      val pipe = Graft.source(s"restart-${r.name}", r.source)
+      def runOnce(k: Int, expect: Int): Seq[String] = {
+        r.feed(k)
+        val view = s"framed_restart_${r.name}_${k}_${System.nanoTime()}"
+        val h = pipe.toSink(MemorySink(view))
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        var got = Seq.empty[String]
+        while (got.length < expect && System.nanoTime() < deadline) {
+          Thread.sleep(50)
+          h.processAllAvailable()
+          got = spark.table(view).collect().map(_.getString(0)).toSeq
+        }
+        h.stop()
+        got
+      }
+      try {
+        assert(runOnce(0, 2).sorted === bursts(0), r.name)
+        assert(runOnce(1, r.secondRun.length).sorted === r.secondRun, r.name)
+      } finally r.close()
+    }
+  }
+
+  test("an unsupported Encoder implementation fails inside load(), driver-side, for every framed DSv2 source") {
+    implicit val bogus: org.apache.spark.sql.Encoder[String] =
+      new org.apache.spark.sql.Encoder[String] {
+        def schema: org.apache.spark.sql.types.StructType =
+          new org.apache.spark.sql.types.StructType().add("value", "string")
+        def clsTag: scala.reflect.ClassTag[String] = scala.reflect.classTag[String]
+      }
+    // no peer listens on port 1 and no log exists: load() opens nothing
+    Seq(FramedSocketSource("127.0.0.1", 1, StringFrames),
+        ConnectorSocketSource("127.0.0.1", 1, StringFrames),
+        FramedLogSource("/nonexistent/framed.log", StringFrames)).foreach { src =>
+      val e = intercept[IllegalArgumentException](src.load(spark))
+      assert(e.getMessage.contains("unsupported Encoder implementation"), src)
+    }
   }
 }
