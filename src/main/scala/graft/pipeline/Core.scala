@@ -33,6 +33,14 @@ object ComputationResult {
     * triggers use this shape (output_processor.pony:90-128). */
   final case class Timestamped[Out](outs: Seq[(Out, Long)])
       extends ComputationResult[Out]
+
+  /** The (output, event ts) pairs `r` emits for an input stamped `ts`. */
+  def stamp[Out](r: ComputationResult[Out], ts: Long): Iterator[(Out, Long)] = r match {
+    case Discard         => Iterator.empty
+    case One(o)          => Iterator.single((o, ts))
+    case Many(os)        => os.iterator.map((_, ts))
+    case Timestamped(os) => os.iterator
+  }
 }
 
 /** 1→{0,1,N} record computation with no state.

@@ -15,15 +15,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    shuffle. `key_by` marks the key extractor; the shuffle happens once
   *    at the next stateful stage via `groupByKey` (hash partitioning =
   *    the reference's two-level consistent hashing, core/routing/).
-  *  - Stateful stages host the unit-tested [[StateWrapper]] machines:
+  *  - Stateful stages host the unit-tested [[StateWrapper]] machines,
+  *    both hosts stepping one per-key driver, [[KeyReplay]]:
   *      * streaming: `flatMapGroupsWithState` with EventTimeTimeout —
   *        Spark's state store persists the wrapper (the reference's
   *        checkpointed `_state_map`, runner.pony:320), the query watermark
   *        drives triggers, timers re-arm per watermark advance.
-  *      * batch: `flatMapGroups` replaying each key's records in event-time
-  *        order with watermark = max event ts seen, then a final
-  *        TimeoutWatermark flush — the deterministic "perfectly ordered
-  *        stream" replay used by the oracle-checked queries.
+  *      * batch: `flatMapSortedGroups` replaying each key's records in
+  *        event-time order with watermark = max event ts seen, then a
+  *        timer fired at TimeoutWatermark — the deterministic "perfectly
+  *        ordered stream" replay used by the oracle-checked queries.
   *  - `local_key_by` (application.pony:241-248) exists for worker-local
   *    pre-aggregation; Spark's partial aggregation does this automatically
   *    inside every shuffle agg, so it is an explicit no-op alias here.
@@ -187,6 +188,22 @@ final class Pipeline[T] private[pipeline] (
   private def enc3: Encoder[(String, T, Long)] =
     Encoders.tuple(Encoders.STRING, enc, Encoders.scalaLong)
 
+  /** (key, payload, event-ts, watermark column) rows for a streaming
+    * stateful stage: the watermark column is the event time shifted
+    * forward by `shiftNs`, truncated to ms, with a `delayMs` watermark
+    * delay. The column is computed by a codegen'd projection (the typed
+    * map never allocates a per-row java.sql.Timestamp; the UnsafeRow
+    * carries the micros long directly). */
+  private def withEventTimeWatermark(key: T => String, shiftNs: Long, delayMs: Long):
+      Dataset[(String, T, Long, java.sql.Timestamp)] =
+    stamped
+      .map { case (t, ts) => (key(t), t, ts) }(enc3)
+      .withColumn("_4", org.apache.spark.sql.functions.expr(
+        s"timestamp_millis((_3 + ${shiftNs}L) div 1000000)"))
+      .withWatermark("_4", s"$delayMs milliseconds")
+      .as[(String, T, Long, java.sql.Timestamp)](
+        Encoders.tuple(Encoders.STRING, enc, Encoders.scalaLong, Encoders.TIMESTAMP))
+
   def isStreaming: Boolean = stamped.isStreaming
 
   // ------------------------------------------------------------ stateless
@@ -195,14 +212,7 @@ final class Pipeline[T] private[pipeline] (
     * timestamped flatMap via the [[ComputationResult]] shape; outputs keep
     * the input's event ts unless Timestamped (output_processor.pony:90-128). */
   def to[U: Encoder](comp: StatelessComputation[T, U]): Pipeline[U] = {
-    val out = stamped.flatMap { case (t, ts) =>
-      comp(t) match {
-        case ComputationResult.Discard         => Iterator.empty
-        case ComputationResult.One(o)          => Iterator.single((o, ts))
-        case ComputationResult.Many(os)        => os.iterator.map((_, ts))
-        case ComputationResult.Timestamped(os) => os.iterator
-      }
-    }(tup[U])
+    val out = stamped.flatMap { case (t, ts) => ComputationResult.stamp(comp(t), ts) }(tup[U])
     new Pipeline[U](spark, out, None, name, stateParallelism = stateParallelism)
   }
 
@@ -427,17 +437,8 @@ final class Pipeline[T] private[pipeline] (
     // earlier than the reference's 5 s tick — same flush set, earlier
     // boundaries).
     val armTimer = init.timeoutIntervalNs > 0
-    val rowEnc = Encoders.tuple(Encoders.STRING, enc, Encoders.scalaLong, Encoders.TIMESTAMP)
 
-    val grouped = stamped
-      .map { case (t, ts) => (kf(t), t, ts) }(enc3)
-      // The watermark column is computed by a codegen'd projection (the
-      // typed map never allocates a per-row java.sql.Timestamp; the
-      // UnsafeRow carries the micros long directly).
-      .withColumn("_4", org.apache.spark.sql.functions.expr(
-        s"timestamp_millis((_3 + ${slack}L) div 1000000)"))
-      .withWatermark("_4", s"${slack / 1000000L} milliseconds")
-      .as[(String, T, Long, java.sql.Timestamp)](rowEnc)
+    val grouped = withEventTimeWatermark(kf, slack, slack / 1000000L)
       .groupByKey(_._1)(Encoders.STRING)
 
     grouped.flatMapGroupsWithState[KeyState[T, U], (U, Long)](
@@ -446,10 +447,11 @@ final class Pipeline[T] private[pipeline] (
       stateEnc, tup[U])
   }
 
-  /** flatMapGroupsWithState adapter over the [[StatefulReplay]]
-    * core: route timeout firings vs input replay, map the retain verdict
-    * onto GroupState update/remove, re-arm the timeout (the reference's
-    * per-step timer, runner.pony:465-501). Removal cadence vs batch
+  /** flatMapGroupsWithState adapter over the [[KeyReplay]] driver: a
+    * timeout fires it at the query watermark, input is stepped in
+    * event-time order; the driver's state maps onto GroupState
+    * update/remove, and the timeout re-arms (the reference's per-step
+    * timer, runner.pony:465-501). Removal cadence vs batch
     * replay can differ: between micro-batches the GLOBAL watermark may
     * pass a key's remove point and the timer drops its state — the
     * reference's live behavior — where a batch replay, whose watermark
@@ -463,10 +465,11 @@ final class Pipeline[T] private[pipeline] (
     (key: String, rows: Iterator[R], state: GroupState[KeyState[T, U]]) => {
       val wmMs = state.getCurrentWatermarkMs()
       val wmNs = if (wmMs <= 0) 0L else wmMs * 1000000L
-      val (outs, next) =
-        if (state.hasTimedOut) StatefulReplay.fireTimeout(state.get, wmNs)
-        else StatefulReplay.replayInput(init, key, rows, wmNs, state.getOption, value, ts)
-      next match {
+      val replay = new KeyReplay(init, key, state.getOption, wmNs)
+      val outs =
+        if (state.hasTimedOut) replay.fire(wmNs)
+        else replay.stepSorted(rows, value, ts)
+      replay.state match {
         case Some(ks) =>
           state.update(ks)
           if (armTimer) state.setTimeoutTimestamp(math.max(wmMs, 0L) + 1)
@@ -475,6 +478,9 @@ final class Pipeline[T] private[pipeline] (
       outs.iterator
     }
 
+  /** Batch host: steps a [[KeyReplay]] over each key's rows in event-time
+    * order from watermark 0, then fires it at [[TimeoutWatermark.value]]
+    * to trigger every window still holding data. */
   private def batchStateful[U: Encoder](
       kf: T => String, init: StateInitializer[T, U]): Dataset[(U, Long)] = {
     // flatMapSortedGroups pushes the event-time ordering into Spark's
@@ -490,22 +496,10 @@ final class Pipeline[T] private[pipeline] (
       }(Encoders.STRING)
       .flatMapSortedGroups(org.apache.spark.sql.functions.col("_2")) {
         (key: String, rows: Iterator[(T, Long)]) =>
-          var ks = KeyState[T, U](init.stateWrapper(key), 0L)
-          var wm = 0L
-          var live = true
-          val perRow = rows.flatMap { case (t, ts) =>
-            if (!live) { ks = KeyState[T, U](init.stateWrapper(key), ks.outputWm); live = true }
-            wm = math.max(wm, ts)
-            val (os, ow, retain) = ks.wrapper(t, ts, wm)
-            ks.outputWm = math.max(ks.outputWm, ow)
-            live = retain
-            os
-          }
-          // The flush half is evaluated only after `perRow` is exhausted.
-          perRow ++ Iterator.single(()).flatMap { _ =>
-            if (live) ks.wrapper.flush(TimeoutWatermark.value, ks.outputWm)._1
-            else Vector.empty
-          }
+          val replay = new KeyReplay(init, key, None, 0L)
+          // The timer half is evaluated only after the rows are exhausted.
+          rows.flatMap { case (t, ts) => replay.step(t, ts) } ++
+            Iterator.single(()).flatMap(_ => replay.fire(TimeoutWatermark.value))
       }(tup[U])
   }
 
@@ -560,7 +554,6 @@ final class Pipeline[T] private[pipeline] (
   def dedupByWithin(fp: T => String, withinNs: Long): Pipeline[T] = {
     if (!stamped.isStreaming) dedupBy(fp)
     else {
-      val rowEnc = Encoders.tuple(Encoders.STRING, enc, Encoders.scalaLong, Encoders.TIMESTAMP)
       // withinNs normalized UP to whole milliseconds — the same rule as
       // streamingStateful's slack. The watermark delay is ms-granular;
       // FLOORING here silently shrank both the dedup horizon and the
@@ -569,12 +562,7 @@ final class Pipeline[T] private[pipeline] (
       // toward holding fingerprints marginally longer, never toward
       // dropping rows the doc contract admits.
       val withinMs = Pipeline.ceilToWholeMsNs(withinNs) / 1000000L
-      val kept = stamped
-        .map { case (t, ts) => (fp(t), t, ts) }(enc3)
-        .withColumn("_4", org.apache.spark.sql.functions.expr(
-          "timestamp_millis(_3 div 1000000)"))
-        .withWatermark("_4", s"$withinMs milliseconds")
-        .as[(String, T, Long, java.sql.Timestamp)](rowEnc)
+      val kept = withEventTimeWatermark(fp, 0L, withinMs)
         .dropDuplicatesWithinWatermark("_1")
       new Pipeline[T](spark, kept.map(r => (r._2, r._3))(tup[T]), None, name,
         stateParallelism = stateParallelism)

@@ -13,8 +13,8 @@ import scala.collection.mutable
   * newest timestamp this stage has fully emitted.
   *
   * In the Spark runner the global query watermark plays this role across
-  * stages; StageWatermarks is used by the synchronous drivers (unit tests,
-  * batch replay) and documents the semantics the streaming path inherits.
+  * stages; neither host uses StageWatermarks. Only the unit tests drive
+  * it, and it documents the semantics the streaming path inherits.
   */
 final class StageWatermarks(lastHeardThreshold: Long = 10_000_000_000L) {
   // upstream id -> (watermark, lastHeardWallClock)

@@ -17,10 +17,10 @@ import scala.collection.mutable.ArrayBuffer
   */
 trait StateWrapper[In, Out] extends Serializable {
   def apply(input: In, eventTs: Long, watermarkTs: Long): (Vector[(Out, Long)], Long, Boolean)
-  /** Timer fired with the current input watermark (runner.pony:465-501). */
+  /** Timer fired with the current input watermark (runner.pony:465-501).
+    * At [[TimeoutWatermark.value]] it is the end-of-stream flush: every
+    * window holding data triggers. */
   def onTimeout(inputWatermarkTs: Long, outputWatermarkTs: Long): (Vector[(Out, Long)], Long, Boolean)
-  /** End-of-stream / barrier flush: trigger everything holding data. */
-  def flush(inputWatermarkTs: Long, outputWatermarkTs: Long): (Vector[(Out, Long)], Long, Boolean)
 }
 
 /** Wraps a `StateComputation` as a state wrapper: per-message apply, no
@@ -36,18 +36,10 @@ final class StateComputationWrapper[In, Out, S](
   private[graft] def currentState: S = state
 
   def apply(input: In, eventTs: Long, watermarkTs: Long): (Vector[(Out, Long)], Long, Boolean) = {
-    val outs = comp(input, state) match {
-      case ComputationResult.Discard          => Vector.empty
-      case ComputationResult.One(o)           => Vector((o, eventTs))
-      case ComputationResult.Many(os)         => os.iterator.map((_, eventTs)).toVector
-      case ComputationResult.Timestamped(os)  => os.toVector
-    }
-    (outs, watermarkTs, true)
+    (ComputationResult.stamp(comp(input, state), eventTs).toVector, watermarkTs, true)
   }
   def onTimeout(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
     (Vector.empty, inputWm, true)
-  def flush(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
-    (Vector.empty, outputWm, true)
 }
 
 /** Global window: running aggregate, one output per input message, window
@@ -66,12 +58,10 @@ final class GlobalWindow[In, Out, Acc](
   }
   def onTimeout(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
     (Vector.empty, inputWm, true)
-  def flush(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
-    (Vector.empty, outputWm, true)
 }
 
-/** Tumbling count window: trigger after `count` messages per key; timer /
-  * flush emits a partial window (windows.pony:428-519). The flush output's
+/** Tumbling count window: trigger after `count` messages per key; the
+  * timer emits a partial window (windows.pony:428-519). The partial output's
   * window end is the PREVIOUS output watermark and the new output watermark
   * jumps to the input watermark — mirroring TumblingCountWindows.on_timeout
   * exactly (windows.pony:478-499). */
@@ -91,9 +81,6 @@ final class TumblingCountWindows[In, Out, Acc](
   }
 
   def onTimeout(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
-    flush(inputWm, outputWm)
-
-  def flush(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
     if (currentCount > 0) {
       val outs = trigger(outputWm).map((_, outputWm)).toVector
       (outs, inputWm, true)
@@ -122,9 +109,6 @@ final class InitializableWindows[In, Out, Acc](
   def onTimeout(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
     if (wrapper == null) (Vector.empty, outputWm, true)
     else wrapper.attemptToTrigger(inputWm)
-  def flush(inputWm: Long, outputWm: Long): (Vector[(Out, Long)], Long, Boolean) =
-    if (wrapper == null) (Vector.empty, outputWm, true)
-    else wrapper.attemptToTrigger(TimeoutWatermark.value)
 
   /** Test hook (CheckPanesAreIncreasing in _test_windows.pony). */
   def panesIncreasing: Boolean = wrapper == null || wrapper.checkPanesIncreasing

@@ -1,67 +1,76 @@
 package graft.pipeline
 
-/** The per-key replay core of the streaming host
-  * (`flatMapGroupsWithState` in [[Pipeline]]): sort the micro-batch's rows
-  * for a key in event-time order, feed the state machine with the
-  * watermark riding max(query watermark, max event ts processed so far),
-  * handle mid-batch state removal/recreation.
+/** The one per-key driver of the keyed-state host (the reference's
+  * runner: per-message apply plus the per-step timer,
+  * runner.pony:314-501). Both hosts in [[Pipeline]] step it:
+  *  - streaming (`flatMapGroupsWithState`): one driver per key per
+  *    micro-batch, opened on the stored [[KeyState]] with the query
+  *    watermark; [[stepSorted]] replays the batch's rows in event-time
+  *    order, and a timeout [[fire]]s at the query watermark;
+  *  - batch (`flatMapSortedGroups`): one driver per key, opened at
+  *    watermark 0, [[step]]ped over Spark's lazy sorted iterator, then
+  *    [[fire]]d at [[TimeoutWatermark.value]] at end of input.
   *
-  * Rows stay in the host's native row type `R` (accessor functions
-  * extract payload/ts) so the host allocates no per-row wrappers on the
-  * hot path.
+  * It owns the four rules both hosts share: the watermark presented to
+  * the state machine rides max(watermark, max event ts stepped so far);
+  * the key's output watermark only advances; a `retain_state=false`
+  * verdict (runner.pony:448-450) drops the state; and the key's next
+  * event opens a fresh wrapper carrying the output watermark.
+  *
+  * The riding watermark is the reference's per-message stamping of event
+  * time into the stage watermark (core/source/source_handler.pony:28,
+  * watermarks.pony), which Spark only folds into its global watermark at
+  * batch boundaries; riding the key's own event time restores the
+  * per-message trigger cadence, so both hosts anchor windows alike.
   */
-private[pipeline] object StatefulReplay {
+private[pipeline] final class KeyReplay[T, U](
+    init: StateInitializer[T, U], key: String,
+    existing: Option[KeyState[T, U]], watermarkNs: Long) {
+  private var ks = existing.getOrElse(KeyState[T, U](init.stateWrapper(key), 0L))
+  private var live = true
+  private var rideWm = watermarkNs
 
-  /** Replay one key's micro-batch rows. Returns (outputs, final state);
-    * `None` state means the machine requested removal (retain_state=false,
-    * runner.pony:448-450) with no subsequent event re-opening it. */
-  def replayInput[R, T, U](
-      init: StateInitializer[T, U], key: String, rows: Iterator[R],
-      wmNs: Long, existing: Option[KeyState[T, U]],
-      value: R => T, ts: R => Long): (Vector[(U, Long)], Option[KeyState[T, U]]) = {
-    var ks = existing.getOrElse(KeyState[T, U](init.stateWrapper(key), 0L))
-    val outs = Vector.newBuilder[(U, Long)]
-    var retain = true
-    val buf = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
-    rows.foreach(r => buf += r.asInstanceOf[AnyRef])
-    val arr = buf.toArray
+  /** Apply one event (event ts `ts` ns) to the key's state machine. */
+  def step(value: T, ts: Long): Vector[(U, Long)] = {
+    if (!live) { // state was dropped: the next event opens a fresh wrapper
+      ks = KeyState[T, U](init.stateWrapper(key), ks.outputWm)
+      live = true
+    }
+    rideWm = math.max(rideWm, ts)
+    val (os, ow, retain) = ks.wrapper(value, ts, rideWm)
+    ks.outputWm = math.max(ks.outputWm, ow)
+    live = retain
+    os
+  }
+
+  /** Step every row in event-time order (a stable sort: equal
+    * timestamps keep arrival order). Rows stay in the host's native row
+    * type `R`, so the hot path allocates no per-row wrapper. */
+  def stepSorted[R](rows: Iterator[R], value: R => T, ts: R => Long): Vector[(U, Long)] = {
+    val arr = rows.map(_.asInstanceOf[AnyRef]).toArray
     java.util.Arrays.sort(arr, new java.util.Comparator[AnyRef] {
       def compare(a: AnyRef, b: AnyRef): Int =
         java.lang.Long.compare(ts(a.asInstanceOf[R]), ts(b.asInstanceOf[R]))
     })
-    // The watermark presented to the state machine rides max(query
-    // watermark, max event ts processed so far) — the reference's sources
-    // stamp each message's event time into the stage watermark as it
-    // flows (core/source/source_handler.pony:28, watermarks.pony), which
-    // Spark only folds into its global watermark at batch boundaries;
-    // riding the per-key event time restores the per-message trigger
-    // cadence and makes the streaming and batch-replay paths anchor
-    // windows identically.
-    var rideWm = wmNs
-    var i = 0
-    while (i < arr.length) {
-      val r = arr(i).asInstanceOf[R]
-      if (!retain) { // state was dropped mid-batch: fresh wrapper
-        ks = KeyState[T, U](init.stateWrapper(key), ks.outputWm)
-        retain = true
-      }
-      val t = ts(r)
-      rideWm = math.max(rideWm, t)
-      val (os, ow, ret) = ks.wrapper(value(r), t, rideWm)
-      outs ++= os
-      ks.outputWm = math.max(ks.outputWm, ow)
-      retain = ret
-      i += 1
-    }
-    (outs.result(), if (retain) Some(ks) else None)
+    val outs = Vector.newBuilder[(U, Long)]
+    arr.foreach(r => outs ++= step(value(r.asInstanceOf[R]), ts(r.asInstanceOf[R])))
+    outs.result()
   }
 
-  /** Fire the per-key timer (the reference's per-step timer re-triggering
-    * windows on watermark advance, runner.pony:465-501). */
-  def fireTimeout[T, U](ks: KeyState[T, U], wmNs: Long):
-      (Vector[(U, Long)], Option[KeyState[T, U]]) = {
-    val (os, ow, retain) = ks.wrapper.onTimeout(wmNs, ks.outputWm)
-    ks.outputWm = math.max(ks.outputWm, ow)
-    (os, if (retain) Some(ks) else None)
-  }
+  /** Fire the key's timer at watermark `wmNs`: the query watermark on a
+    * streaming timeout, [[TimeoutWatermark.value]] at the end of a batch
+    * replay, which triggers every window holding data. A dropped state
+    * has nothing to fire. */
+  def fire(wmNs: Long): Vector[(U, Long)] =
+    if (!live) Vector.empty
+    else {
+      val (os, ow, retain) = ks.wrapper.onTimeout(wmNs, ks.outputWm)
+      ks.outputWm = math.max(ks.outputWm, ow)
+      live = retain
+      os
+    }
+
+  /** The key's state to keep, or `None` when the last verdict dropped it
+    * with no later event re-opening it. */
+  def state: Option[KeyState[T, U]] = if (live) Some(ks) else None
 }

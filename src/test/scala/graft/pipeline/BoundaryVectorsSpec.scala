@@ -65,7 +65,7 @@ class BoundaryVectorsSpec extends AnyFunSuite {
     val oneBelow = w(4L, seconds(150) - 1, seconds(200))
     assert(oneBelow._1 == Vector((4L, seconds(150) - 1)))
     // the at-boundary row must have landed in the [150s, 250s) window
-    val flushed = w.flush(TimeoutWatermark.value, 0L)
+    val flushed = w.onTimeout(TimeoutWatermark.value, 0L)
     assert(outs(flushed) == Vector(5L, 2L),
       "[150s,250s) carries 3 (boundary row) + 2; [200s,300s) carries 2")
   }
@@ -85,7 +85,7 @@ class BoundaryVectorsSpec extends AnyFunSuite {
   }
 
   test("ephemeral key at exactly the remove point drops state and the NEXT row reopens fresh") {
-    // Host-level replay (StatefulReplay.replayInput): one micro-batch
+    // Host-level replay (KeyReplay.stepSorted): one micro-batch
     // whose rows straddle the remove point. triggerPoint = 105s,
     // removePoint = 110s with Drop late policy:
     //   row 2 at 106s  -> triggers [1,2]
@@ -99,13 +99,14 @@ class BoundaryVectorsSpec extends AnyFunSuite {
     }
     val rows = Seq(
       (1L, seconds(100)), (2L, seconds(106)), (3L, seconds(110)), (4L, seconds(111)))
-    val (outputs, state) = StatefulReplay.replayInput[(Long, Long), Long, Vector[Long]](
-      init, "k", rows.iterator, 0L, None, _._1, _._2)
+    val replay = new KeyReplay(init, "k", None, 0L)
+    val outputs = replay.stepSorted[(Long, Long)](rows.iterator, _._1, _._2)
+    val state = replay.state
     assert(outputs.map(_._1) == Vector(Vector(1L, 2L)),
       "row 3 is zombie-late at wm == removePoint; row 4 must not join the old window")
     // the fresh window (anchored at 111s) holds row 4 and is retained
     assert(state.isDefined, "the reopened key's state is live")
-    val reopened = state.get.wrapper.flush(TimeoutWatermark.value, 0L)
+    val reopened = state.get.wrapper.onTimeout(TimeoutWatermark.value, 0L)
     assert(outs(reopened) == Vector(Vector(4L)),
       "a seeded <= in the retain comparison keeps the zombie: row 4 would be dropped as late")
   }
@@ -118,11 +119,12 @@ class BoundaryVectorsSpec extends AnyFunSuite {
     }
     val rows = Seq(
       (1L, seconds(100)), (2L, seconds(106)), (3L, seconds(110) - 1), (4L, seconds(110) - 1))
-    val (outputs, state) = StatefulReplay.replayInput[(Long, Long), Long, Vector[Long]](
-      init, "k", rows.iterator, 0L, None, _._1, _._2)
+    val replay = new KeyReplay(init, "k", None, 0L)
+    val outputs = replay.stepSorted[(Long, Long)](rows.iterator, _._1, _._2)
+    val state = replay.state
     assert(outputs.map(_._1) == Vector(Vector(1L, 2L)), "rows 3 and 4 are late-dropped")
     assert(state.isDefined)
-    val zombie = state.get.wrapper.flush(TimeoutWatermark.value, 0L)
+    val zombie = state.get.wrapper.onTimeout(TimeoutWatermark.value, 0L)
     assert(outs(zombie).isEmpty, "the triggered window never re-fires on flush")
   }
 

@@ -94,7 +94,7 @@ class LateDataPolicySpec extends AnyFunSuite {
       wm = math.max(wm, ts)
       got ++= outs(tw(v, ts, wm))
     }
-    got ++= outs(tw.flush(TimeoutWatermark.value, wm))
+    got ++= outs(tw.onTimeout(TimeoutWatermark.value, wm))
     got.result().flatten
   }
 

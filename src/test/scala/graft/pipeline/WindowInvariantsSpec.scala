@@ -34,7 +34,7 @@ class WindowInvariantsSpec extends AnyFunSuite {
       wm = math.max(wm, ts - millis(rand.nextInt(3000).toLong))
       out ++= outs(sw(i, ts, wm))
     }
-    out ++= outs(sw.flush(TimeoutWatermark.value, wm))
+    out ++= outs(sw.onTimeout(TimeoutWatermark.value, wm))
     out.result().filter(_.nonEmpty)
   }
 
@@ -78,7 +78,7 @@ class WindowInvariantsSpec extends AnyFunSuite {
         ts += millis(1 + rand.nextInt(100).toLong)
         out ++= outs(cw(i, ts, ts))
       }
-      out ++= outs(cw.flush(TimeoutWatermark.value, ts))
+      out ++= outs(cw.onTimeout(TimeoutWatermark.value, ts))
       val wins = out.result()
       assert(wins.flatten == (0L until n).toVector)
       // every window but the last is exactly `size` long
@@ -98,7 +98,7 @@ class WindowInvariantsSpec extends AnyFunSuite {
         ts += millis(1 + rand.nextInt(2000).toLong)
         out ++= outs(tw(i, ts, ts))
       }
-      out ++= outs(tw.flush(TimeoutWatermark.value, ts))
+      out ++= outs(tw.onTimeout(TimeoutWatermark.value, ts))
       val wins = out.result().filter(_.nonEmpty)
       wins.foreach(w => assert(w == w.sorted))
       // tumbling: no duplication at all, output = input
