@@ -5,7 +5,6 @@ import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The connector-protocol 2PC payload encodings, mirroring the reference's
   * wire format byte for byte (lib/wallaroo_labs/connector_wire_messages/
@@ -181,8 +180,7 @@ final case class ConnectorSocketSink[T](
 
   /** Phase-2 commit for the pending transaction + the offset-window roll
     * — ONE home for the state transition (writeTxn's head-of-batch
-    * deferral, writeBatch's immediate commit, and the termination hook
-    * previously carried drifting copies). */
+    * deferral, writeBatch's immediate commit, and [[onTerminated]]). */
   private def commitPending(): Unit = pendingCommit.foreach { id =>
     sendTwoPc(TwoPcWire.phase2r(TwoPcWire.Phase2, id, commit = true))
     out.flush()
@@ -341,7 +339,7 @@ final case class ConnectorSocketSink[T](
     afterPhase1(txnId(epoch), epoch)
   }
 
-  private def writeOne(ds: Dataset[(T, Long)], epoch: Long): Unit = {
+  def writeMicroBatch(ds: Dataset[(T, Long)], epoch: Long): Unit = {
     import scala.jdk.CollectionConverters._
     val enc = encode
     val bin = ds.map(p => enc(p._1))(Encoders.BINARY)
@@ -359,50 +357,29 @@ final case class ConnectorSocketSink[T](
     * an id-remembering peer will ignore it. Give each logical batch job
     * its own `streamName` (it is the transaction namespace), exactly as
     * [[TwoPhaseCommitSink]] requires a fresh directory per batch output. */
-  def writeBatch(ds: Dataset[(T, Long)]): Unit =
+  override def writeBatch(ds: Dataset[(T, Long)]): Unit =
     // finally-close: a failure after connect (abort vote, protocol
     // require, tail phase-2 IOException) must not leak the socket and
     // leave stale non-null connection state for the next writeBatch —
-    // the TcpSink.writeBatch defect class
-    try { writeOne(ds, 0L); commitPending() } finally closeQuietly()
+    // the leak TcpSink's per-partition close guards against
+    try { writeMicroBatch(ds, 0L); commitPending() } finally closeQuietly()
 
-  override def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
-    writeOne(ds, batchId)
-
-  /** Best-effort phase 2 for the open tail transaction at graceful query
-    * termination — the reference's EOS discipline. `committedEpoch` must
-    * be the last batch id Spark DURABLY COMMITTED (from the query's final
-    * progress): a stop() can land after foreachBatch(k) returned but
-    * before the commit-log entry for k was written, and committing txn k
-    * then would double-deliver the epoch when the restart re-runs it.
-    * An ineligible or failed send is harmless either way: the txn stays
-    * in doubt and reconnect recovery resolves it correctly (commit if
-    * the epoch logged, abort-and-rewrite if not). Disabled via
-    * `commitOnStop = false` when a test needs the in-doubt tail. */
-  private[pipeline] def finishPendingCommit(committedEpoch: Long): Unit =
-    if (pendingCommit.exists(id => TwoPcWire.txnEpoch(id).exists(_ <= committedEpoch)))
+  /** Query termination, solo or in a fan-out: best-effort phase 2 for the
+    * open tail transaction at a graceful stop (the reference's EOS
+    * discipline), then release the connection. `committedEpoch` is the
+    * last batch id Spark DURABLY COMMITTED: a stop() can land after
+    * foreachBatch(k) returned but before the commit-log entry for k was
+    * written, and committing txn k then would double-deliver the epoch
+    * when the restart re-runs it. An ineligible or failed send is
+    * harmless either way: the txn stays in doubt and reconnect recovery
+    * resolves it correctly (commit if the epoch logged, abort-and-rewrite
+    * if not). Disabled via `commitOnStop = false` when a test needs the
+    * in-doubt tail. */
+  override def onTerminated(failed: Boolean, committedEpoch: Long): Unit = {
+    if (commitOnStop && !failed &&
+        pendingCommit.exists(id => TwoPcWire.txnEpoch(id).exists(_ <= committedEpoch)))
       try commitPending()
       catch { case _: IOException | _: NullPointerException => } // recovery's job
-
-  /** Fan-out termination ([[Pipeline.toSinks]]): same settlement as the
-    * solo writeStream's hook — commit the eligible tail txn, release the
-    * connection. */
-  override def onFanOutTerminated(failed: Boolean, committedEpoch: Long): Unit = {
-    if (commitOnStop && !failed) finishPendingCommit(committedEpoch)
     closeQuietly()
-  }
-
-  def writeStream(ds: Dataset[(T, Long)], name: String,
-      checkpoint: Option[String], trigger: Trigger): StreamingQuery = {
-    val q = SinkConfig.streamWriter(ds, name, checkpoint, trigger)
-      .foreachBatch((d: Dataset[(T, Long)], id: Long) => writeMicroBatch(d, id)).start()
-    SinkConfig.settleOnTermination(ds.sparkSession, q) { failed =>
-      if (commitOnStop && !failed)
-        // lastProgress is finalized AFTER the batch's commit-log write,
-        // so its batchId is the durable-commit frontier
-        finishPendingCommit(Option(q.lastProgress).map(_.batchId).getOrElse(-1L))
-      closeQuietly() // the query owned the connection; don't leak the fd
-    }
-    q
   }
 }

@@ -657,47 +657,14 @@ final class Pipeline[T] private[pipeline] (
     else { sink.writeBatch(ds); new SinkHandle(None) }
   }
 
-  /** Fan out to several sinks (application.pony:193-219). Streaming: one
-    * query, each micro-batch persisted once then written to every sink. */
+  /** Fan out to several sinks (application.pony:193-219) through one
+    * [[FanOutSink]]: one query (or one batch write), each batch persisted
+    * once then written to every sink. */
   def toSinks(sinks: Seq[SinkConfig[T]],
       checkpointLocation: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(0L)): SinkHandle = {
     require(sinks.nonEmpty, "You must specify at least one sink when using toSinks()")
-    val ds = startDataset
-    if (ds.isStreaming) {
-      val q = SinkConfig.streamWriter(ds, name, checkpointLocation, trigger)
-        .foreachBatch { (batch: Dataset[(T, Long)], batchId: Long) =>
-          batch.persist()
-          try sinks.foreach(_.writeMicroBatch(batch, batchId))
-          finally { batch.unpersist(); () }
-        }
-        .start()
-      // settle each sink's cross-batch state when the fan-out query
-      // terminates (the solo toSink path's writeStream installs its own
-      // hook; here the sinks only ever see writeMicroBatch calls);
-      // lastProgress.batchId is the durable commit frontier (finalized
-      // after the commit-log write). The listener must live on the
-      // session that STARTED q — the hinted clone when a hint is set
-      // (termination events surface on the starting session's manager).
-      SinkConfig.settleOnTermination(ds.sparkSession, q) { failed =>
-        val committed = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-        sinks.foreach(s =>
-          try s.onFanOutTerminated(failed, committed)
-          catch { case e: Throwable =>
-            org.slf4j.LoggerFactory.getLogger(getClass)
-              .warn(s"fan-out sink termination hook failed: $e")
-          })
-      }
-      new SinkHandle(Some(q))
-    } else {
-      // mirror the streaming branch: without the persist each sink
-      // would recompute the entire upstream plan (shuffles + stateful
-      // replay) from scratch — N sinks = N full executions
-      ds.persist()
-      try sinks.foreach(_.writeBatch(ds))
-      finally { ds.unpersist(); () }
-      new SinkHandle(None)
-    }
+    toSink(FanOutSink(sinks), checkpointLocation, trigger)
   }
 
   /** Durable stage boundary: terminate this pipeline into a parquet
@@ -714,6 +681,11 @@ final class Pipeline[T] private[pipeline] (
     * unit. Batch pipelines chain stateful stages natively, so `through`
     * is the identity there (no handle).
     *
+    * The upstream query is a [[ParquetSink]] stream into `handoffDir`.
+    * Without a `checkpointLocation` it checkpoints to
+    * `<handoffDir>/_ckpt`: the downstream file source skips
+    * `_`-prefixed directories, and deleting the handoff deletes it too.
+    *
     * Returns the upstream query's handle (stop it to end the stage) and
     * the downstream pipeline. At scale the handoff is also the natural
     * backpressure boundary: the downstream reads at its own pace. */
@@ -721,13 +693,8 @@ final class Pipeline[T] private[pipeline] (
       checkpointLocation: Option[String] = None): (SinkHandle, Pipeline[T]) =
     if (!stamped.isStreaming) (new SinkHandle(None), this)
     else {
-      // The parquet sink mandates a checkpoint; default to a temp dir so
-      // test topologies compose (production passes a durable location).
-      val ckpt = checkpointLocation.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_handoff_ckpt").toString)
-      val q = SinkConfig.streamWriter(startDataset, s"$name-handoff", Some(ckpt),
-          Trigger.ProcessingTime(0L))
-        .format("parquet").option("path", handoffDir).outputMode("append").start()
+      val q = ParquetSink[T](handoffDir).writeStream(startDataset, s"$name-handoff",
+        Some(checkpointLocation.getOrElse(s"$handoffDir/_ckpt")), Trigger.ProcessingTime(0L))
       val replay = spark.readStream.schema(tup[T].schema).parquet(handoffDir)
         .as[(T, Long)](tup[T])
       // hint NOT carried downstream: the handoff replay is a NEW query

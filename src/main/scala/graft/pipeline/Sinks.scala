@@ -9,6 +9,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Sink configurations (core/sink/ in the reference). A sink consumes the
   * stamped stream `Dataset[(T, eventTsNs)]`.
   *
+  * One contract starts and settles every streaming sink: [[writeMicroBatch]]
+  * writes one micro-batch, and the default [[writeStream]] runs it as a
+  * `foreachBatch` query whose termination calls [[onTerminated]] once. The
+  * [[Pipeline.toSinks]] fan-out is itself such a sink ([[FanOutSink]]).
+  * Sinks backed by a Spark-native streaming format (memory, parquet, noop,
+  * kafka, TcpSink's `foreach`) override [[writeStream]] with that format.
+  *
   * Effectively-once: the reference's connector sink runs 2-phase commit
   * against checkpoint barriers (core/sink/connector_sink/connector_sink.pony
   * :128-135, 1293-1356). The Spark equivalent is `foreachBatch` keyed by
@@ -18,22 +25,33 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[IdempotentParquetSink]] is that writer.
   */
 trait SinkConfig[T] extends Serializable {
-  def writeBatch(ds: Dataset[(T, Long)]): Unit
+  /** One micro-batch; `batchId` is its checkpoint epoch. Every streaming
+    * path that is not a native format runs this write, so it must append
+    * or key its output by `batchId`: an overwrite keeps only the last
+    * batch. */
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit
+  /** A batch pipeline's write; by default micro-batch 0. */
+  def writeBatch(ds: Dataset[(T, Long)]): Unit = writeMicroBatch(ds, 0L)
+  /** Start the streaming query: `foreachBatch(writeMicroBatch)`, settled
+    * by [[onTerminated]] when it ends. */
   def writeStream(ds: Dataset[(T, Long)], name: String,
-      checkpointLocation: Option[String], trigger: Trigger): StreamingQuery
-  /** One micro-batch of a multi-sink fan-out ([[Pipeline.toSinks]]).
-    * Sinks whose exactly-once story is keyed by batchId MUST override —
-    * the default discards the id (fine for append/at-least-once sinks). */
-  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit = writeBatch(ds)
-  /** Called exactly once when the fan-out query that drove
-    * [[writeMicroBatch]] terminates. Sinks holding cross-batch state
-    * (open connections, deferred phase-2 commits) MUST override — the
-    * solo [[writeStream]] path installs its own termination hook, but a
-    * fan-out sink only ever sees writeMicroBatch calls and would
-    * otherwise leak its connection and strand its tail transaction.
-    * `committedEpoch` is the last durably-committed batch id (−1 when
-    * unknown); `failed` whether the query ended with an exception. */
-  def onFanOutTerminated(failed: Boolean, committedEpoch: Long): Unit = ()
+      checkpointLocation: Option[String], trigger: Trigger): StreamingQuery = {
+    val q = SinkConfig.streamWriter(ds, name, checkpointLocation, trigger)
+      .foreachBatch((d: Dataset[(T, Long)], id: Long) => writeMicroBatch(d, id)).start()
+    // lastProgress is finalized AFTER the batch's commit-log write, so its
+    // batchId is the durable-commit frontier. The listener lives on the
+    // session that started q: a parallelism hint starts it on a clone.
+    SinkConfig.settleOnTermination(ds.sparkSession, q) { failed =>
+      onTerminated(failed, Option(q.lastProgress).map(_.batchId).getOrElse(-1L))
+    }
+    q
+  }
+  /** Called exactly once when the [[writeStream]] query terminates. Sinks
+    * holding cross-batch state (open connections, deferred phase-2
+    * commits) override it. `committedEpoch` is the last durably-committed
+    * batch id (−1 when unknown); `failed` whether the query ended with an
+    * exception. */
+  def onTerminated(failed: Boolean, committedEpoch: Long): Unit = ()
 }
 
 private[pipeline] object SinkConfig {
@@ -43,20 +61,14 @@ private[pipeline] object SinkConfig {
     checkpoint.fold(w)(c => w.option("checkpointLocation", c))
   }
 
-  /** Run `onDone(failed)` EXACTLY ONCE when `q` terminates — the shared
-    * settle mechanism `Pipeline.toSinks` and
-    * `ConnectorSocketSink.writeStream` previously carried as two
-    * near-identical ~25-line copies (each had to independently get the
-    * same two subtleties right, a proven drift risk): (a) a query can
-    * terminate inside the start()/addListener window, so an immediate
-    * `!q.isActive` fallback settles it, with an AtomicBoolean keeping
-    * the listener and the fallback idempotent; (b) the listener
-    * self-removes on its query's TerminatedEvent. `onDone` exceptions
-    * propagate on the caller's path and are swallowed by the listener
-    * bus on the event path — callers that must not throw there already
-    * catch per-action (toSinks' per-sink try). */
-  def settleOnTermination(spark: org.apache.spark.sql.SparkSession,
-      q: org.apache.spark.sql.streaming.StreamingQuery)(
+  /** Run `onDone(failed)` EXACTLY ONCE when `q` terminates. Two
+    * subtleties: (a) a query can terminate inside the start()/addListener
+    * window, so an immediate `!q.isActive` fallback settles it, with an
+    * AtomicBoolean keeping the listener and the fallback idempotent;
+    * (b) the listener self-removes on its query's TerminatedEvent.
+    * `onDone` exceptions propagate on the caller's path and are swallowed
+    * by the listener bus on the event path. */
+  def settleOnTermination(spark: SparkSession, q: StreamingQuery)(
       onDone: Boolean => Unit): Unit = {
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     def settle(failed: Boolean): Unit =
@@ -80,6 +92,31 @@ private[pipeline] object SinkConfig {
   }
 }
 
+/** [[Pipeline.toSinks]]' one query: each batch is persisted once, then
+  * written to every sink in order; termination is forwarded to each sink,
+  * and one sink's failing hook does not skip the others. A restart
+  * re-delivers the batch that was in flight to every sink, so the fan-out
+  * is exactly-once only for sinks keyed by `batchId`: an appending sink
+  * (ParquetSink, MemorySink, TcpSink) is at-least-once across a restart. */
+private[pipeline] final case class FanOutSink[T](sinks: Seq[SinkConfig[T]])
+    extends SinkConfig[T] {
+  private def toEach(ds: Dataset[(T, Long)])(write: SinkConfig[T] => Unit): Unit = {
+    ds.persist()
+    try sinks.foreach(write)
+    finally { ds.unpersist(); () }
+  }
+  override def writeBatch(ds: Dataset[(T, Long)]): Unit = toEach(ds)(_.writeBatch(ds))
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
+    toEach(ds)(_.writeMicroBatch(ds, batchId))
+  override def onTerminated(failed: Boolean, committedEpoch: Long): Unit =
+    sinks.foreach(s =>
+      try s.onTerminated(failed, committedEpoch)
+      catch { case e: Throwable =>
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"fan-out sink termination hook failed: $e")
+      })
+}
+
 /** In-memory sink (tests; the analogue of the reference integration
   * harness's sink actors). Streaming: the `memory` sink, queryable as a
   * temp view. Batch: registers the result as a temp view of the same name. */
@@ -89,7 +126,7 @@ final case class MemorySink[T](viewName: String) extends SinkConfig[T] {
   // sink never drags it along
   @transient private lazy val acc =
     scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-  def writeBatch(ds: Dataset[(T, Long)]): Unit =
+  override def writeBatch(ds: Dataset[(T, Long)]): Unit =
     ds.createOrReplaceTempView(viewName)
   /** toSinks fan-out: a temp view over the foreachBatch dataset would be
     * last-batch-only AND invalid once the batch completes (Spark
@@ -98,7 +135,7 @@ final case class MemorySink[T](viewName: String) extends SinkConfig[T] {
     * bounded inputs — and re-register the view over the ACCUMULATED
     * rows, preserving the memory sink's append-across-batches
     * semantics. */
-  override def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit = {
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit = {
     val df = ds.toDF()
     val schema = df.schema
     val all = acc.synchronized { acc ++= df.collect(); acc.toSeq }
@@ -106,17 +143,23 @@ final case class MemorySink[T](viewName: String) extends SinkConfig[T] {
     ds.sparkSession.createDataFrame(all.asJava, schema)
       .createOrReplaceTempView(viewName)
   }
-  def writeStream(ds: Dataset[(T, Long)], name: String,
+  override def writeStream(ds: Dataset[(T, Long)], name: String,
       checkpoint: Option[String], trigger: Trigger): StreamingQuery =
     SinkConfig.streamWriter(ds, viewName, checkpoint, trigger)
       .format("memory").outputMode("append").start()
 }
 
-/** Parquet sink (file connector). */
+/** Parquet sink (file connector). A batch pipeline overwrites `path`. A
+  * solo stream is Spark's file sink, exactly-once through its
+  * `_spark_metadata` log. In a [[Pipeline.toSinks]] fan-out each
+  * micro-batch appends plain files, so a batch replayed after a restart
+  * is written twice (at-least-once). */
 final case class ParquetSink[T](path: String) extends SinkConfig[T] {
-  def writeBatch(ds: Dataset[(T, Long)]): Unit =
+  override def writeBatch(ds: Dataset[(T, Long)]): Unit =
     ds.write.mode("overwrite").parquet(path)
-  def writeStream(ds: Dataset[(T, Long)], name: String,
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
+    ds.write.mode("append").parquet(path)
+  override def writeStream(ds: Dataset[(T, Long)], name: String,
       checkpoint: Option[String], trigger: Trigger): StreamingQuery =
     SinkConfig.streamWriter(ds, name, checkpoint, trigger)
       .format("parquet").option("path", path).outputMode("append").start()
@@ -125,9 +168,9 @@ final case class ParquetSink[T](path: String) extends SinkConfig[T] {
 /** /dev/null (core/sink/empty_sink.pony) — Spark's `noop` format. Used by
   * the throughput bench: rows are fully evaluated, nothing is written. */
 final case class EmptySink[T]() extends SinkConfig[T] {
-  def writeBatch(ds: Dataset[(T, Long)]): Unit =
-    ds.write.format("noop").mode("overwrite").save()
-  def writeStream(ds: Dataset[(T, Long)], name: String,
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
+    ds.write.format("noop").mode("append").save()
+  override def writeStream(ds: Dataset[(T, Long)], name: String,
       checkpoint: Option[String], trigger: Trigger): StreamingQuery =
     SinkConfig.streamWriter(ds, name, checkpoint, trigger)
       .format("noop").outputMode("append").start()
@@ -137,16 +180,8 @@ final case class EmptySink[T]() extends SinkConfig[T] {
   * idempotent in `batchId` to get effectively-once (see trait doc). */
 final case class ForeachBatchSink[T](writer: (Dataset[(T, Long)], Long) => Unit)
     extends SinkConfig[T] {
-  def writeBatch(ds: Dataset[(T, Long)]): Unit = writer(ds, 0L)
-  /** The writer's contract is batchId-keyed — the fan-out path must
-    * deliver the REAL id (the trait default would stamp every batch 0,
-    * making an idempotent-by-batchId writer overwrite or drop batches). */
-  override def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
     writer(ds, batchId)
-  def writeStream(ds: Dataset[(T, Long)], name: String,
-      checkpoint: Option[String], trigger: Trigger): StreamingQuery =
-    SinkConfig.streamWriter(ds, name, checkpoint, trigger)
-      .foreachBatch(writer).start()
 }
 
 /** The 2PC-equivalent connector sink: each micro-batch lands in its own
@@ -154,15 +189,8 @@ final case class ForeachBatchSink[T](writer: (Dataset[(T, Long)], Long) => Unit)
   * batch N overwrites the identical directory instead of duplicating rows
   * (phase-2 commit = the checkpoint's batch commit log). */
 final case class IdempotentParquetSink[T](path: String) extends SinkConfig[T] {
-  private def writeOne(ds: Dataset[(T, Long)], batchId: Long): Unit =
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
     ds.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-  def writeBatch(ds: Dataset[(T, Long)]): Unit = writeOne(ds, 0L)
-  override def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
-    writeOne(ds, batchId)
-  def writeStream(ds: Dataset[(T, Long)], name: String,
-      checkpoint: Option[String], trigger: Trigger): StreamingQuery =
-    SinkConfig.streamWriter(ds, name, checkpoint, trigger)
-      .foreachBatch((d: Dataset[(T, Long)], id: Long) => writeMicroBatch(d, id)).start()
 }
 
 /** Transactional manifest-commit sink — the reference's connector-sink
@@ -185,13 +213,18 @@ final case class IdempotentParquetSink[T](path: String) extends SinkConfig[T] {
   *    transaction that died — [[TwoPhaseCommitSink.recover]] rolls it
   *    back, the reference's restart reconciliation.
   *
+  * A batch pipeline commits as transaction 0: re-running a batch job into
+  * the same directory is a REPLAY by the protocol's rules (the committed
+  * manifest stands; the write is skipped). Use a fresh directory for a
+  * genuinely new batch output.
+  *
   * Uses the Hadoop FS API, so the same protocol runs on HDFS/local;
   * object stores without atomic rename need their native conditional-put
   * as the phase-2 primitive (same shape, different syscall). */
 final case class TwoPhaseCommitSink[T](path: String) extends SinkConfig[T] {
   import TwoPhaseCommitSink._
 
-  private[pipeline] def writeOne(ds: Dataset[(T, Long)], batchId: Long): Unit = {
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit = {
     val spark = ds.sparkSession
     val fs = fsFor(spark, path)
     val commit = commitFile(path, batchId)
@@ -209,18 +242,6 @@ final case class TwoPhaseCommitSink[T](path: String) extends SinkConfig[T] {
     require(fs.rename(tmp, commit) || fs.exists(commit),
       s"2pc commit rename failed for batch $batchId")
   }
-
-  /** Batch mode commits as transaction 0: re-running a batch job into
-    * the same directory is a REPLAY by the protocol's rules (the
-    * committed manifest stands; the write is skipped). Use a fresh
-    * directory for a genuinely new batch output. */
-  def writeBatch(ds: Dataset[(T, Long)]): Unit = writeOne(ds, 0L)
-  override def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
-    writeOne(ds, batchId)
-  def writeStream(ds: Dataset[(T, Long)], name: String,
-      checkpoint: Option[String], trigger: Trigger): StreamingQuery =
-    SinkConfig.streamWriter(ds, name, checkpoint, trigger)
-      .foreachBatch((d: Dataset[(T, Long)], id: Long) => writeMicroBatch(d, id)).start()
 }
 
 object TwoPhaseCommitSink {
@@ -292,11 +313,11 @@ final case class KafkaSinkConfig[T](
     import org.apache.spark.sql.Encoders
     ds.map(p => enc(p._1))(Encoders.BINARY).toDF("value")
   }
-  def writeBatch(ds: Dataset[(T, Long)]): Unit =
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
     toKafkaDf(ds).write.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic).save()
-  def writeStream(ds: Dataset[(T, Long)], name: String,
+  override def writeStream(ds: Dataset[(T, Long)], name: String,
       checkpoint: Option[String], trigger: Trigger): StreamingQuery =
     SinkConfig.streamWriter(toKafkaDf(ds), name, checkpoint, trigger)
       .format("kafka")
@@ -388,7 +409,7 @@ final case class TcpSink[T](host: String, port: Int, encode: T => Array[Byte],
     }
     def close(errorOrNull: Throwable): Unit = closeQuietly()
   }
-  def writeBatch(ds: Dataset[(T, Long)]): Unit = {
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit = {
     val fw = foreach
     ds.foreachPartition { (it: Iterator[(T, Long)]) =>
       if (fw.open(0, 0)) {
@@ -400,7 +421,7 @@ final case class TcpSink[T](host: String, port: Int, encode: T => Array[Byte],
       }
     }
   }
-  def writeStream(ds: Dataset[(T, Long)], name: String,
+  override def writeStream(ds: Dataset[(T, Long)], name: String,
       checkpoint: Option[String], trigger: Trigger): StreamingQuery =
     SinkConfig.streamWriter(ds, name, checkpoint, trigger)
       .foreach(foreach).outputMode("append").start()

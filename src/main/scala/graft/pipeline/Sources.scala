@@ -118,16 +118,12 @@ final case class KafkaSource[T](
 }
 
 /** The reference's framed-source decode contract
-  * (core/source/source_handler.pony:21-28: `header_length`,
-  * `payload_length(header)`, `decode(payload)`, `event_time_ns`;
-  * framing loop framed_source_notify.pony:91-133). */
+  * (core/source/source_handler.pony:21-28: `decode(payload)`,
+  * `event_time_ns`; framing loop framed_source_notify.pony:91-133). The
+  * framing is fixed for every framed source: a 4-byte big-endian length
+  * header (the reference default, and what TcpSink writes), parsed by
+  * [[FramedSocket.frameLen]]. */
 trait FramedDecoder[T] extends Serializable {
-  /** Bytes of header preceding each payload (reference default 4). */
-  def headerLength: Int = 4
-  /** Payload byte count from the header (default: big-endian u32 — the
-    * framing TcpSink writes, parsed by THE shared definition
-    * [[FramedSocket.frameLen]]). */
-  def payloadLength(header: Array[Byte]): Int = FramedSocket.frameLen(header, 0)
   def decode(payload: Array[Byte]): T
   /** Decode-time DROP — the reference's decoder contract is
     * `decode(payload): (T | None)` and the framing loop delivers only the
@@ -177,18 +173,17 @@ private[pipeline] object FramedDecoder {
       private var pending: Option[T] = None
       private def advance(): Unit =
         while (pending.isEmpty && off < bytes.length) {
-          val hl = decoder.headerLength
-          require(off + hl <= bytes.length, s"truncated frame header at $off")
-          val pl = decoder.payloadLength(java.util.Arrays.copyOfRange(bytes, off, off + hl))
+          require(off + 4 <= bytes.length, s"truncated frame header at $off")
+          val pl = FramedSocket.frameLen(bytes, off)
           // a corrupt header with bit 31 set parses negative and would
           // pass the bound below spuriously (likewise a huge positive pl
           // overflowing the Int sum) — reject with the diagnostic instead
           // of an opaque copyOfRange failure
-          require(pl >= 0 && pl <= bytes.length - off - hl,
+          require(pl >= 0 && pl <= bytes.length - off - 4,
             s"truncated or corrupt frame payload at $off (len $pl)")
           pending = decoder.decodeOpt(
-            java.util.Arrays.copyOfRange(bytes, off + hl, off + hl + pl))
-          off += hl + pl
+            java.util.Arrays.copyOfRange(bytes, off + 4, off + 4 + pl))
+          off += 4 + pl
         }
       def hasNext: Boolean = { advance(); pending.isDefined }
       def next(): T = {

@@ -94,4 +94,28 @@ class MergeAndSinksSpec extends AnyFunSuite {
     assert(a.toSeq == Seq(10L, 20L, 30L))
     assert(b.toSeq == Seq(10L, 20L, 30L))
   }
+
+  test("toSinks keeps every micro-batch in a ParquetSink, not only the last") {
+    val spark = TestSpark.spark
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+
+    val out1 = Files.createTempDirectory("graft_fan2_parquet").toString
+    val out2 = Files.createTempDirectory("graft_fan2_idem").toString
+    val nums = MemoryStream[Long]
+    val handle = Graft.source("fan2", DatasetSource(nums.toDS(), (_: Long) => 0L))
+      .map(_ * 10)
+      .toSinks(Seq(ParquetSink(out1), IdempotentParquetSink(out2)))
+    nums.addData(1L, 2L)
+    handle.processAllAvailable()
+    nums.addData(3L)
+    handle.processAllAvailable()
+    handle.stop()
+
+    val a = spark.read.parquet(out1).selectExpr("_1").as[Long].collect().sorted
+    val b = spark.read.parquet(out2).selectExpr("_1").as[Long].collect().sorted
+    assert(a.toSeq == Seq(10L, 20L, 30L))
+    assert(b.toSeq == Seq(10L, 20L, 30L))
+  }
 }

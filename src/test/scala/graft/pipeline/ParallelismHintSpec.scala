@@ -128,9 +128,9 @@ class ParallelismHintSpec extends AnyFunSuite {
     val seenAtStart = new java.util.concurrent.atomic.AtomicReference[String]()
     final case class ProbeSink(orig: org.apache.spark.sql.SparkSession,
         inner: SinkConfig[(String, Long)]) extends SinkConfig[(String, Long)] {
-      def writeBatch(ds: org.apache.spark.sql.Dataset[((String, Long), Long)]): Unit =
-        inner.writeBatch(ds)
-      def writeStream(ds: org.apache.spark.sql.Dataset[((String, Long), Long)],
+      def writeMicroBatch(ds: org.apache.spark.sql.Dataset[((String, Long), Long)],
+          batchId: Long): Unit = inner.writeMicroBatch(ds, batchId)
+      override def writeStream(ds: org.apache.spark.sql.Dataset[((String, Long), Long)],
           name: String, checkpointLocation: Option[String],
           trigger: org.apache.spark.sql.streaming.Trigger)
           : org.apache.spark.sql.streaming.StreamingQuery = {

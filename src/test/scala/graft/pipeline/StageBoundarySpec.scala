@@ -36,6 +36,9 @@ class StageBoundarySpec extends AnyFunSuite {
     import spark.implicits._
 
     val handoff = Files.createTempDirectory("graft_handoff").toString
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def tmpEntries = tmp.list().toSet
+    val tmpBefore = tmpEntries
     val lines = MemoryStream[String]
 
     // Stage 1 (stateful): per-word running counts → handoff.
@@ -78,5 +81,9 @@ class StageBoundarySpec extends AnyFunSuite {
     val want = expected.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
     assert(got == want)
     assert(got("t") == 4L) // "to" ends at 4
+    // without a checkpointLocation the handoff query checkpoints inside
+    // the handoff dir, not in a fresh tmpdir entry nothing deletes
+    assert(new java.io.File(s"$handoff/_ckpt/commits").isDirectory)
+    assert((tmpEntries -- tmpBefore).filter(_.startsWith("graft_handoff_ckpt")).isEmpty)
   }
 }

@@ -58,6 +58,26 @@ class TwoPhaseCommitSinkSpec extends AnyFunSuite {
     assert(gotIdem.toSeq == (0L until 150L))
   }
 
+  test("a stopped foreachBatch sink query leaves no listener behind") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def listeners = spark.streams.listListeners().toSet
+    val before = listeners
+    val mem = MemoryStream[(Long, Long)]
+    val handle = Graft.source("idem-listener", DatasetSource(mem.toDS(), (t: (Long, Long)) => t._2))
+      .toSink(IdempotentParquetSink(Files.createTempDirectory("idem-listener").toString))
+    val added = listeners -- before
+    assert(added.size == 1, s"expected one settle listener, got $added")
+    mem.addData((1L, 1L))
+    handle.processAllAvailable()
+    handle.stop()
+    val deadline = System.currentTimeMillis() + 10000
+    while (listeners.exists(added) && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    assert(!listeners.exists(added), "settle listener outlived its query")
+    assert(spark.streams.listListeners().length <= before.size)
+  }
+
   test("a replayed batchId is skipped whole (phase-2 manifest is the truth)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("twopc-replay").toString
@@ -65,8 +85,8 @@ class TwoPhaseCommitSinkSpec extends AnyFunSuite {
     def ds(rows: Seq[(Long, Long)]) =
       spark.createDataset(rows).map(r => (r, r._2)) // stamped shape (T, ts)
     // foreachBatch path: same batchId re-delivered after a restart
-    sink.writeOne(ds(Seq((1L, 1L), (2L, 2L))), 7L)
-    sink.writeOne(ds(Seq((99L, 99L))), 7L) // replay: must not double-write
+    sink.writeMicroBatch(ds(Seq((1L, 1L), (2L, 2L))), 7L)
+    sink.writeMicroBatch(ds(Seq((99L, 99L))), 7L) // replay: must not double-write
     val got = TwoPhaseCommitSink.readCommitted(spark, dir)
       .select("_1._1").as[Long].collect().sorted
     assert(got.toSeq == Seq(1L, 2L))
@@ -76,7 +96,7 @@ class TwoPhaseCommitSinkSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("twopc-abort").toString
     val sink = TwoPhaseCommitSink[(Long, Long)](dir)
-    sink.writeOne(spark.createDataset(Seq((1L, 1L))).map(r => (r, r._2)), 0L)
+    sink.writeMicroBatch(spark.createDataset(Seq((1L, 1L))).map(r => (r, r._2)), 0L)
     // died in phase 1: staged parquet, no manifest
     spark.createDataset(Seq((666L, 0L))).map(r => (r, r._2))
       .write.parquet(s"$dir/staging/batch-5")

@@ -128,6 +128,32 @@ class TwoPhaseCommitSocketSpec extends AnyFunSuite {
     receiver.close()
   }
 
+  test("graceful stop commits the tail transaction inside a toSinks fan-out") {
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    implicit val longEnc: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
+    val receiver = new ProtocolPeers.TwoPcReceiver()
+    val inDir = Files.createTempDirectory("twopc_fan_stop_in").toString
+    val idemDir = Files.createTempDirectory("twopc_fan_stop_idem").toString
+    (0 until 2).foreach(k => addFile(inDir, k * 20 until (k + 1) * 20))
+    val h = Graft.source("twopc-fan-stop-src", ParquetReplaySource[Long](inDir,
+        (r: Row) => r.getLong(0), (r: Row) => r.getLong(0),
+        maxFilesPerTrigger = 1)(Encoders.scalaLong))
+      .toSinks(Seq(
+        ConnectorSocketSink[Long]("127.0.0.1", receiver.server.getLocalPort,
+          (v: Long) => s"v-$v".getBytes(UTF_8)),
+        IdempotentParquetSink[Long](idemDir)))
+    h.processAllAvailable()
+    h.stop()
+    // the fan-out forwards termination to the connector sink, whose hook
+    // phase-2-commits the open tail
+    assert(awaitCond(10000)(receiver.committed.size == 40 && receiver.inDoubt.isEmpty),
+      s"tail not committed at graceful stop: ${receiver.committed.size} committed, " +
+        s"in doubt ${receiver.inDoubt.keySet()}")
+    assert(receiver.committed.asScala.toSet == (0 until 40).map(v => s"v-$v").toSet)
+    assert(spark.read.parquet(idemDir).count() == 40L)
+    receiver.close()
+  }
+
   test("recovery resolves ONLY its own stream's in-doubt transactions") {
     // Two sinks on disjoint streams against ONE peer — the deployment
     // shape the class doc endorses. The peer's in-doubt ledger is global
