@@ -1002,13 +1002,13 @@ object StreamBench {
     // of the events table (~2 M frames/leg at sf0.1, 4 M
     // merged rows — enough for steady-state batches without holding
     // hundreds of MB of frames).
-    // One socket is one ordered stream decoded by ONE task — the
-    // FramedSocketSource contract — so a leg parallelizes the
-    // reference's way: N connections per leg, each carrying a
-    // USER-HASH shard (per-key order preserved per socket; cross-key
-    // interleave across sockets is the same disorder the 16-file
-    // parquet replay has, absorbed by the per-key within-batch
-    // event-time sort), merged into the one keyed flow.
+    // Each leg runs the source's default parallel plan (one partition
+    // per chunk slice) over N connections, each carrying a USER-HASH
+    // shard, merged into the one keyed flow. What holds is per-key
+    // order per socket: the per-key within-batch event-time sort absorbs
+    // the interleave across partitions and sockets (the same disorder
+    // the 16-file parquet replay has), cross-partition ties included,
+    // since these rows' event times are unique per key.
     val WireShards = 4
     // Each shard is staged as PRE-FRAMED ~4 MB slabs plus its frame
     // count. The reference's giles sender blasts a pre-encoded file from

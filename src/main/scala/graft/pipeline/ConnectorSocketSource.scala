@@ -4,8 +4,6 @@ import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
@@ -39,9 +37,9 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   *    replenishing exactly the slots the commit freed. A sender that
   *    spends one credit per MESSAGE and pauses at zero can never overrun
   *    the buffer (grants = capacity + frames freed, so outstanding ≤
-  *    capacity); the bounded buffer + `lock.wait` stays as the backstop
-  *    for trivial senders that ignore credits, which v3 explicitly
-  *    permits.
+  *    capacity); the [[FrameBuffer]]'s park on its unplanned backlog
+  *    stays as the backstop for trivial senders that ignore credits,
+  *    which v3 explicitly permits.
   *  - EOS_MESSAGE ends the stream (no reconnect).
   *
   * Wire format: every frame is 4-byte big-endian length + 1 type byte +
@@ -49,8 +47,10 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * stream multiplexing (one connection = one stream;
   * run N sources and `merge`, the reference's own parallelism model).
   *
-  * Scale shape: the driver-side buffer is the only state (bounded by
-  * `maxBufferedFrames`); offsets are frame counts, so checkpoints are a
+  * Scale shape: the driver-side [[FrameBuffer]] the raw socket source
+  * also uses is the only state. Accepted payloads are laid out in its 1 MB
+  * [len][payload] chunks, and a batch ships its chunk slices as ONE
+  * ordered partition. Offsets are frame counts, so checkpoints are a
   * single u64 per batch. One socket is one ordered stream — parallel
   * ingress is N sources, not one fat one, exactly like the reference's
   * per-connection connector sources. */
@@ -121,19 +121,12 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
     s"maxBufferedFrames must be >= 2 (got $maxBufferedFrames): a 1-frame " +
       "credit window cannot keep the commit-to-ACK cascade live")
 
-  // frames(i) holds absolute message id (base + i); base advances on
-  // commit. `started` flips when the first offset-bearing callback tells
-  // us where the checkpoint committed — the connection is LAZY because
-  // the resume point is only known then.
-  private val lock = new Object
-  private val frames = ArrayBuffer.empty[Array[Byte]]
-  private var base = 0L
-  private var started = false
-  private var eos = false
+  // Buffer indices are absolute message ids. The connection is LAZY: it
+  // starts on the first offset-bearing callback, which carries the
+  // checkpoint-committed resume point.
+  private val buffer = new FrameBuffer(maxBufferedFrames, s"connector-socket manager for $host:$port")
+  @volatile private var eos = false
   @volatile private var stopped = false
-  @volatile private var readerError: Throwable = _
-  @volatile private var availableNowCap: Option[Long] = None
-  @volatile private var availableNowPending = false
   @volatile private var currentSocket: Socket = _
 
   private val outLock = new Object
@@ -141,8 +134,8 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
   // Credit-epoch bookkeeping (see the handshake grant comment): freed
   // slots whose commit-time ACK found a null outStream, to be replenished
   // right after the handshake publishes the new stream; the epoch pins
-  // which grant snapshot a commit's trim preceded. Guarded by `lock`
-  // (grantEpoch) / `outLock` (droppedAckFreed).
+  // which grant snapshot a commit's trim preceded. Guarded by `buffer`
+  // (grantEpoch) / `outLock` (droppedAckFreed); lock order outLock → buffer.
   private var grantEpoch = 0L
   private var droppedAckFreed = 0L
 
@@ -154,13 +147,24 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
     }
   }
 
-  private def expectedNext: Long = base + frames.length
-
   /** Connect + handshake + drain, reconnecting (1 s backoff) until EOS,
     * stop(), or an unrecoverable protocol error. */
   private val manager = new Thread(s"${ShortName}:$host:$port") {
+    // The open chunk: accepted MESSAGE payloads in the buffer's
+    // [len][payload] layout, not yet sealed. They count toward
+    // expectedNext, and survive a reconnect until the next seal.
+    private val chunk = new java.io.ByteArrayOutputStream(FrameBuffer.ChunkBytes)
+    private val chunkOut = new DataOutputStream(chunk)
+    private var chunkFrames = 0
+    private def expectedNext: Long = buffer.total + chunkFrames
+    private def seal(): Unit = if (chunkFrames > 0) {
+      buffer.append(FrameChunk(chunkFrames, chunk.toByteArray))
+      chunk.reset()
+      chunkFrames = 0
+    }
+
     override def run(): Unit = {
-      while (!stopped && !eos && readerError == null) {
+      while (!stopped && !eos && !buffer.failed) {
         var socket: Socket = null
         try {
           socket = new Socket()
@@ -190,33 +194,35 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
                 s"connector HELLO cookie mismatch from $host:$port")
             }
           }
+          // frames left open by the last session are in order: seal them
+          // so the grant and the resume point both count them
+          seal()
           // initial credit grant = buffer space available right now (a
           // reconnect may find frames still held from the last session).
           // The grant SNAPSHOT also opens a new credit epoch: a commit
           // whose trim lands before this point is reflected in the grant
-          // (frames.length already reduced), one landing after must be
-          // ACKed once outStream is live — droppedAckFreed accumulates
-          // exactly the post-snapshot trims whose ACK found a null
-          // stream, and the epoch counter keeps a pre-snapshot commit
-          // from recording itself after the fact (the double-credit /
-          // lost-credit ratchet either way would permanently shrink a
-          // credit-honoring sender's window).
-          val grant = outLock.synchronized(lock.synchronized {
+          // (held already reduced), one landing after must be ACKed once
+          // outStream is live — droppedAckFreed accumulates exactly the
+          // post-snapshot trims whose ACK found a null stream, and the
+          // epoch counter keeps a pre-snapshot commit from recording
+          // itself after the fact (the double-credit / lost-credit
+          // ratchet either way would permanently shrink a credit-honoring
+          // sender's window). A sender that ignored credits may have
+          // overfilled the buffer: grant nothing then, not a negative u64.
+          val grant = outLock.synchronized(buffer.synchronized {
             droppedAckFreed = 0L
             grantEpoch += 1
-            maxBufferedFrames.toLong - frames.length
+            math.max(0L, maxBufferedFrames - buffer.held)
           })
           writeFrame(out, typed(Ok, u64(grant)))
           val notify = readFrame(in)
           require(notify(0) == Notify, s"expected NOTIFY, got type ${notify(0)}")
-          val resume = lock.synchronized(expectedNext)
-          writeFrame(out, typed(NotifyAck, u64(resume)))
+          writeFrame(out, typed(NotifyAck, u64(expectedNext)))
           outLock.synchronized {
             outStream = out
             if (droppedAckFreed > 0) {
               // replenish the slots freed during the handshake window
-              try writeFrame(out,
-                typed(Ack, u64(lock.synchronized(base)) ++ u64(droppedAckFreed)))
+              try writeFrame(out, typed(Ack, u64(buffer.committed) ++ u64(droppedAckFreed)))
               catch { case _: java.io.IOException => }
               droppedAckFreed = 0L
             }
@@ -227,35 +233,39 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
             val f = readFrame(in)
             f(0) match {
               case Message =>
+                if (f.length < 9)
+                  throw new IllegalStateException(
+                    s"connector peer $host:$port sent a ${f.length}-byte MESSAGE, " +
+                      "shorter than its 9-byte header (type byte + u64 message id)")
                 val id = readU64(f, 1)
-                val payload = java.util.Arrays.copyOfRange(f, 9, f.length)
-                val dropped = lock.synchronized {
-                  if (id == expectedNext) {
-                    while (frames.length >= maxBufferedFrames && !stopped) lock.wait()
-                    if (!stopped) { frames += payload; lock.notifyAll() }
-                    false
-                  } else if (id > expectedNext) {
-                    // gap: the sender skipped ids we never saw — demand a
-                    // full re-handshake at our point of reference
-                    sendToPeer(typed(Restart))
-                    open = false
-                    false
-                  } else true // id < expectedNext: replay overlap, drop
+                val next = expectedNext
+                if (id == next) {
+                  chunkOut.writeInt(f.length - 9)
+                  chunkOut.write(f, 9, f.length - 9)
+                  chunkFrames += 1
+                } else if (id > next) {
+                  // gap: the sender skipped ids we never saw — demand a
+                  // full re-handshake at our point of reference
+                  sendToPeer(typed(Restart))
+                  open = false
+                } else {
+                  // id < next, replay overlap: drop it. The duplicate
+                  // consumed a sender credit without ever occupying a
+                  // buffer slot; commit-time ACKs only replenish freed
+                  // SLOTS, so without this immediate refund a
+                  // credit-honoring sender with replay overlap bleeds
+                  // credits and can stall mid-replay. The ACK's point of
+                  // reference is the unchanged committed count.
+                  sendToPeer(typed(Ack, u64(buffer.committed) ++ u64(1L)))
                 }
-                // A dropped duplicate consumed a sender credit without
-                // ever occupying a buffer slot; commit-time ACKs only
-                // replenish freed SLOTS, so without this immediate
-                // refund a credit-honoring sender with replay overlap
-                // bleeds credits and can stall mid-replay before
-                // reaching the frames we actually want. The ACK's point
-                // of reference is the unchanged committed count.
-                if (dropped) sendToPeer(typed(Ack, u64(lock.synchronized(base)) ++ u64(1L)))
               case EosMessage =>
                 // end of stream, but NOT of the session: stay parked in
                 // readFrame so the connection remains open for the
                 // trailing commit-time ACKs (the sender drains its replay
-                // buffer on them) until stop() closes the socket.
-                lock.synchronized { eos = true; lock.notifyAll() }
+                // buffer on them) until stop() closes the socket. Seal
+                // first: a waiter that sees `eos` must see every frame.
+                seal()
+                eos = true
               case Error =>
                 // a truncated ERROR frame must still surface AS the
                 // peer's error signal, not as an IndexOutOfBounds
@@ -264,6 +274,7 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
                   s"connector peer $host:$port sent ERROR: $msg")
               case _ => // future frame types: ignore
             }
+            if (chunk.size >= FrameBuffer.ChunkBytes || in.available() == 0) seal()
           }
         } catch {
           // No `if !stopped` guards on these arms: stop() closes the
@@ -274,67 +285,45 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
           case _: EOFException | _: java.net.SocketException
                | _: java.net.SocketTimeoutException => // peer dropped / stop / bounded connect
           case _: InterruptedException => // stop()
-          case t: Throwable =>
-            if (!stopped) { readerError = t; lock.synchronized(lock.notifyAll()) }
+          case t: Throwable => if (!stopped) buffer.fail(t)
         } finally {
           outLock.synchronized { outStream = null }
           currentSocket = null
           if (socket != null) { try socket.close() catch { case _: java.io.IOException => } }
         }
-        if (!stopped && !eos && readerError == null)
+        if (!stopped && !eos && !buffer.failed)
           try Thread.sleep(1000L) catch { case _: InterruptedException => }
       }
     }
   }
   manager.setDaemon(true)
 
-  private def ensureStarted(from: Long): Unit = {
-    if (readerError != null)
-      throw new IllegalStateException(
-        s"connector-socket manager for $host:$port died", readerError)
-    lock.synchronized {
-      if (!started) {
-        base = from // the checkpoint-committed point of reference
-        started = true
-        manager.start()
-      }
-    }
-  }
-
-  private def total: Long = lock.synchronized(expectedNext)
+  private def ensureStarted(from: Long): Unit = if (buffer.startAt(from)) manager.start()
 
   override def initialOffset(): Offset = FrameCount(0L)
   override def deserializeOffset(json: String): Offset = FrameCount(json.toLong)
   // The connection is lazy (it starts on the first offset-bearing call,
-  // which carries the resume point), so at prepare() time `total` is
-  // always 0 — capturing it here would clamp every batch to empty and an
-  // AvailableNow query would silently read nothing (ADVICE r4). Defer:
-  // flag the capture and resolve it on the first latestOffset after the
-  // handshake, once the sender has drained its backlog/replay to us.
-  override def prepareForTriggerAvailableNow(): Unit = availableNowPending = true
-  override def reportLatestOffset(): Offset = FrameCount(total)
+  // which carries the resume point), so at prepare() time the buffer is
+  // always empty — capturing it here would clamp every batch to empty and
+  // an AvailableNow query would silently read nothing. Defer: resolve the
+  // capture on the first latestOffset after the handshake.
+  override def prepareForTriggerAvailableNow(): Unit = buffer.requestAvailableNow()
+  override def reportLatestOffset(): Offset = FrameCount(buffer.total)
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("latestOffset(start, limit) is used")
 
   /** Resolve the deferred AvailableNow cap: wait for the handshake to
     * COMPLETE (outStream is set right after NOTIFY_ACK — without this
     * gate a connect slower than one idle tick resolved the cap to the
-    * start offset and the query read zero frames), then let the sender's
-    * backlog drain until the stream goes idle for one tick (no new frame
-    * in 250 ms), EOS, or `replayTimeoutMs` elapses. "Available now" over
-    * a socket = whatever the peer had queued at query start, which only
-    * becomes observable after it is sent; a sender that pauses longer
-    * than the idle tick mid-backlog truncates the capture — inherent to
-    * any quiescence heuristic over a stream with no end marker short of
-    * EOS. */
+    * start offset and the query read zero frames), then let the buffer's
+    * idle-tick capture wait out the sender's backlog, stopping early at
+    * EOS, all within `replayTimeoutMs`. */
   private def resolveAvailableNowCap(): Unit = {
     val deadline = System.currentTimeMillis() + replayTimeoutMs
-    while (outStream == null && !eos && readerError == null &&
+    while (outStream == null && !eos && !buffer.failed &&
         System.currentTimeMillis() < deadline)
       Thread.sleep(20L)
-    if (readerError != null)
-      throw new IllegalStateException(
-        s"connector-socket manager for $host:$port died", readerError)
+    buffer.check()
     // an unreachable sender must FAIL the AvailableNow run, not resolve
     // the cap to the start offset and terminate 'successfully' with
     // zero rows (the caller could never distinguish 'nothing available'
@@ -344,21 +333,13 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
       throw new IllegalStateException(
         s"connector peer $host:$port did not complete a handshake within " +
           s"${replayTimeoutMs}ms — cannot resolve the AvailableNow capture point")
-    lock.synchronized {
-      var last = -1L
-      while (expectedNext != last && !eos && readerError == null &&
-          System.currentTimeMillis() < deadline) {
-        last = expectedNext
-        lock.wait(250L)
-      }
-      availableNowCap = Some(expectedNext)
-    }
+    buffer.captureAvailableNow(deadline, eos)
   }
 
   override def latestOffset(start: Offset, readLimit: ReadLimit): Offset = {
     val from = start.asInstanceOf[FrameCount].n
     ensureStarted(from)
-    if (availableNowPending) { availableNowPending = false; resolveAvailableNowCap() }
+    if (buffer.availableNowPending) resolveAvailableNowCap()
     // Half-window cap: credits replenish on commit(), and Spark only
     // commits batch N while constructing batch N+2 — so a batch that
     // swallowed the ENTIRE credit window would leave the sender stalled
@@ -368,39 +349,37 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
     // the leftover half forms the next batch, whose construction commits
     // the previous one and ACKs its slots back to the sender — the
     // cascade that keeps credit flow live at any stream length.
-    val perTrigger =
-      math.min(maxFramesPerTrigger, math.max(1L, maxBufferedFrames.toLong / 2))
-    val end = from + math.min(perTrigger, math.max(0L, total - from))
-    FrameCount(math.max(from, availableNowCap.fold(end)(math.min(end, _))))
+    buffer.latest(from,
+      math.min(maxFramesPerTrigger, math.max(1L, maxBufferedFrames.toLong / 2)))
   }
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
+  /** Plans `[s, e)` as ONE ordered partition: a single task decodes the
+    * batch in message-id order. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FrameCount].n
     val e = end.asInstanceOf[FrameCount].n
     ensureStarted(s)
-    if (e <= s) return Array.empty
-    // A restart replays the last planned batch from the checkpointed
-    // offsets; the handshake asked the sender to resend from `s`, so WAIT
-    // for the replayed range instead of delivering a short (lossy) batch.
-    val deadline = System.currentTimeMillis() + replayTimeoutMs
-    lock.synchronized {
-      while (expectedNext < e && readerError == null && !eos &&
-          System.currentTimeMillis() < deadline)
-        lock.wait(100L)
-      if (readerError != null)
-        throw new IllegalStateException(
-          s"connector-socket manager for $host:$port died", readerError)
-      if (expectedNext < e)
+    if (e > s) {
+      // A restart replays the last planned batch from the checkpointed
+      // offsets; the handshake asked the sender to resend from `s`, so
+      // WAIT for the replayed range instead of delivering a short
+      // (lossy) batch.
+      val deadline = System.currentTimeMillis() + replayTimeoutMs
+      buffer.synchronized {
+        while (buffer.total < e && !buffer.failed && !eos &&
+            System.currentTimeMillis() < deadline)
+          buffer.wait(100L)
+      }
+      buffer.check()
+      if (buffer.total < e)
         throw new IllegalStateException(
           s"connector peer $host:$port did not replay frames [$s,$e) within " +
             s"${replayTimeoutMs}ms of the NOTIFY_ACK resume request " +
-            s"(have ${expectedNext}) — at-least-once needs the sender to " +
+            s"(have ${buffer.total}) — at-least-once needs the sender to " +
             "retain frames past the last ACK")
-      val lo = (s - base).toInt
-      val hi = (e - base).toInt
-      Array(FramedArrayPartition(frames.slice(lo, hi).toArray))
     }
+    buffer.plan(s, e, ordered = true)
   }
   override def createReaderFactory(): PartitionReaderFactory = rows
 
@@ -411,23 +390,13 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
     * sender at the protocol level, not just via TCP backpressure). */
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[FrameCount].n
-    val (freed, myEpoch) = lock.synchronized {
-      val dropped =
-        if (e > base) {
-          val d = math.min(e - base, frames.length.toLong).toInt
-          frames.dropInPlace(d)
-          base = e
-          d
-        } else 0
-      lock.notifyAll() // wake a parked reader
-      (dropped, grantEpoch)
-    }
+    val (freed, myEpoch) = buffer.synchronized((buffer.commit(e), grantEpoch))
     outLock.synchronized {
       val o = outStream
       if (o != null) {
-        try writeFrame(o, typed(Ack, u64(e) ++ u64(freed.toLong)))
+        try writeFrame(o, typed(Ack, u64(e) ++ u64(freed)))
         catch { case _: java.io.IOException => } // reconnect loop handles it
-      } else if (freed > 0 && myEpoch == lock.synchronized(grantEpoch)) {
+      } else if (freed > 0 && myEpoch == buffer.synchronized(grantEpoch)) {
         // the trim post-dates the in-progress grant snapshot (same
         // epoch), so the grant did NOT cover these slots and this ACK
         // just died on the null stream — record them for the
@@ -441,7 +410,6 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
 
   override def stop(): Unit = {
     stopped = true
-    lock.synchronized(lock.notifyAll())
     outLock.synchronized {
       if (outStream != null) {
         // graceful: tell the sender we're going away and will re-handshake
@@ -449,31 +417,14 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
         catch { case _: java.io.IOException => }
       }
     }
+    // interrupt() ends a park in the buffer but does not unblock a socket
+    // read — a manager parked in readFrame would leak the thread and fd
+    // if the peer ignores RESTART. Closing the socket forces readFrame to
+    // throw; `stopped` is already set so the loop exits instead of
+    // reconnecting.
     manager.interrupt()
-    // interrupt() does not unblock a socket read — a manager parked in
-    // readFrame would leak the thread and fd if the peer ignores RESTART
-    // (ADVICE r4). Closing the socket forces readFrame to throw; `stopped`
-    // is already set so the loop exits instead of reconnecting.
     val s = currentSocket
     if (s != null) { try s.close() catch { case _: java.io.IOException => } }
-  }
-}
-
-/** One batch of the connector buffer: the payloads of consecutive
-  * message ids. The ALO connector path buffers per frame (its replay/ACK
-  * protocol is frame-addressed and its volumes are credit-bounded), so it
-  * doesn't need the chunked layout the throughput-oriented socket source
-  * uses. */
-final case class FramedArrayPartition(payloads: Array[Array[Byte]])
-    extends FramedPartition {
-  override def frames(): FrameWalk = new FrameWalk {
-    private var i = 0
-    override def advance(): Boolean = i < payloads.length && {
-      bytes = payloads(i)
-      len = bytes.length
-      i += 1
-      true
-    }
   }
 }
 

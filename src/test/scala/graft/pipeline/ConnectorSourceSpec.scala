@@ -448,6 +448,81 @@ class ConnectorSourceSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("maxBufferedFrames"), ex.getMessage)
   }
 
+  test("a MESSAGE shorter than its 9-byte header fails the query with a named protocol error") {
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    val server = new ServerSocket(0)
+    val peer = new Thread(() =>
+      try {
+        val conn = server.accept()
+        val in = new DataInputStream(conn.getInputStream)
+        val out = new DataOutputStream(conn.getOutputStream)
+        writeFrame(out, typed(Hello,
+          shortBytes("") ++ shortBytes("graft-test") ++ shortBytes("events")))
+        readFrame(in) // OK
+        writeFrame(out, typed(Notify, u64(0L)))
+        readFrame(in) // NOTIFY_ACK
+        writeFrame(out, typed(Message, Array[Byte](0, 0, 0, 1))) // 5 bytes: half an id
+        while (true) readFrame(in) // hold the connection until the worker drops it
+      } catch { case _: java.io.IOException => })
+    peer.setDaemon(true)
+    peer.start()
+    val h = Graft.source("connector-short-message",
+        ConnectorSocketSource("127.0.0.1", server.getLocalPort, StringFrames,
+          replayTimeoutMs = 5000))
+      .toSink(MemorySink(s"connector_short_message_${System.nanoTime()}"))
+    assert(awaitCond(15000)(h.query.exists(_.exception.isDefined)),
+      "query kept running after a truncated MESSAGE")
+    def causes(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: causes(t.getCause)
+    assert(causes(h.query.get.exception.get).exists(c => c.getMessage != null &&
+      c.getMessage.contains("shorter than its 9-byte header")),
+      h.query.get.exception.get.toString)
+    h.stop()
+    server.close()
+  }
+
+  test("the connector buffers 1 MB chunks and plans each batch as one ordered partition") {
+    // > 2 chunk-seal thresholds of frames (1 KB payload × 3000 ≈ 3 MB vs
+    // the 1 MB seal), so the buffer MUST hold ≥ 2 chunks whatever the
+    // thread scheduling. 1000-frame batches then cross chunk boundaries.
+    val n = 3000
+    def payloadOf(i: Int): Array[Byte] = (f"f$i%04d" + "x" * 995).getBytes(UTF_8)
+    val sender = new ProtocolPeers.ReplaySender((0 until n).map(payloadOf), cookie = "c")
+    val dec = StringFrames.asInstanceOf[FramedDecoder[Any]]
+    val enc = org.apache.spark.sql.Encoders.tuple(
+      org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaLong)
+      .asInstanceOf[org.apache.spark.sql.Encoder[Any]]
+    val stream = new ConnectorSocketMicroBatchStream("127.0.0.1", sender.server.getLocalPort,
+      maxFramesPerTrigger = 1000, maxBufferedFrames = 1 << 20, cookie = None,
+      replayTimeoutMs = 30000, rows = FramedReaderFactory(dec, enc))
+    val all = org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
+    try {
+      stream.latestOffset(FrameCount(0), all) // starts the lazy connection at 0
+      assert(awaitCond(30000)(
+        stream.reportLatestOffset().asInstanceOf[FrameCount].n == n), "sender never drained")
+      val got = scala.collection.mutable.ArrayBuffer.empty[String]
+      val slicesPerBatch = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var start = 0L
+      while (start < n) {
+        val end = stream.latestOffset(FrameCount(start), all)
+        val parts = stream.planInputPartitions(FrameCount(start), end)
+        assert(parts.length === 1, s"a batch must plan ONE partition, got ${parts.length}")
+        slicesPerBatch += parts(0).asInstanceOf[FrameChunkPartition].slices.length
+        val reader = FramedReaderFactory(dec, enc).createReader(parts(0))
+        while (reader.next()) got += reader.get().getUTF8String(0).toString.take(5)
+        stream.commit(end)
+        start = end.asInstanceOf[FrameCount].n
+      }
+      assert(slicesPerBatch.length === 3)
+      assert(slicesPerBatch.exists(_ >= 2), s"no batch crossed a chunk boundary: $slicesPerBatch")
+      assert(got.toSeq === (0 until n).map(i => f"f$i%04d"), "strict id order across chunk boundaries")
+    } finally {
+      stream.stop()
+      sender.close()
+    }
+  }
+
   test("cookie mismatch fails the handshake loudly") {
     implicit val ss: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._

@@ -197,7 +197,7 @@ class FramedSourceSpec extends AnyFunSuite {
       assert(end.asInstanceOf[FrameCount].n === n.toLong)
       val parts = stream.planInputPartitions(FrameCount(0), end)
       assert(parts.length === 1, s"ordered mode must plan ONE partition, got ${parts.length}")
-      val ord = parts(0).asInstanceOf[FramedSocketOrderedPartition]
+      val ord = parts(0).asInstanceOf[FrameChunkPartition]
       assert(ord.slices.length >= 2,
         s"a ${n} KB stream must span multiple 1 MB chunks (got ${ord.slices.length} slice)")
       val reader = FramedReaderFactory(dec, enc).createReader(parts(0))
