@@ -7,6 +7,19 @@ import org.apache.spark.sql.SparkSession
   * construction — all confs are fixed at build time (the events table's
   * TIMESTAMP(NANOS) handling used to be set lazily at plan-build time,
   * which is racy; see ADVICE r1).
+  *
+  * Init order: Spark reads the codegen cache size once per JVM, in the
+  * static initializer of `CodeGenerator`, from the conf of the session
+  * active at the first compile. If anything in the JVM generates
+  * code before a session built through [[tune]] exists, the JVM keeps
+  * Spark's default of 100 entries for its whole life, without a warning.
+  * Build the session first. Nothing in `graft` compiles before it: the
+  * encoders held in objects (`WireQueries`, `PipelineQueries`,
+  * `Pipeline`) are expression trees until a serializer is applied inside
+  * a query; function registration (`VectorFunctions.register`,
+  * `GraftExtensions`) and schema loading (`Tables`) take the session as
+  * an argument; the framed sources build their serializer inside the scan.
+  * `CodegenReuseSpec` fails if the size did not reach `CodeGenerator`.
   */
 object Sessions {
 
@@ -44,6 +57,25 @@ object Sessions {
       // and on-disk permission bits are unchanged; other schemes untouched.
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+      // Compile each plan once per JVM. Spark keeps generated classes in
+      // an LRU of this many entries, 100 by default. batch_pack's five
+      // queries rotate through about 120 classes, so with 100 every class
+      // was evicted before its next use and Janino compiled it again
+      // (about 40% of that loop's wall time). One graft.Bench pass at
+      // sf0.01, stream rows included, leaves 1,248 classes cached; 2,000
+      // holds them with headroom for user plans. Read once per JVM.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // The cache is keyed on the generated source, and the whole-stage
+      // number in each class name is assigned as AQE plans the stages: it
+      // came out different between runs of the same query (d_ngram_jaccard,
+      // s_ann_recall, t_pipeline_e2e), so identical code compiled again.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // The cache is also keyed on the class loader. With artifact
+      // isolation every session, and so every streaming query's clone of
+      // it, runs its tasks under a class loader of its own, and each new
+      // streaming query compiled its whole plan again. graft adds no
+      // jars, files or archives to a session, so isolation buys nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     localDir.fold(tuned)(tuned.config("spark.local.dir", _))
   }
 
