@@ -1035,10 +1035,9 @@ object StreamBench {
         val counts = new Array[Long](WireShards)
         rows.foreach { r =>
           val i = math.floorMod(r.getLong(0), WireShards.toLong).toInt
-          val bb = java.nio.ByteBuffer.allocate(28)
-          bb.putInt(24)
-          bb.putLong(r.getLong(0)); bb.putLong(r.getLong(1)); bb.putLong(r.getLong(2))
-          bufs(i).write(bb.array(), 0, 28)
+          val payload = java.nio.ByteBuffer.allocate(24)
+            .putLong(r.getLong(0)).putLong(r.getLong(1)).putLong(r.getLong(2)).array()
+          Framing.write(bufs(i), payload)
           counts(i) += 1
           if (bufs(i).size() >= SlabBytes) { slabs(i) += bufs(i).toByteArray; bufs(i).reset() }
         }

@@ -91,10 +91,7 @@ object WireQueries {
           val t = new Thread(() => {
             val in = new DataInputStream(conn.getInputStream)
             try while (true) {
-              val len = in.readInt()
-              val buf = new Array[Byte](len)
-              in.readFully(buf)
-              inbox.add(buf)
+              inbox.add(Framing.read(in))
               inboxN.incrementAndGet()
             } catch { case _: java.io.IOException => } // writer done
             finally { try conn.close() catch { case _: java.io.IOException => } }
@@ -118,9 +115,8 @@ object WireQueries {
         override def run(): Unit =
           try {
             val conn = serve.accept()
-            val out = new java.io.DataOutputStream(
-              new java.io.BufferedOutputStream(conn.getOutputStream))
-            inbox.asScala.foreach { p => out.writeInt(p.length); out.write(p) }
+            val out = new java.io.BufferedOutputStream(conn.getOutputStream)
+            inbox.asScala.foreach(Framing.write(out, _))
             out.flush()
             conn.close()
           } catch { case _: java.io.IOException => }

@@ -68,18 +68,15 @@ object ConnectorProtocol {
   val ShortName = "graft-connector-socket"
 
   def writeFrame(out: DataOutputStream, body: Array[Byte]): Unit = {
-    out.writeInt(body.length)
-    out.write(body)
+    Framing.write(out, body)
     out.flush()
   }
   /** Frame write WITHOUT the flush — the sink's per-row data path: one
     * flush syscall per row through the buffered stream defeats the
     * buffer; the caller flushes once at its protocol barrier (phase 1,
     * phase 2). Control frames keep the flushing [[writeFrame]]. */
-  def writeFrameBuffered(out: DataOutputStream, body: Array[Byte]): Unit = {
-    out.writeInt(body.length)
-    out.write(body)
-  }
+  def writeFrameBuffered(out: DataOutputStream, body: Array[Byte]): Unit =
+    Framing.write(out, body)
   def typed(tpe: Byte, rest: Array[Byte] = Array.empty): Array[Byte] = {
     val b = new Array[Byte](1 + rest.length)
     b(0) = tpe
@@ -100,10 +97,8 @@ object ConnectorProtocol {
     (new String(body, off + 2, len, UTF_8), off + 2 + len)
   }
   def readFrame(in: DataInputStream): Array[Byte] = {
-    val len = in.readInt()
-    require(len >= 1, s"connector frame must carry a type byte, got length $len")
-    val body = new Array[Byte](len)
-    in.readFully(body)
+    val body = Framing.read(in)
+    require(body.length >= 1, "connector frame must carry a type byte, got an empty frame")
     body
   }
 }
@@ -154,7 +149,6 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
     // [len][payload] layout, not yet sealed. They count toward
     // expectedNext, and survive a reconnect until the next seal.
     private val chunk = new java.io.ByteArrayOutputStream(FrameBuffer.ChunkBytes)
-    private val chunkOut = new DataOutputStream(chunk)
     private var chunkFrames = 0
     private def expectedNext: Long = buffer.total + chunkFrames
     private def seal(): Unit = if (chunkFrames > 0) {
@@ -240,8 +234,7 @@ final class ConnectorSocketMicroBatchStream(host: String, port: Int,
                 val id = readU64(f, 1)
                 val next = expectedNext
                 if (id == next) {
-                  chunkOut.writeInt(f.length - 9)
-                  chunkOut.write(f, 9, f.length - 9)
+                  Framing.write(chunk, f, 9, f.length - 9)
                   chunkFrames += 1
                 } else if (id > next) {
                   // gap: the sender skipped ids we never saw — demand a

@@ -143,10 +143,10 @@ final class FrameBuffer(cap: Int, what: String) {
     else {
       var pos = 0
       var i = 0
-      while (i < skip) { pos += 4 + FramedSocket.frameLen(c.bytes, pos); i += 1 }
+      while (i < skip) { pos += Framing.HeaderBytes + Framing.len(c.bytes, pos); i += 1 }
       val startByte = pos
       i = 0
-      while (i < take) { pos += 4 + FramedSocket.frameLen(c.bytes, pos); i += 1 }
+      while (i < take) { pos += Framing.HeaderBytes + Framing.len(c.bytes, pos); i += 1 }
       FrameChunk(take, java.util.Arrays.copyOfRange(c.bytes, startByte, pos))
     }
 
@@ -180,23 +180,23 @@ object FrameBuffer {
 
 /** Frames of a socket micro-batch as chunk slices, walked in order: one
   * slice per partition in a parallel plan, all of a batch's slices in one
-  * partition in an ordered plan. */
+  * partition in an ordered plan. Each slice holds whole frames only, so
+  * each is one [[Framing.walk]] over its bytes. */
 final case class FrameChunkPartition(slices: Array[FrameChunk]) extends FramedPartition {
   override def frames(): FrameWalk = new FrameWalk {
     private var s = 0
-    private var pos = 0
-    private var walked = 0
+    private var slice: FrameWalk = Framing.walk(Array.emptyByteArray, 0, 0)
     // the payload is a view into the slice's bytes: no per-frame copy
     override def advance(): Boolean = {
-      while (s < slices.length && walked == slices(s).count) { s += 1; pos = 0; walked = 0 }
-      s < slices.length && {
-        bytes = slices(s).bytes
-        len = FramedSocket.frameLen(bytes, pos)
-        off = pos + 4
-        pos = off + len
-        walked += 1
-        true
+      while (!slice.advance()) {
+        if (s == slices.length) return false
+        slice = Framing.walk(slices(s).bytes, 0, slices(s).bytes.length)
+        s += 1
       }
+      bytes = slice.bytes
+      off = slice.off
+      len = slice.len
+      true
     }
   }
 }

@@ -44,19 +44,18 @@ object FramedLog {
       // Length snapshot FIRST: the writer appends concurrently, and frames
       // past this point belong to the next call.
       val len = raw.getChannel.size()
-      if (from + 4 > len) return from
+      if (from + Framing.HeaderBytes > len) return from
       skipFully(raw, from)
       val in = new java.io.DataInputStream(
         new java.io.BufferedInputStream(raw, 64 << 10))
       var pos = from
       var end = from
       var done = false
-      while (!done && pos + 4 <= len && (end - from) < maxBytes) {
-        val payloadLen = in.readInt() // big-endian u32, the TcpSink framing
-        require(payloadLen >= 0, s"negative frame length at $pos in $path")
-        if (pos + 4 + payloadLen <= len) {
+      while (!done && pos + Framing.HeaderBytes <= len && (end - from) < maxBytes) {
+        val payloadLen = Framing.readLen(in, s"at $pos in $path")
+        if (pos + Framing.HeaderBytes + payloadLen <= len) {
           skipFully(in, payloadLen.toLong)
-          pos += 4 + payloadLen
+          pos += Framing.HeaderBytes + payloadLen
           end = pos
         } else done = true // partial trailing frame: wait for the writer
       }
@@ -144,11 +143,11 @@ final case class FramedLogPartition(path: String, start: Long, end: Long)
     }
     private var pos = start
     override def advance(): Boolean = pos < end && {
-      len = in.readInt()
-      require(pos + 4 + len <= end, s"frame at $pos crosses batch end $end")
+      len = Framing.readLen(in, s"at $pos in $path")
+      require(pos + Framing.HeaderBytes + len <= end, s"frame at $pos crosses batch end $end")
       if (bytes.length < len) bytes = new Array[Byte](len)
       in.readFully(bytes, 0, len)
-      pos += 4 + len
+      pos += Framing.HeaderBytes + len
       true
     }
     override def close(): Unit = raw.close()

@@ -13,6 +13,8 @@ import org.apache.spark.sql.graft.TableBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import Framing.HeaderBytes
+
 /** DataSource-v2 micro-batch source speaking the reference's framed TCP
   * protocol: 4-byte big-endian length header + payload per message
   * (core/source/tcp_source/framed_source_notify.pony:91-133 — the
@@ -42,14 +44,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 object FramedSocket {
   val ShortName = "graft-framed-socket"
-
-  /** The 4-byte big-endian length header at `pos` — the ONE definition
-    * of the wire framing's length parse (reader-thread scanner,
-    * plan-time slicer, executor slice reader); a framing tweak edited
-    * here reaches every copy at once. */
-  private[graft] def frameLen(b: Array[Byte], pos: Int): Int =
-    ((b(pos) & 0xff) << 24) | ((b(pos + 1) & 0xff) << 16) |
-      ((b(pos + 2) & 0xff) << 8) | (b(pos + 3) & 0xff)
 }
 
 /** The table of a framed DSv2 source ([[FramedSocketSource]],
@@ -147,10 +141,10 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
           System.arraycopy(readBuf, 0, buf, bufLen, n)
           bufLen += n
           var more = true
-          while (more && bufLen - scanPos >= 4) {
-            val len = FramedSocket.frameLen(buf, scanPos)
+          while (more && bufLen - scanPos >= HeaderBytes) {
+            val len = Framing.len(buf, scanPos)
             require(len >= 0, s"negative frame length $len from $host:$port")
-            if (bufLen - scanPos - 4 >= len) { scanPos += 4 + len; frames += 1 }
+            if (bufLen - scanPos - HeaderBytes >= len) { scanPos += HeaderBytes + len; frames += 1 }
             else more = false
           }
           if (scanPos >= FrameBuffer.ChunkBytes || (frames > 0 && in.available() == 0))

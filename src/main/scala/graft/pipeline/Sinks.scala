@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.io.{BufferedOutputStream, DataOutputStream}
+import java.io.BufferedOutputStream
 import java.net.Socket
 
 import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, SparkSession}
@@ -326,8 +326,9 @@ final case class KafkaSinkConfig[T](
 }
 
 /** Length-framed TCP sink (core/sink/tcp_sink/tcp_sink.pony): 4-byte
-  * big-endian length header then payload — the framing giles/receiver
-  * expects. Each executor partition opens its own connection.
+  * big-endian length header then payload, written by [[Framing]] — the
+  * framing giles/receiver expects. Each executor partition opens its own
+  * connection.
   *
   * A transient peer reset no longer fails the batch: the writer
   * reconnects with capped backoff (`maxRetries` attempts, `backoffMs`
@@ -347,82 +348,80 @@ final case class KafkaSinkConfig[T](
 final case class TcpSink[T](host: String, port: Int, encode: T => Array[Byte],
     maxRetries: Int = 3, backoffMs: Long = 1000L)
     extends SinkConfig[T] {
-  private def foreach: ForeachWriter[(T, Long)] = new ForeachWriter[(T, Long)] {
-    @transient private var socket: Socket = _
-    @transient private var out: DataOutputStream = _
-    @transient private var sent: scala.collection.mutable.ArrayBuffer[Array[Byte]] = _
+  private def writer() = new TcpSink.PartitionWriter(host, port, maxRetries, backoffMs)
 
-    private def connect(): Unit = {
-      socket = new Socket(host, port)
-      out = new DataOutputStream(new BufferedOutputStream(socket.getOutputStream))
-    }
-    private def closeQuietly(): Unit = {
-      if (socket != null) {
-        try socket.close() catch { case _: java.io.IOException => }
-      }
-      socket = null; out = null
-    }
-    private def writeFrame(payload: Array[Byte]): Unit = {
-      out.writeInt(payload.length)
-      out.write(payload)
-      // surface a dead peer at the next frame (small retry window), not
-      // at the buffer boundary thousands of frames later
-      out.flush()
-    }
-
-    def open(partitionId: Long, epochId: Long): Boolean = {
-      sent = scala.collection.mutable.ArrayBuffer.empty
-      var attempt = 0
-      while (out == null) {
-        try connect()
-        catch {
-          case e: java.io.IOException =>
-            // a partially-constructed connection (socket up, stream
-            // setup failed) must be closed before the retry reassigns
-            // the field — process()'s identical catch does the same
-            closeQuietly()
-            attempt += 1
-            if (attempt > maxRetries) throw e
-            Thread.sleep(backoffMs)
-        }
-      }
-      true
-    }
-    def process(value: (T, Long)): Unit = {
-      val payload = encode(value._1)
-      var attempt = 0
-      var done = false
-      while (!done) {
-        try {
-          if (out == null) { connect(); sent.foreach(writeFrame) } // replay
-          writeFrame(payload)
-          sent += payload
-          done = true
-        } catch {
-          case e: java.io.IOException =>
-            closeQuietly()
-            attempt += 1
-            if (attempt > maxRetries) throw e
-            Thread.sleep(backoffMs)
-        }
-      }
-    }
-    def close(errorOrNull: Throwable): Unit = closeQuietly()
-  }
-  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit = {
-    val fw = foreach
+  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
     ds.foreachPartition { (it: Iterator[(T, Long)]) =>
-      if (fw.open(0, 0)) {
-        // the ForeachWriter contract: close(error) runs whatever
-        // process() did — without it a retries-exhausted partition
-        // leaks its executor-side socket on every task retry
-        try { it.foreach(fw.process); fw.close(null) }
-        catch { case e: Throwable => fw.close(e); throw e }
-      }
+      val w = writer()
+      // closed on every path: a retries-exhausted partition would
+      // otherwise leak its executor-side socket on every task retry
+      try it.foreach(r => w.write(encode(r._1)))
+      finally w.close()
     }
-  }
+
+  // A solo stream keeps Spark's `foreach` sink over the same writer: the
+  // default `foreachBatch` start plans each batch's Dataset again, and
+  // wire_spread read about 5% lower `rate_per_s` with it (SCALING.md,
+  // "One frame codec").
   override def writeStream(ds: Dataset[(T, Long)], name: String,
       checkpoint: Option[String], trigger: Trigger): StreamingQuery =
     SinkConfig.streamWriter(ds, name, checkpoint, trigger)
-      .foreach(foreach).outputMode("append").start()
+      .foreach(new ForeachWriter[(T, Long)] {
+        @transient private var w: TcpSink.PartitionWriter = _
+        def open(partitionId: Long, epochId: Long): Boolean = { w = writer(); true }
+        def process(value: (T, Long)): Unit = w.write(encode(value._1))
+        def close(errorOrNull: Throwable): Unit = if (w != null) w.close()
+      }).outputMode("append").start()
+}
+
+object TcpSink {
+  /** One partition's connection, opened at construction. Every frame is
+    * flushed, so a dead peer surfaces at the next frame (a small retry
+    * window), not at the buffer boundary thousands of frames later; on a
+    * failed write the writer reconnects and replays the partition's
+    * frames. */
+  private final class PartitionWriter(host: String, port: Int, maxRetries: Int,
+      backoffMs: Long) {
+    private var socket: Socket = _
+    private var out: BufferedOutputStream = _
+    private val sent = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    retrying(connect())
+
+    private def connect(): Unit = {
+      socket = new Socket(host, port)
+      out = new BufferedOutputStream(socket.getOutputStream)
+    }
+    private def send(payload: Array[Byte]): Unit = {
+      Framing.write(out, payload)
+      out.flush()
+    }
+    /** `body`, retried `maxRetries` times `backoffMs` apart; a failure
+      * drops the connection (a partially set-up one included) first. */
+    private def retrying(body: => Unit): Unit = {
+      var attempt = 0
+      var done = false
+      while (!done) {
+        try { body; done = true }
+        catch {
+          case e: java.io.IOException =>
+            close()
+            attempt += 1
+            if (attempt > maxRetries) throw e
+            Thread.sleep(backoffMs)
+        }
+      }
+    }
+
+    def write(payload: Array[Byte]): Unit = {
+      retrying {
+        if (out == null) { connect(); sent.foreach(send) } // replay
+        send(payload)
+      }
+      sent += payload
+    }
+    def close(): Unit = {
+      if (socket != null) try socket.close() catch { case _: java.io.IOException => }
+      socket = null; out = null
+    }
+  }
 }

@@ -121,8 +121,8 @@ final case class KafkaSource[T](
   * (core/source/source_handler.pony:21-28: `decode(payload)`,
   * `event_time_ns`; framing loop framed_source_notify.pony:91-133). The
   * framing is fixed for every framed source: a 4-byte big-endian length
-  * header (the reference default, and what TcpSink writes), parsed by
-  * [[FramedSocket.frameLen]]. */
+  * header (the reference default, and what TcpSink writes), read and
+  * written only by [[Framing]]. */
 trait FramedDecoder[T] extends Serializable {
   def decode(payload: Array[Byte]): T
   /** Decode-time DROP — the reference's decoder contract is
@@ -161,40 +161,6 @@ trait FramedDecoder[T] extends Serializable {
   def eventTimeNs(t: T): Long
 }
 
-private[pipeline] object FramedDecoder {
-  /** Split one framed byte blob into messages, skipping frames the
-    * decoder drops ([[FramedDecoder.decodeOpt]] → None) while still
-    * advancing past their bytes — the reference framing-loop semantics.
-    * Truncated trailing frames are an error — a framed log is written
-    * whole-frame-at-a-time. */
-  def frames[T](decoder: FramedDecoder[T], bytes: Array[Byte]): Iterator[T] =
-    new Iterator[T] {
-      private var off = 0
-      private var pending: Option[T] = None
-      private def advance(): Unit =
-        while (pending.isEmpty && off < bytes.length) {
-          require(off + 4 <= bytes.length, s"truncated frame header at $off")
-          val pl = FramedSocket.frameLen(bytes, off)
-          // a corrupt header with bit 31 set parses negative and would
-          // pass the bound below spuriously (likewise a huge positive pl
-          // overflowing the Int sum) — reject with the diagnostic instead
-          // of an opaque copyOfRange failure
-          require(pl >= 0 && pl <= bytes.length - off - 4,
-            s"truncated or corrupt frame payload at $off (len $pl)")
-          pending = decoder.decodeOpt(
-            java.util.Arrays.copyOfRange(bytes, off + 4, off + 4 + pl))
-          off += 4 + pl
-        }
-      def hasNext: Boolean = { advance(); pending.isDefined }
-      def next(): T = {
-        advance()
-        val t = pending.getOrElse(throw new NoSuchElementException("next on empty frames"))
-        pending = None
-        t
-      }
-    }
-}
-
 /** Length-framed binary files as a source — the file form of the
   * reference's framed TCP protocol (its giles sender/receiver tooling
   * persists exactly such logs). Built on Spark's `binaryFile` source, so
@@ -215,19 +181,26 @@ final case class FramedFileSource[T](
           .option("maxFilesPerTrigger", maxFilesPerTrigger).load(path)
       else spark.read.format("binaryFile").load(path)
     val dec = decoder
+    // each frame decodes from a view into the file's bytes, as in the
+    // DSv2 sources' scan; a dropped frame is still walked past
     df.select(col("content")).as[Array[Byte]](Encoders.BINARY)
       .flatMap { bytes =>
-        FramedDecoder.frames(dec, bytes).map(t => (t, dec.eventTimeNs(t)))
+        val w = Framing.walk(bytes, 0, bytes.length)
+        Iterator.continually(w).takeWhile(_.advance())
+          .flatMap(_ => dec.decodeSliceOpt(w.bytes, w.off, w.len))
+          .map(t => (t, dec.eventTimeNs(t)))
       }(SourceConfig.tupleEnc)
   }
 }
 
-/** Line-oriented TCP source (core/source/tcp_source/ — the reference frames
-  * binary messages with a length header; Spark's socket source is
-  * line-oriented, so the decoder takes the line as a String. For true
-  * framed binary transport use [[KafkaSource]].) Not for production use — the
-  * socket source is single-connection and unreplayable, exactly like the
-  * reference's caveat on its TCP source. */
+/** Line-oriented TCP source over Spark's `socket` format: the decoder
+  * takes each line as a String. The reference frames binary messages with
+  * a length header (core/source/tcp_source/); for that transport use
+  * [[FramedSocketSource]] (raw framed TCP), [[ConnectorSocketSource]]
+  * (the resumable connector protocol) or [[FramedLogSource]] (a tailed
+  * framed log). Not for production use — the socket source is
+  * single-connection and unreplayable, exactly like the reference's
+  * caveat on its TCP source. */
 final case class SocketSource[T](
     host: String,
     port: Int,

@@ -38,12 +38,26 @@ class DecoderFilterSpec extends AnyFunSuite {
     out.writeLong(n)
   }
 
-  test("frames(): dropped frames are skipped, alignment preserved, trailing drop ends cleanly") {
+  /** `bytes` as one framed file, read back in frame order by a batch
+    * [[FramedFileSource]] (one file is one partition). */
+  private def fileRun[T: org.apache.spark.sql.Encoder](
+      decoder: FramedDecoder[T], bytes: Array[Byte]): Seq[T] = {
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    val dir = java.nio.file.Files.createTempDirectory("decoder_filter_file")
+    java.nio.file.Files.write(dir.resolve("log.bin"), bytes)
+    try Graft.source("decoder-filter-file-run",
+        FramedFileSource(dir.toString, decoder, streaming = false))
+      .dataset.collect().toSeq.map(_._1)
+    finally graft.StreamBench.deleteRecursively(dir.toFile)
+  }
+
+  test("framed file source: in frame order, a dropped frame keeps the alignment and a trailing drop ends cleanly") {
+    import spark.implicits._
     val bos = new java.io.ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     Seq(0L, 1L, 2L, 3L, 4L, 7L).foreach(frame(out, _)) // ends on a DROPPED frame
-    val it = FramedDecoder.frames(OddFilterDecoder, bos.toByteArray)
-    assert(it.toSeq === Seq(0L, 2L, 4L)) // evens survive, odds (incl. trailing 7) vanish
+    // evens survive in order, odds (incl. trailing 7) vanish
+    assert(fileRun(OddFilterDecoder, bos.toByteArray) === Seq(0L, 2L, 4L))
   }
 
   /** The TCP drop contract: the in-scan decode drops inside the DSv2
@@ -132,12 +146,9 @@ class DecoderFilterSpec extends AnyFunSuite {
   }
 
   test("a total decoder is unaffected: decodeOpt defaults to Some(decode)") {
+    import spark.implicits._
     val bos = new java.io.ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    Seq("a", "bb", "").foreach { m =>
-      val p = m.getBytes(UTF_8); out.writeInt(p.length); out.write(p)
-    }
-    val it = FramedDecoder.frames(FramedFixtures.StringFrames, bos.toByteArray)
-    assert(it.toSeq === Seq("a", "bb", ""))
+    Seq("a", "bb", "").foreach(m => Framing.write(bos, m.getBytes(UTF_8)))
+    assert(fileRun(FramedFixtures.StringFrames, bos.toByteArray) === Seq("a", "bb", ""))
   }
 }

@@ -65,9 +65,27 @@ class FramedSourceSpec extends AnyFunSuite {
   }
 
   test("truncated frames fail loudly") {
-    val bytes = Array[Byte](0, 0, 0, 5, 'h', 'i') // claims 5, has 2
-    val it = FramedDecoder.frames(StringFrames, bytes)
-    assertThrows[IllegalArgumentException](it.next())
+    def walkAll(bytes: Array[Byte]): Unit = {
+      val w = Framing.walk(bytes, 0, bytes.length)
+      while (w.advance()) ()
+    }
+    // a whole frame, then a payload that claims 5 bytes and has 2
+    val payload = intercept[IllegalArgumentException](
+      walkAll(Array[Byte](0, 0, 0, 1, 'x', 0, 0, 0, 5, 'h', 'i')))
+    assert(payload.getMessage.contains("at 5"), payload.getMessage)
+    // a header cut after 3 of its 4 bytes
+    val header = intercept[IllegalArgumentException](walkAll(Array[Byte](0, 0, 0)))
+    assert(header.getMessage.contains("truncated frame header at 0"), header.getMessage)
+  }
+
+  test("a header with bit 31 set fails as a corrupt frame, in memory and on a stream") {
+    val bytes = Array[Byte](0x80.toByte, 0, 0, 2, 'h', 'i') // reads as a negative length
+    val w = Framing.walk(bytes, 0, bytes.length)
+    val walked = intercept[IllegalArgumentException](w.advance())
+    assert(walked.getMessage.contains("corrupt frame payload at 0"), walked.getMessage)
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    val read = intercept[IllegalArgumentException](Framing.read(in))
+    assert(read.getMessage.contains("negative frame length"), read.getMessage)
   }
 
   test("framed TCP transport: frames arrive in order across micro-batches over a real socket") {
