@@ -4,11 +4,11 @@ import java.nio.file.Files
 
 import scala.collection.mutable.ListBuffer
 
+import org.apache.commons.io.FileUtils.deleteQuietly
 import org.apache.spark.sql.{Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.json4s._
-import org.json4s.jackson.JsonMethods.{compact, render}
 
 import graft.operators.PipelineQueries
 import graft.pipeline._
@@ -49,24 +49,6 @@ object StreamBench {
     "stream_ephemeral", "stream_two_stage", "stream_topk", "stream_session",
     "stream_market_spread_wire", "stream_neardup", "stream_ann",
     "stream_session_rocksdb", "stream_market_spread_rocksdb", "stream_recovery")
-
-  /** Standalone entry for iterating on streaming throughput without
-    * paying for the batch bench. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local("graft-stream-bench")
-    val out = run(spark, sfDir)
-    out.rows.foreach { r =>
-      val spread = r.trialsSec.map(t => f"$t%.2f").mkString("/")
-      val rps = r.trialsRps.map(_.round).mkString("/")
-      println(f"[stream] ${r.name}%-22s ${r.medianSec}%7.2f s  (trials $spread)  ${r.rowsPerSec.round}%9d rows/s  (trials $rps)  batch p50/max ${r.latency._1}%5d/${r.latency._2}%5d ms  [${r.provider}] state=${js(r.state)}")
-    }
-    out.failed.foreach(n => println(s"[stream] $n FAILED (see stderr)"))
-    out.extra.foreach { case (k, v) => println(s"[stream] $k=${js(v)}") }
-    spark.stop()
-  }
-
-  private def js(v: JValue): String = compact(render(v))
 
   private implicit val long3Enc: Encoder[(Long, Long, Long)] =
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
@@ -311,17 +293,16 @@ object StreamBench {
     * analysis here threw away 84 already-computed batch timings), so each
     * staging step and each row is isolated — a failure records its name
     * and the rest keep running.
+    *
+    * `only` is Bench's `GRAFT_BENCH_ONLY` row set: a subset runs just the
+    * stream rows it names and skips the staging and warmup the others
+    * would have needed (a set naming no stream row runs none).
     */
-  def run(spark: SparkSession, sfDir: String): Out = {
+  def run(spark: SparkSession, sfDir: String, only: Option[Set[String]]): Out = {
     implicit val ss: SparkSession = spark
     val repeats = Bench.envRepeats
     val failed = ListBuffer.empty[String]
-    // GRAFT_STREAM_ONLY="stream_neardup,stream_ann" runs a subset (and
-    // skips the staging the unselected rows would have needed) — the
-    // iterate-on-one-pipeline loop, mirroring GRAFT_BENCH_ONLY.
-    val streamOnly = sys.env.get("GRAFT_STREAM_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def wanted(name: String): Boolean = streamOnly.forall(_.contains(name))
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
     // Stream-side shuffle sizing: ~1.5k keys of a few KB each, sized by
     // the MEASURED deployment rule as code — Graft.statePartitionsFor
     // (track key volume, not cores; SCALING.md r13 ladder) — which
@@ -441,7 +422,7 @@ object StreamBench {
         // chain drained
         Started(if (rateFromUp) uq else dq, dq,
           () => { uq.processAllAvailable(); dq.processAllAvailable() })
-      } finally deleteRecursively(new java.io.File(handoff))
+      } finally deleteQuietly(new java.io.File(handoff))
     }
 
     // Near-dup dedup throughput: a TEXT-bearing stream (documents ×200 —
@@ -951,7 +932,7 @@ object StreamBench {
             s"(rows $nRsF vs $nBaseF) — a partitioning-sensitive state bug")
         }
         catchup
-      } finally deleteRecursively(new java.io.File(root))
+      } finally deleteQuietly(new java.io.File(root))
     }
 
     def statecomp() =
@@ -1261,7 +1242,7 @@ object StreamBench {
             h.awaitTermination()
           }
         }
-        deleteRecursively(new java.io.File(warmDir))
+        deleteQuietly(new java.io.File(warmDir))
       } catch { case e: Throwable =>
         System.err.println(s"[stream] warmup failed (non-fatal): $e")
       }
@@ -1321,7 +1302,7 @@ object StreamBench {
     Out(results, failed.toList.distinct, repeats, extra)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      stagedDirs.foreach(d => deleteRecursively(new java.io.File(d)))
+      stagedDirs.foreach(d => deleteQuietly(new java.io.File(d)))
     }
   }
 
@@ -1350,10 +1331,4 @@ object StreamBench {
       p.waitFor(60, java.util.concurrent.TimeUnit.SECONDS)
       ()
     } catch { case _: Throwable => }
-
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete()
-  }
 }

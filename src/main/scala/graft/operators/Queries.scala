@@ -703,7 +703,7 @@ object Queries {
     if (gen >= 2) {
       s.sql(s"DROP TABLE IF EXISTS graft_li_bucketed_${dirKey}_g${gen - 2}")
       s.sql(s"DROP TABLE IF EXISTS graft_ord_bucketed_${dirKey}_g${gen - 2}")
-      graft.StreamBench.deleteRecursively(new java.io.File(s"${base}_g${gen - 2}"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${base}_g${gen - 2}"))
     }
     s.table(liTable)
       .join(s.table(ordTable), col("l_orderkey") === col("o_orderkey"))

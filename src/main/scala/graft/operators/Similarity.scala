@@ -1294,13 +1294,6 @@ object Similarity {
   private val annStageGens =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
-  private def deleteDirTree(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteDirTree)
-    f.delete()
-    ()
-  }
-
   private def pAnnSearchWith(s: SparkSession, dir: String, n: Long,
       coarse: Array[Array[Double]]): DataFrame = {
     val books = trainPqResidual(s, dir, coarse, n)
@@ -1324,7 +1317,8 @@ object Similarity {
     val staged = s"${stageBase}_g$gen"
     buildIvfPqIndexWith(s, dir, books, coarse)
       .write.mode("overwrite").partitionBy("cent_id").parquet(staged)
-    if (gen >= 2) deleteDirTree(new java.io.File(s"${stageBase}_g${gen - 2}"))
+    if (gen >= 2)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${stageBase}_g${gen - 2}"))
     // partition-column inference may narrow cent_id to int — restore the
     // index contract type before the probe join
     val index = s.read.parquet(staged)

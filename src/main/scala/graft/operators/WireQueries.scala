@@ -215,7 +215,7 @@ object WireQueries {
       // per-invocation scratch — left behind it accumulates one dir per
       // Verify/Bench trial in /tmp, the exact writeback-debt channel the
       // bench's between-trial sync discipline exists to drain
-      graft.StreamBench.deleteRecursively(new java.io.File(ckpt))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
   }
 

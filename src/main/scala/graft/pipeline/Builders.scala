@@ -47,7 +47,7 @@ final class RangeWindowsBuilder(range: Long) {
 
   def withSlide(s: Long): RangeWindowsBuilder = { slide = s; this }
   def withDelay(d: Long): RangeWindowsBuilder = { delay = d; this }
-  def alignedWindows(): RangeWindowsBuilder = { aligned = true; this }
+  /** Windows are aligned unless this is called (see the file doc). */
   def unaligned(): RangeWindowsBuilder = { aligned = false; this }
   def withLateDataPolicy(p: LateDataPolicy): RangeWindowsBuilder = { policy = p; this }
 

@@ -170,10 +170,11 @@ final case class ConnectorSocketSink[T](
   private def sendTwoPc(payload: Array[Byte]): Unit =
     send(typed(Message, u64(0L) ++ u64(0L) ++ payload))
   private def sendData(payload: Array[Byte]): Unit = {
-    // buffered (no per-row flush): the phase-1 barrier flush below is
-    // the visibility point; one flush syscall per row through the 8 KB
-    // buffer would defeat the buffering entirely
-    writeFrameBuffered(out,
+    // Framing.write, not the flushing writeFrame: no flush per row, since
+    // one flush syscall per row through the 8 KB buffer would defeat the
+    // buffering; the sink flushes once at its phase barriers (phase 1,
+    // phase 2), and the phase-1 flush is the visibility point
+    Framing.write(out,
       typed(Message, u64(1L) ++ u64(lastOffset + currentOffset) ++ payload))
     currentOffset += payload.length
   }

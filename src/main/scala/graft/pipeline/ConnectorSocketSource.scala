@@ -71,12 +71,6 @@ object ConnectorProtocol {
     Framing.write(out, body)
     out.flush()
   }
-  /** Frame write WITHOUT the flush — the sink's per-row data path: one
-    * flush syscall per row through the buffered stream defeats the
-    * buffer; the caller flushes once at its protocol barrier (phase 1,
-    * phase 2). Control frames keep the flushing [[writeFrame]]. */
-  def writeFrameBuffered(out: DataOutputStream, body: Array[Byte]): Unit =
-    Framing.write(out, body)
   def typed(tpe: Byte, rest: Array[Byte] = Array.empty): Array[Byte] = {
     val b = new Array[Byte](1 + rest.length)
     b(0) = tpe

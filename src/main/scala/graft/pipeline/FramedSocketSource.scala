@@ -15,37 +15,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import Framing.HeaderBytes
 
-/** DataSource-v2 micro-batch source speaking the reference's framed TCP
-  * protocol: 4-byte big-endian length header + payload per message
-  * (core/source/tcp_source/framed_source_notify.pony:91-133 — the
-  * reference's primary ingress). Spark-first shape: like Spark's own
-  * socket source, the driver CONNECTS to the endpoint and drains frames
-  * into a [[FrameBuffer]] on a daemon thread; micro-batch offsets are
-  * frame indices over that buffer, trimmed on commit.
-  *
-  * Same caveat as Spark's socket source (and the reference's raw TCP
-  * source, whose resilience comes from the connector protocol, not the
-  * transport): a socket is not replayable, so this source is
-  * at-most-once across restarts — for resumable ingress use
-  * [[FramedLogSource]] (frame-aligned byte offsets) or [[KafkaSource]].
-  *
-  * Ordering contract: one connection = one stream, delivered in frame
-  * order UP TO EVENT-TIME TIES. A large micro-batch decodes as several
-  * parallel chunk partitions, and a downstream keyed shuffle interleaves
-  * those nondeterministically — the keyed host's event-time sort then
-  * restores order between distinct timestamps but not among equal ones
-  * (its tie-break is stable only within one input iterator). Decoders
-  * whose event times are unique per key (typical wire feeds — the bench
-  * rows qualify) get full FIFO; tie-heavy decoders that need strict
-  * arrival order set `ordered = true`, which plans each batch as ONE
-  * partition (single-task decode, order survives any shuffle) at the
-  * cost of the parallel decode. Parallelize the reference's way by
-  * running N sources and `merge`.
-  */
-object FramedSocket {
-  val ShortName = "graft-framed-socket"
-}
-
 /** The table of a framed DSv2 source ([[FramedSocketSource]],
   * [[ConnectorSocketSource]], [[FramedLogSource]]), built by the
   * source's `load()` around live objects rather than string options: the
@@ -85,6 +54,10 @@ final case class FrameCount(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
+/** The [[FramedSocketSource]] stream: like Spark's own socket source,
+  * the driver CONNECTS to the endpoint and drains frames into a
+  * [[FrameBuffer]] on a daemon thread; micro-batch offsets are frame
+  * indices over that buffer, trimmed on commit. */
 final class FramedSocketMicroBatchStream(host: String, port: Int,
     maxFramesPerTrigger: Long, maxBufferedFrames: Int,
     ordered: Boolean,
@@ -92,8 +65,8 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   // The first offset Spark hands over sets the start: data in flight at a
-  // crash is acknowledged lost (at-most-once, see class doc) rather than
-  // silently skipping that many NEW frames.
+  // crash is acknowledged lost (at-most-once, see FramedSocketSource)
+  // rather than silently skipping that many NEW frames.
   private val buffer = new FrameBuffer(maxBufferedFrames, s"framed-socket reader for $host:$port")
 
   private val socket = {
@@ -103,7 +76,7 @@ final class FramedSocketMicroBatchStream(host: String, port: Int,
     s.connect(new java.net.InetSocketAddress(host, port), 30000)
     s
   }
-  private val reader = new Thread(s"${FramedSocket.ShortName}:$host:$port") {
+  private val reader = new Thread(s"${FramedSocketSource.ShortName}:$host:$port") {
     override def run(): Unit = {
       // BULK ingest: the wire format (4-byte big-endian length + payload)
       // IS the chunk format, so frames are never re-serialized — bytes
@@ -264,13 +237,34 @@ object FramedReaderFactory {
   }
 }
 
-/** DSL SourceConfig over the framed TCP transport: decode each frame with
-  * the same [[FramedDecoder]] contract the file/log sources use (the
-  * transport owns the reference-default 4-byte big-endian framing; the
-  * decoder sees whole payloads). The decode runs INSIDE the DSv2 scan
-  * ([[FramedReaderFactory]]), so `numInputRows` counts DECODED rows (a
-  * dropping decoder's drops never become rows) and the scan's output
-  * schema is the row schema. */
+/** DataSource-v2 micro-batch source speaking the reference's framed TCP
+  * protocol: 4-byte big-endian length header + payload per message
+  * (core/source/tcp_source/framed_source_notify.pony:91-133 — the
+  * reference's primary ingress). Each frame decodes with the same
+  * [[FramedDecoder]] contract the file/log sources use (the transport
+  * owns the framing; the decoder sees whole payloads). The decode runs
+  * INSIDE the DSv2 scan ([[FramedReaderFactory]]), so `numInputRows`
+  * counts DECODED rows (a dropping decoder's drops never become rows)
+  * and the scan's output schema is the row schema.
+  *
+  * Same caveat as Spark's socket source (and the reference's raw TCP
+  * source, whose resilience comes from the connector protocol, not the
+  * transport): a socket is not replayable, so this source is
+  * at-most-once across restarts — for resumable ingress use
+  * [[FramedLogSource]] (frame-aligned byte offsets) or [[KafkaSource]].
+  *
+  * Ordering contract (`ordered`): one connection = one stream, delivered
+  * in frame order UP TO EVENT-TIME TIES. A large micro-batch decodes as
+  * several parallel chunk partitions, and a downstream keyed shuffle
+  * interleaves those nondeterministically — the keyed host's event-time
+  * sort then restores order between distinct timestamps but not among
+  * equal ones (its tie-break is stable only within one input iterator).
+  * Decoders whose event times are unique per key (typical wire feeds —
+  * the bench rows qualify) get full FIFO; tie-heavy decoders that need
+  * strict arrival order set `ordered = true`, which plans each batch as
+  * ONE partition (single-task decode, order survives any shuffle) at the
+  * cost of the parallel decode. Parallelize the reference's way by
+  * running N sources and `merge`. */
 final case class FramedSocketSource[T](
     host: String,
     port: Int,
@@ -280,7 +274,11 @@ final case class FramedSocketSource[T](
     ordered: Boolean = false)(implicit enc: Encoder[T])
     extends SourceConfig[T] {
   def load(spark: SparkSession): Dataset[(T, Long)] =
-    FramedTable.load(spark, s"${FramedSocket.ShortName}:$host:$port", decoder, enc)(rows =>
+    FramedTable.load(spark, s"${FramedSocketSource.ShortName}:$host:$port", decoder, enc)(rows =>
       new FramedSocketMicroBatchStream(host, port, maxFramesPerTrigger, maxBufferedFrames,
         ordered, rows))
+}
+
+object FramedSocketSource {
+  val ShortName = "graft-framed-socket"
 }

@@ -48,7 +48,8 @@ object Graft {
   /** State-partition sizing for a keyed streaming stage — the measured
     * deployment rule as callable code (VERDICT r13 #3; the reference
     * exposes per-stage parallelism the same way:
-    * application.pony:149-150 `parallelism`). Set it as
+    * application.pony:149-150 `parallelism`). Pass it to
+    * [[Pipeline.withParallelism]], or set it as
     * `spark.sql.shuffle.partitions` before starting the query.
     *
     * The rule tracks KEY VOLUME, not cores (SCALING.md r13 ladder,
@@ -65,7 +66,9 @@ object Graft {
     * of two (balanced hash partitioning), never wider than the key count.
     *
     * Both measured anchors are pinned by StatePartitionsSpec:
-    * (1 500, 32) → 16 and (150 000, 32) → 32. */
+    * (1 500, 32) → 16 and (150 000, 32) → 32. This key-volume form is the
+    * only one: the state-volume form is gone, and SCALING.md keeps the
+    * r16 ladder it was fitted to. */
   def statePartitionsFor(expectedKeys: Long, cores: Int): Int = {
     require(expectedKeys > 0, s"expectedKeys must be positive, got $expectedKeys")
     require(cores > 0, s"cores must be positive, got $cores")
@@ -92,63 +95,6 @@ object Graft {
       if (nearest >= (1 << 30) || nearest >= floor) nearest else nearest << 1
     if (p2 <= expectedKeys) p2
     else math.max(1, java.lang.Long.highestOneBit(expectedKeys).toInt)
-  }
-
-  /** Below this many total state rows every measured single-box cell
-    * favors the narrow anchor (16): the r16 50 K-key ladder's shallow
-    * tws cell holds 49.5 K state rows and still reads best at P=16,
-    * while the 150 K-row cell flips to 32 — the box crossover sits in
-    * (49.5 K, 150 K) rows (SCALING.md r16 §3). */
-  val ShallowStateRowsMax = 100000L
-  /** At or above this many total state rows the box wants width: the
-    * native-session cell flips to 32 at 3.15 M live rows (23% faster)
-    * and has not yet flipped at 955 K — the measured band is
-    * (955 K, 3.15 M). The rule binds wide from the band's BOTTOM edge
-    * because under-width is the expensive error at scale (the flip cell
-    * pays 23% of its wall; over-width below the true crossover pays
-    * only the bounded 16-vs-32 commit overhead). */
-  val WideStateRowsMin = 1000000L
-  /** The measured narrow anchor (16 partitions): optimal everywhere the
-    * r13/r16 ladders read shallow state on a single JVM. */
-  val NarrowStateWidth = 16
-
-  /** [[statePartitionsFor]] with the state-VOLUME input the r16 ladder
-    * proved the single-box crossover actually tracks (VERDICT r16 next
-    * #2): at the SAME 50 K keys, shallow window state (49.5 K rows)
-    * still favors P=16 while deep session state (3.15 M live rows)
-    * flips to 32 — key count alone cannot express this.
-    * `expectedStateRows` = total live state rows across keys (panes ×
-    * keys for range windows, live sessions for sessionization, keys for
-    * O(1)-per-key state).
-    *
-    * The volume clause sizes the SINGLE-PROCESS regime — one JVM pays
-    * every partition's per-batch commit serially, so shallow state
-    * wants few partitions regardless of the key count ([[statePartitionsFor]]'s
-    * cores floor encodes the opposite, multi-executor economics: commits
-    * paid in parallel). Keys remain the cluster-width driver: a
-    * multi-executor deployment at plentiful keys/core should use the
-    * two-argument rule. Between the measured bands
-    * ([[ShallowStateRowsMax]], [[WideStateRowsMin]]) the key rule
-    * stands unmodified — no cell has measured that region.
-    *
-    * StatePartitionsSpec pins both regimes: shallow-under-10⁵ rows →
-    * the narrow anchor even where the cores floor would widen;
-    * over-10⁶ rows → at least cores wide even at key counts whose
-    * interpolation reads narrower. */
-  def statePartitionsFor(expectedKeys: Long, cores: Int, expectedStateRows: Long): Int = {
-    require(expectedStateRows > 0,
-      s"expectedStateRows must be positive, got $expectedStateRows")
-    val base = statePartitionsFor(expectedKeys, cores)
-    if (expectedStateRows < ShallowStateRowsMax)
-      math.min(base, NarrowStateWidth)
-    else if (expectedStateRows >= WideStateRowsMin) {
-      // at least cores wide (power of two, as base), never beyond keys
-      val exp = math.min(32 - Integer.numberOfLeadingZeros(math.max(1, cores) - 1), 30)
-      val coresP2 = math.max(1, 1 << exp)
-      val wide = math.max(base, coresP2)
-      if (wide <= expectedKeys) wide
-      else math.max(1, java.lang.Long.highestOneBit(expectedKeys).toInt)
-    } else base
   }
 }
 
@@ -242,56 +188,32 @@ final class Pipeline[T] private[pipeline] (
     new Pipeline[T](spark, stamped, Some(extractor), name,
       stateParallelism = stateParallelism)
 
-  /** [[keyBy]] with an explicit per-stage parallelism — the reference's
-    * first-class stage argument (application.pony:149-150
-    * `to(comp, parallelism)`). The value becomes the query's
-    * `spark.sql.shuffle.partitions` (the state-store partition count,
-    * fixed per checkpoint at FIRST query start), applied on a per-query
-    * session clone at the sink/handoff start — the shared session's
-    * conf is never touched, so concurrent queries AND concurrent batch
-    * actions on other threads are unaffected (see [[startDataset]] for
-    * the clone's observable surface). Prefer [[withExpectedKeys]]
-    * unless you have a measured width: the state-partition optimum
-    * tracks key volume, not cores ([[Graft.statePartitionsFor]]). */
-  def keyBy(extractor: T => String, parallelism: Int): Pipeline[T] =
-    keyBy(extractor).withParallelism(parallelism)
-
-  /** Pin this pipeline's state-partition width explicitly (see the
-    * [[keyBy]] overload). Applied at query/write start; a restart from an
-    * existing checkpoint keeps the checkpoint's width — Spark pins the
-    * state layout at first start (RescaleSpec), so changing the hint
-    * means a fresh checkpoint (the priced rescale path, SCALING.md). */
+  /** Pin this pipeline's state-partition width — the reference's
+    * per-stage `parallelism` argument (application.pony:149-150
+    * `to(comp, parallelism)`) and the one sizing entry point of the DSL.
+    * The value becomes the query's `spark.sql.shuffle.partitions` (the
+    * state-store partition count, fixed per checkpoint at FIRST query
+    * start), applied on a per-query session clone at the sink/handoff
+    * start — the shared session's conf is never touched, so concurrent
+    * queries AND concurrent batch actions on other threads are
+    * unaffected (see [[startDataset]] for the clone's observable
+    * surface). A restart from an existing checkpoint keeps the
+    * checkpoint's width — Spark pins the state layout at first start
+    * (RescaleSpec), so changing the hint means a fresh checkpoint (the
+    * priced rescale path, SCALING.md).
+    *
+    * Without a measured width, size from expected key volume with
+    * `withParallelism(Graft.statePartitionsFor(keys, cores))`: the
+    * state-partition optimum tracks key volume, not cores. There is no
+    * other sizing call — `keyBy(extractor).withParallelism(n)` replaces
+    * the former two-argument `keyBy`, and the key-volume and
+    * state-volume shorthands are gone (SCALING.md, "One entry point per
+    * capability"). */
   def withParallelism(parallelism: Int): Pipeline[T] = {
     require(parallelism > 0, s"parallelism must be positive, got $parallelism")
     new Pipeline[T](spark, stamped, keyFn, name, partitionScopedKey,
       stateParallelism = Some(parallelism))
   }
-
-  /** Size the stateful stage's width from EXPECTED KEY VOLUME through the
-    * measured deployment rule [[Graft.statePartitionsFor]] (VERDICT r13
-    * ladder: the optimum tracks keys, not cores) — the declarative form
-    * of the reference's per-stage `parallelism` argument.
-    *
-    * This sizes the CLUSTER-WIDTH regime: keys drive width and per-batch
-    * state commits are assumed paid in parallel across executors (the
-    * rule's cores floor). A single-process deployment whose state is
-    * DEEP or SHALLOW relative to its key count sits in the regime the
-    * r16 ladder measured flipping on state VOLUME, not keys — size
-    * those with [[withExpectedState]]. */
-  def withExpectedKeys(expectedKeys: Long): Pipeline[T] =
-    withParallelism(Graft.statePartitionsFor(
-      expectedKeys, spark.sparkContext.defaultParallelism))
-
-  /** [[withExpectedKeys]] plus the state-volume input (total live state
-    * rows) — the single-box regime where the r16 ladder measured the
-    * width optimum tracking VOLUME at fixed keys (49.5 K shallow rows →
-    * narrow, 3.15 M session rows → wide, both at 50 K keys). See
-    * [[Graft.statePartitionsFor(expectedKeys:Long,cores:Int,expectedStateRows:Long)*]]
-    * for the regime boundaries and which deployments should prefer the
-    * keys-only form. */
-  def withExpectedState(expectedKeys: Long, expectedStateRows: Long): Pipeline[T] =
-    withParallelism(Graft.statePartitionsFor(
-      expectedKeys, spark.sparkContext.defaultParallelism, expectedStateRows))
 
   /** Worker-local keyed routing (application.pony:241-248): state at the
     * next stateful stage is scoped to (UPSTREAM PARTITION, key), never

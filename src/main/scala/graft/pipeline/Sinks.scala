@@ -16,6 +16,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Sinks backed by a Spark-native streaming format (memory, parquet, noop,
   * kafka, TcpSink's `foreach`) override [[writeStream]] with that format.
   *
+  * A user-defined sink is a `SinkConfig` that defines [[writeMicroBatch]],
+  * its one abstract method, and optionally [[onTerminated]]; it gets the
+  * default `foreachBatch` start. This is the escape hatch for any
+  * per-micro-batch writer (MergeAndSinksSpec drives one).
+  *
   * Effectively-once: the reference's connector sink runs 2-phase commit
   * against checkpoint barriers (core/sink/connector_sink/connector_sink.pony
   * :128-135, 1293-1356). The Spark equivalent is `foreachBatch` keyed by
@@ -174,14 +179,6 @@ final case class EmptySink[T]() extends SinkConfig[T] {
       checkpoint: Option[String], trigger: Trigger): StreamingQuery =
     SinkConfig.streamWriter(ds, name, checkpoint, trigger)
       .format("noop").outputMode("append").start()
-}
-
-/** Escape hatch: user-supplied per-micro-batch writer. The writer MUST be
-  * idempotent in `batchId` to get effectively-once (see trait doc). */
-final case class ForeachBatchSink[T](writer: (Dataset[(T, Long)], Long) => Unit)
-    extends SinkConfig[T] {
-  def writeMicroBatch(ds: Dataset[(T, Long)], batchId: Long): Unit =
-    writer(ds, batchId)
 }
 
 /** The 2PC-equivalent connector sink: each micro-batch lands in its own

@@ -192,24 +192,3 @@ final case class FramedFileSource[T](
       }(SourceConfig.tupleEnc)
   }
 }
-
-/** Line-oriented TCP source over Spark's `socket` format: the decoder
-  * takes each line as a String. The reference frames binary messages with
-  * a length header (core/source/tcp_source/); for that transport use
-  * [[FramedSocketSource]] (raw framed TCP), [[ConnectorSocketSource]]
-  * (the resumable connector protocol) or [[FramedLogSource]] (a tailed
-  * framed log). Not for production use — the socket source is
-  * single-connection and unreplayable, exactly like the reference's
-  * caveat on its TCP source. */
-final case class SocketSource[T](
-    host: String,
-    port: Int,
-    decode: String => T,
-    eventTimeNs: T => Long)(implicit enc: Encoder[T]) extends SourceConfig[T] {
-  def load(spark: SparkSession): Dataset[(T, Long)] = {
-    val df = spark.readStream.format("socket")
-      .option("host", host).option("port", port).load()
-    df.select(col("value")).as[String](Encoders.STRING)
-      .map { line => val t = decode(line); (t, eventTimeNs(t)) }(SourceConfig.tupleEnc)
-  }
-}

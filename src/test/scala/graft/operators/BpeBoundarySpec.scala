@@ -57,7 +57,7 @@ class BpeBoundarySpec extends AnyFunSuite {
       // 10x'st' fully merges
       assert(enc(0L) === 10L)
     } finally {
-      graft.StreamBench.deleteRecursively(new java.io.File(staged))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staged))
     }
   }
 }

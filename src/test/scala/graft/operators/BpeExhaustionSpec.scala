@@ -49,7 +49,7 @@ class BpeExhaustionSpec extends AnyFunSuite {
       assert(enc(0L) === ((3L, 3L)), s"doc 0: ${enc(0L)}")
       assert(enc(1L) === ((1L, 1L)), s"doc 1: ${enc(1L)}")
     } finally {
-      graft.StreamBench.deleteRecursively(new java.io.File(staged))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staged))
     }
   }
 }

@@ -38,7 +38,7 @@ class QuantizeZeroVectorSpec extends AnyFunSuite {
         "the max-|x| dimension maps to code 127")
       assert(!ramp.getString(2).contains("-"), "ramp codes are non-negative")
     } finally {
-      graft.StreamBench.deleteRecursively(new java.io.File(staged))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staged))
     }
   }
 }

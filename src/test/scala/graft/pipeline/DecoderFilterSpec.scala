@@ -48,7 +48,7 @@ class DecoderFilterSpec extends AnyFunSuite {
     try Graft.source("decoder-filter-file-run",
         FramedFileSource(dir.toString, decoder, streaming = false))
       .dataset.collect().toSeq.map(_._1)
-    finally graft.StreamBench.deleteRecursively(dir.toFile)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("framed file source: in frame order, a dropped frame keeps the alignment and a trailing drop ends cleanly") {
@@ -123,7 +123,7 @@ class DecoderFilterSpec extends AnyFunSuite {
     val got = spark.table(view).collect().map(_.getLong(0)).toSeq
     val end = h.query.get.lastProgress.sources.head.endOffset
     h.stop()
-    graft.StreamBench.deleteRecursively(log.getParentFile)
+    org.apache.commons.io.FileUtils.deleteQuietly(log.getParentFile)
     assert(got === (0L until 20L by 2L).toSeq)
     // the trailing dropped frame still advances the offset: 20 frames of
     // 4 + 8 bytes, so the end is the last frame's byte end
@@ -141,7 +141,7 @@ class DecoderFilterSpec extends AnyFunSuite {
     val got = Graft.source("decoder-filter-file",
         FramedFileSource(dir.getAbsolutePath, OddFilterDecoder, streaming = false))
       .dataset.collect().map(_._1).sorted.toSeq
-    graft.StreamBench.deleteRecursively(dir)
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
     assert(got === Seq(0L, 2L, 4L, 6L, 8L, 10L))
   }
 

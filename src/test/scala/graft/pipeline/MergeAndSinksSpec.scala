@@ -1,7 +1,11 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -117,5 +121,62 @@ class MergeAndSinksSpec extends AnyFunSuite {
     val b = spark.read.parquet(out2).selectExpr("_1").as[Long].collect().sorted
     assert(a.toSeq == Seq(10L, 20L, 30L))
     assert(b.toSeq == Seq(10L, 20L, 30L))
+  }
+
+  test("a user-defined SinkConfig gets every batch id in order and one onTerminated") {
+    val spark = TestSpark.spark
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+
+    /** Defines only the two hooks a user sink writes; the default
+      * `foreachBatch` start runs it (on the driver, so the queues are
+      * shared with the test). */
+    final class RecordingSink extends SinkConfig[Long] {
+      val batches = new ConcurrentLinkedQueue[(Long, Seq[Long])]
+      val terminations = new ConcurrentLinkedQueue[(Boolean, Long)]
+      def writeMicroBatch(ds: Dataset[(Long, Long)], batchId: Long): Unit =
+        batches.add((batchId, ds.collect().map(_._1).toSeq.sorted))
+      override def onTerminated(failed: Boolean, committedEpoch: Long): Unit =
+        terminations.add((failed, committedEpoch))
+    }
+    def awaitCond(cond: => Boolean): Boolean = {
+      val deadline = System.currentTimeMillis() + 10000L
+      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      cond
+    }
+    val inputs = Seq(Seq(1L, 2L), Seq(3L), Seq(4L, 5L))
+    val expected = inputs.zipWithIndex.map { case (xs, i) => (i.toLong, xs) }
+
+    /** Three micro-batches through `start`; the sink must see batch ids
+      * 0, 1, 2 in order, then one clean termination at epoch 2, and the
+      * settle listener must be gone. */
+    def streamed(start: Pipeline[Long] => SinkHandle, sink: RecordingSink): Unit = {
+      val before = spark.streams.listListeners().length
+      val nums = MemoryStream[Long]
+      val h = start(Graft.source(s"user-sink-${System.nanoTime()}",
+        DatasetSource(nums.toDS(), (_: Long) => 0L)))
+      try inputs.foreach { xs =>
+        nums.addData(xs: _*)
+        h.processAllAvailable()
+      } finally h.stop()
+      assert(sink.batches.asScala.toSeq === expected)
+      assert(awaitCond(!sink.terminations.isEmpty), "onTerminated never ran")
+      assert(awaitCond(spark.streams.listListeners().length == before),
+        "the settle listener outlived its query")
+      assert(sink.terminations.asScala.toSeq === Seq((false, 2L)))
+    }
+
+    val solo = new RecordingSink
+    streamed(_.toSink(solo), solo)
+
+    val fanned = new RecordingSink
+    streamed(_.toSinks(Seq(MemorySink[Long](s"user_fan_${System.nanoTime()}"), fanned)), fanned)
+
+    val batch = new RecordingSink
+    Graft.source("user-sink-batch", DatasetSource(Seq(7L, 8L).toDS(), (_: Long) => 0L))
+      .toSink(batch)
+    assert(batch.batches.asScala.toSeq === Seq((0L, Seq(7L, 8L))))
+    assert(batch.terminations.isEmpty)
   }
 }

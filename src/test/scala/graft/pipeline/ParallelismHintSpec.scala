@@ -7,11 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-stage parallelism in the DSL (VERDICT r14 #4): the reference makes
   * parallelism a first-class stage argument (application.pony:149-150
-  * `to(comp, parallelism)`); here the hint rides `keyBy(extractor, n)` /
-  * `withParallelism` / `withExpectedKeys` (the latter defaulting through
-  * the measured rule [[Graft.statePartitionsFor]]) and is applied as the
-  * query's `spark.sql.shuffle.partitions` — the state-store partition
-  * count, fixed per checkpoint at first start — scoped to the start call.
+  * `to(comp, parallelism)`); here the hint rides `withParallelism` (sized
+  * by hand or through the measured rule [[Graft.statePartitionsFor]]) and
+  * is applied as the query's `spark.sql.shuffle.partitions` — the
+  * state-store partition count, fixed per checkpoint at first start —
+  * scoped to the start call.
   * The done-bar test: the hint CHANGES the physical state-store partition
   * count (counted as state/0/<n> checkpoint directories), and the shared
   * session conf is untouched afterward. */
@@ -45,7 +45,7 @@ class ParallelismHintSpec extends AnyFunSuite {
   test("keyBy(extractor, parallelism) changes the state-store partition count") {
     val spark = TestSpark.spark
     val prev = spark.conf.get(ShuffleKey)
-    val dirs = statePartitionDirs(_.keyBy(identity, parallelism = 2))
+    val dirs = statePartitionDirs(_.keyBy(identity).withParallelism(2))
     assert(dirs.size === 2, s"state partitions: $dirs")
     // the hint is scoped to the start call: the shared session conf is
     // already restored when toSink returns (race-free because Spark
@@ -58,29 +58,6 @@ class ParallelismHintSpec extends AnyFunSuite {
     val expected = spark.conf.get(ShuffleKey).toInt
     val dirs = statePartitionDirs(_.keyBy(identity))
     assert(dirs.size === expected, s"state partitions: $dirs")
-  }
-
-  test("withExpectedKeys sizes through the measured rule") {
-    val spark = TestSpark.spark
-    val expected = Graft.statePartitionsFor(
-      1500L, spark.sparkContext.defaultParallelism)
-    val dirs = statePartitionDirs(_.keyBy(identity).withExpectedKeys(1500L))
-    assert(dirs.size === expected,
-      s"state partitions: ${dirs.size}, rule says $expected")
-  }
-
-  test("withExpectedState sizes through the volume regime (VERDICT r16 #2)") {
-    val spark = TestSpark.spark
-    // the measured shallow cell: 50K keys, 49.5K state rows — the
-    // keys-only rule widens to the cores floor here, the volume rule
-    // holds the box's narrow anchor
-    val expected = Graft.statePartitionsFor(
-      50000L, spark.sparkContext.defaultParallelism, 49500L)
-    assert(expected === Graft.NarrowStateWidth)
-    val dirs = statePartitionDirs(
-      _.keyBy(identity).withExpectedState(50000L, 49500L))
-    assert(dirs.size === expected,
-      s"state partitions: ${dirs.size}, volume rule says $expected")
   }
 
   test("the hint survives stateless stages and merge prefers the defined side") {
@@ -140,7 +117,7 @@ class ParallelismHintSpec extends AnyFunSuite {
     }
     val words = MemoryStream[String]
     val h = Graft.source("hint-iso", DatasetSource(words.toDS(), (_: String) => 0L))
-      .keyBy(identity, parallelism = 2)
+      .keyBy(identity).withParallelism(2)
       .to(CountWord)
       .toSink(ProbeSink(spark, EmptySink[(String, Long)]()),
         checkpointLocation = Some(ckpt))
@@ -171,7 +148,7 @@ class ParallelismHintSpec extends AnyFunSuite {
     import spark.implicits._
     val s = MemoryStream[String]
     val p = Graft.source("hint-bad", DatasetSource(s.toDS(), (_: String) => 0L))
-    intercept[IllegalArgumentException](p.keyBy(identity, parallelism = 0))
+    intercept[IllegalArgumentException](p.keyBy(identity).withParallelism(0))
     intercept[IllegalArgumentException](p.withParallelism(-4))
   }
 }

@@ -24,6 +24,8 @@ class StatePartitionsSpec extends AnyFunSuite {
     // the extra width (below the ~100 keys/core floor threshold), so the
     // answer stays at the commit-cost optimum
     assert(Graft.statePartitionsFor(1500L, 128) === 16)
+    // below the narrow anchor's key count the interpolation holds at 16
+    assert(Graft.statePartitionsFor(1000L, 32) === 16)
   }
 
   test("plentiful keys on a wide cluster floor at the cluster width") {
@@ -31,6 +33,10 @@ class StatePartitionsSpec extends AnyFunSuite {
     // parallel across executors, so width must not sit below cores
     val p = Graft.statePartitionsFor(1000000000L, 1000)
     assert(p >= 1000, s"expected >= cores(1000), got $p")
+    // 50K keys on 32 cores clears the >= 100 keys/core threshold: the
+    // floor holds it at 32 (the r16 single-box cell read 16 best here,
+    // the regime SCALING.md keeps on record)
+    assert(Graft.statePartitionsFor(50000L, 32) === 32)
   }
 
   test("the cores floor holds on non-power-of-two clusters (round-up, not round-to-nearest)") {
@@ -75,48 +81,5 @@ class StatePartitionsSpec extends AnyFunSuite {
   test("invalid inputs fail fast with the diagnostic") {
     intercept[IllegalArgumentException](Graft.statePartitionsFor(0L, 32))
     intercept[IllegalArgumentException](Graft.statePartitionsFor(100L, 0))
-    intercept[IllegalArgumentException](Graft.statePartitionsFor(100L, 32, 0L))
-  }
-
-  // ---- state-VOLUME regimes (VERDICT r16 next #2: the r16 50K ladder
-  // cell measured the single-box crossover tracking total state rows,
-  // not keys — 49.5K shallow rows favor 16 while 3.15M session rows
-  // flip to 32 at the SAME 50K keys; SCALING.md r16 §3)
-
-  test("measured shallow cell: 50K keys, 49.5K state rows on 32 cores -> the narrow anchor") {
-    // the keys-only rule answers 32 here (cores floor at >=100 keys/core)
-    // — correct for a cluster; the box measurement says 16
-    assert(Graft.statePartitionsFor(50000L, 32) === 32)
-    assert(Graft.statePartitionsFor(50000L, 32, 49500L) === 16)
-  }
-
-  test("measured deep cell: 50K keys, 3.15M session rows on 32 cores -> wide") {
-    assert(Graft.statePartitionsFor(50000L, 32, 3150000L) === 32)
-  }
-
-  test("shallow-under-1e5 rows -> narrow even where the key rule widens") {
-    for (keys <- Seq(5000L, 50000L, 500000L))
-      assert(Graft.statePartitionsFor(keys, 32, 99999L) === 16,
-        s"keys=$keys shallow state must hold the narrow anchor")
-  }
-
-  test("over-1e6 rows -> at least cores wide even at key counts that interpolate narrower") {
-    // 1K keys of deep state: the keys-only rule reads 16; volume flips it
-    assert(Graft.statePartitionsFor(1000L, 32) === 16)
-    assert(Graft.statePartitionsFor(1000L, 32, 5000000L) === 32)
-    // non-power-of-two cores round UP, mirroring the cores-floor rule
-    assert(Graft.statePartitionsFor(100000L, 48, 2000000L) === 64)
-  }
-
-  test("the unmeasured mid-band (1e5..1e6 rows) defers to the key rule") {
-    for (keys <- Seq(1500L, 15000L, 150000L))
-      assert(Graft.statePartitionsFor(keys, 32, 500000L) ===
-        Graft.statePartitionsFor(keys, 32))
-  }
-
-  test("volume form never exceeds the key count") {
-    // 40 keys of deep state: width capped by keys (power of two below)
-    val p = Graft.statePartitionsFor(40L, 32, 2000000L)
-    assert(p <= 40 && (p & (p - 1)) === 0, s"got $p")
   }
 }
