@@ -564,7 +564,11 @@ object Dedup {
       val sym = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
       val mins = sym.groupBy("a").agg(min("b").as("mb"))
         .select(col("a").as("u"), least(col("a"), col("mb")).as("m"))
-      sym.join(mins, sym("a") === mins("u"))
+      // a shuffle join by hint, in both stars: both sides derive from the
+      // round's reused RDD, which carries no statistics, so AQE broadcast
+      // whichever side's stage ended first and the plan, with its
+      // generated classes, changed from run to run
+      sym.join(mins.hint("merge"), sym("a") === mins("u"))
         .filter(col("b") > col("a"))
         .select(col("b").as("a"), col("m").as("b"))
         .filter(col("a") =!= col("b"))
@@ -574,7 +578,7 @@ object Dedup {
     // grouping key is simply `a`, and m = min(N) < a ≤ every emitted v.
     def smallStar(edges: DataFrame): DataFrame = {
       val mins = edges.groupBy("a").agg(min("b").as("m"))
-      edges.join(mins, "a")
+      edges.join(mins.hint("merge"), "a")
         .select(col("b").as("a"), col("m").as("b"))
         .union(mins.select(col("a"), col("m").as("b")))
         .filter(col("a") =!= col("b"))
@@ -670,7 +674,9 @@ object Dedup {
     val best = j.groupBy("cluster_id")
       .agg(max(struct(col("qs"), (-col("doc_id")).as("nd"))).as("b"))
       .select(col("cluster_id"), (-col("b.nd")).as("best_doc"))
-    j.join(best, "cluster_id")
+    // a shuffle join by hint: both sides derive from j, which carries no
+    // statistics, so AQE broadcast whichever side finished first
+    j.join(best.hint("merge"), "cluster_id")
       .select(col("doc_id"), col("cluster_id"),
         (col("doc_id") === col("best_doc")).as("kept"))
   }

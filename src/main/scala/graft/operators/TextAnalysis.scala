@@ -990,8 +990,12 @@ object TextAnalysis {
       .select(col("doc_id"), explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt1"))
     val totals = corpus1.agg(sum(col("cnt1")).cast("long").as("n_total"))
+    // the merge hint keeps this join a shuffle join under AQE: neither
+    // side has statistics until its stage ends (the reused RDD carries
+    // none), so AQE broadcast whichever side finished first, and the
+    // plan, with its generated classes, changed from run to run
     val bits2 = tf2
-      .join(corpus2, Seq("w1", "w2"))
+      .join(corpus2.hint("merge"), Seq("w1", "w2"))
       .join(broadcast(corpus1.select(col("w").as("w1"), col("cnt1"))), "w1")
       .groupBy(col("doc_id"))
       .agg(
